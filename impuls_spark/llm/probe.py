@@ -182,12 +182,6 @@ def _ensure_in_pushdown(spark, n_keys: int) -> None:
         spark.conf.set(_IN_THRESHOLD_CONF, str(n_keys + 1))
 
 
-# §2.6 write overlap, re-exported here because every artifact write
-# path (index build/save/append/fold) already imports its layout
-# helpers from this module
-from ..tools.concurrency import parallel_writes  # noqa: F401
-
-
 def key_bloom(writer, *key_cols: str):
     """Enable parquet bloom filters on the probe-key columns of an
     artifact write. Range stats prune row groups whose key SPAN misses

@@ -19,10 +19,13 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..tools.concurrency import parallel_writes
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -1290,6 +1293,30 @@ def semantic_dedup(
     )
 
 
+def _saved_artifacts(spark, path: str) -> "tuple[dict, dict[str, str]]":
+    """(manifest, ``{artifact dir: DDL}``) of a saved index's id-keyed
+    artifacts: ``cells``, plus ``pq_codes`` with PQ. The DDL comes from
+    the manifest when the layout recorded it (save/retrain do since
+    r11); pre-r11 layouts fall back to footer inference, safe because
+    build guarantees non-empty artifact dirs (unlike the maybe-empty
+    dedup sidecars)."""
+    import json
+
+    meta = json.loads(
+        spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
+    )
+    names = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
+    return meta, {
+        name: meta.get("cells_ddl" if name == "cells" else "codes_ddl")
+        or ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in spark.read.parquet(f"{path}/{name}").schema.fields
+        )
+        for name in names
+    }
+
+
+@contextmanager
 def _pinned_for_write(df: DataFrame):
     """Context manager that DISK_ONLY-pins ``df`` around a
     range-clustered write (``repartitionByRange``'s boundary-sampling
@@ -1300,22 +1327,16 @@ def _pinned_for_write(df: DataFrame):
     would then silently evict the CALLER's cache after the write
     (ADVICE r12). An already-cached frame doesn't recompute for the
     sample job anyway, which is all the pin exists for."""
-    from contextlib import contextmanager
-
     from pyspark import StorageLevel
 
-    @contextmanager
-    def _cm():
-        if df.storageLevel != StorageLevel.NONE:
-            yield df  # caller-owned cache: use it, never unpersist it
-            return
-        pinned = df.persist(StorageLevel.DISK_ONLY)
-        try:
-            yield pinned
-        finally:
-            pinned.unpersist()
-
-    return _cm()
+    if df.storageLevel != StorageLevel.NONE:
+        yield df  # caller-owned cache: use it, never unpersist it
+        return
+    pinned = df.persist(StorageLevel.DISK_ONLY)
+    try:
+        yield pinned
+    finally:
+        pinned.unpersist()
 
 
 def _ddl_of(df: DataFrame) -> str:
@@ -1611,11 +1632,9 @@ class AnnIndex:
                 capacity=self.capacity,
             )
         from ..streaming.ann_ingest import check_no_stream_epochs
-        from ..streaming.compact import (
-            _acquire_compact_marker,
-            _HadoopFS,
-            check_not_compacting,
-        )
+        from ..streaming.compact import check_not_compacting, maintenance
+
+        from .probe import key_bloom
 
         spark = new_vectors.sparkSession
         # Root marker FIRST, fences under it (ADVICE r11): holding the
@@ -1626,24 +1645,17 @@ class AnnIndex:
         # closes append's own torn-read window: a loader listing cells
         # after the cells append but pq_codes before the codes append
         # would see a routed vector with no code.
-        lease = _acquire_compact_marker(
-            _HadoopFS(spark, path), path, stale_after_sec, force
-        )
-        try:
+        with maintenance(spark, path, stale_after_sec, force) as m:
             # batch appends and a live vector stream are two unfenced
             # writers with separate id-dedup views — absorb first
-            check_no_stream_epochs(spark, path, "append to")
+            m.guard(check_no_stream_epochs, spark, path, "append to")
             # per-dir markers (a crashed per-dir fold ages these
             # independently of the root)
-            check_not_compacting(spark, f"{path}/cells", "append to")
+            m.guard(check_not_compacting, spark, f"{path}/cells",
+                    "append to")
             if new_codes is not None:
-                check_not_compacting(spark, f"{path}/pq_codes", "append to")
-        except BaseException:
-            lease.release()  # refusal — nothing mutated, clean marker
-            raise
-        from .probe import key_bloom, parallel_writes
-
-        try:
+                m.guard(check_not_compacting, spark, f"{path}/pq_codes",
+                        "append to")
             # appended files keep the artifact's within-file id order
             # and bloom (local sort, no shuffle) so probes prune them.
             # The two appends target disjoint artifact dirs under the
@@ -1663,10 +1675,6 @@ class AnnIndex:
             model = None
             if new_codes is not None:
                 model = (spark.read.parquet(f"{path}/pq_codes"), books)
-        except BaseException:
-            lease.abandon()  # half-append: readers must fail fast
-            raise
-        lease.release()
         return AnnIndex(
             self.vectors.unionByName(new_vectors),
             self.anchors,
@@ -1794,32 +1802,21 @@ class AnnIndex:
             )
 
         import json
-
-        from ..streaming.compact import (
-            _HadoopFS,
-            _acquire_compact_marker,
-        )
+        from contextlib import ExitStack
 
         from ..streaming.ann_ingest import check_no_stream_epochs
+        from ..streaming.compact import maintenance
+
+        from .probe import key_bloom, range_cluster
 
         spark = self.vectors.sparkSession
-        fs = _HadoopFS(spark, path)
         # marker FIRST, fence under it (ADVICE r11): with the root
         # marker held, new ingest micro-batches fail fast, so only a
         # batch already mid-write can race the check. A retrain swaps
         # the anchors; stream-sidecar rows were assigned under the OLD
         # set and would absorb into a corrupted index — absorb first.
-        lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
-        try:
-            check_no_stream_epochs(spark, path, "retrain")
-        except BaseException:
-            lease.release()  # refusal — nothing mutated, clean marker
-            raise
-        from contextlib import ExitStack
-
-        from .probe import key_bloom, parallel_writes, range_cluster
-
-        try:
+        with maintenance(spark, path, stale_after_sec, force) as run:
+            run.guard(check_no_stream_epochs, spark, path, "retrain")
             # pin around the range writes: the boundary-sampling job
             # would otherwise re-run the whole re-assignment /
             # re-encode lineage (no exchange to shuffle-reuse).
@@ -1867,10 +1864,6 @@ class AnnIndex:
             single_row_df(
                 spark, "manifest string", json.dumps(retrain_meta)
             ).write.mode("overwrite").parquet(f"{path}/manifest")
-        except BaseException:
-            lease.abandon()  # marker stays; readers fail fast
-            raise
-        lease.release()
         # fresh-read handle, same discipline as append(path=): frozen
         # listing over exactly the rewritten artifacts
         stored_anchors = spark.read.parquet(f"{path}/anchors")
@@ -1904,8 +1897,6 @@ class AnnIndex:
         duplicate cells/codes rows would change serving results. Still
         maintenance: run without concurrent queries, like any
         VACUUM."""
-        import json
-
         from ..streaming.compact import (
             check_not_compacting,
             compact_flat_dir,
@@ -1915,29 +1906,16 @@ class AnnIndex:
         # crashed mid-way: the recovery is that op's force=True re-run,
         # not a fold over its inconsistent intermediate state
         check_not_compacting(spark, path, "compact")
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
-        stats = {}
-        targets = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
-        for name in targets:
-            full = f"{path}/{name}"
-            # schema from the manifest when the layout recorded it
-            # (save/retrain do since r11); pre-r11 layouts fall back to
-            # footer inference, safe because build guarantees non-empty
-            # artifact dirs (unlike the maybe-empty dedup sidecars)
-            ddl = meta.get(
-                "cells_ddl" if name == "cells" else "codes_ddl"
-            ) or ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(full).schema.fields
-            )
-            stats[name] = compact_flat_dir(
-                spark, full, ddl, [meta["id_col"]], target_shards,
+        meta, ddls = _saved_artifacts(spark, path)
+        id_col = meta["id_col"]
+        return {
+            name: compact_flat_dir(
+                spark, f"{path}/{name}", ddl, [id_col], target_shards,
                 stale_after_sec=stale_after_sec, force=force,
-                cluster_by=[meta["id_col"]],
+                cluster_by=[id_col],
             )
-        return stats
+            for name, ddl in ddls.items()
+        }
 
     @staticmethod
     def remove(spark, path: str, ids, force: bool = False,
@@ -1964,106 +1942,49 @@ class AnnIndex:
         ``ids`` is a list/tuple or a single-column DataFrame; values
         are cast to the artifact's id type.
 
-        ``_lease`` (private) lends an already-held root marker lease
-        in, same contract as ``absorb_stream``: the owner
-        (``takedown_stream_vectors``) spans one marker across its
-        whole absorb → purge chain; a refusal raises with the borrowed
-        lease untouched, a mid-fold failure abandons it."""
-        import json
-
-        from ..streaming.compact import (
-            _acquire_compact_marker,
-            _HadoopFS,
-            compact_flat_dir,
-        )
-
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
-        id_col = meta["id_col"]
-        from .dedup import _removal_ids
-
-        rid = _removal_ids(spark, ids)
-        rid_cp = None
-        if isinstance(ids, DataFrame):
-            # every artifact fold broadcasts this frame; one eager
-            # batch-sized checkpoint stops each broadcast re-evaluating
-            # the caller's arbitrary upstream plan (VERDICT r14
-            # next-round #1); freed after the folds.
-            rid = rid_cp = rid.localCheckpoint(eager=True)
+        ``_lease`` (private) is the ``streaming.compact.maintenance``
+        scope of a caller that already holds the root marker
+        (``takedown_stream_vectors`` spans one marker across its whole
+        absorb → purge chain); this remove borrows it instead of
+        taking its own."""
         from ..streaming.ann_ingest import check_no_stream_epochs
-
-        stats = {}
-        targets = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
-        owns = _lease is None
-        root = _lease if _lease is not None else _acquire_compact_marker(
-            _HadoopFS(spark, path), path, stale_after_sec, force
+        from ..streaming.compact import (
+            _rid_frame,
+            fold_artifacts,
+            maintenance,
         )
-        # fence under the marker (ADVICE r11): a remove that purged
-        # only the flat dirs would leave the removed vectors serving
-        # from the stream sidecars; with the marker held, new ingest
-        # batches fail fast before the check runs
-        try:
-            check_no_stream_epochs(spark, path, "remove from")
-        except BaseException:
-            if owns:
-                root.release()  # refusal — nothing mutated, clean marker
-            raise
-        def _fold_one(name):
-            # one artifact's fold pipeline; cells and pq_codes are
-            # independent DIRS (each fold holds its own per-dir marker
-            # and dot-staging dir) under the one held root marker, so
-            # the pipelines overlap (guide §2.6). Any crash state
-            # converges via remove(force=True) exactly as with the
-            # sequential order — the root marker, not the fold order,
-            # is the recovery contract. rows_before/rows_after ride
-            # the fold job as observed metrics (guide §1/§2.4) — the
-            # two extra full-artifact count() scans per fold that used
-            # to produce them are gone (r15).
-            full = f"{path}/{name}"
-            ddl = meta.get(
-                "cells_ddl" if name == "cells" else "codes_ddl"
-            ) or ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in spark.read.parquet(full).schema.fields
-            )
-            fields = spark.createDataFrame([], ddl).schema.fields
-            id_type = next(
-                f.dataType.simpleString() for f in fields
-                if f.name == id_col
-            )
-            keyed = F.broadcast(
-                rid.select(F.col("__rid").cast(id_type).alias("__rid"))
-            )
 
-            def drop_removed(df: DataFrame, _k=keyed) -> DataFrame:
-                return df.join(
-                    _k, df[id_col] == _k["__rid"], "left_anti"
+        meta, ddls = _saved_artifacts(spark, path)
+        id_col = meta["id_col"]
+        with maintenance(spark, path, stale_after_sec, force,
+                         lease=_lease) as m:
+            # fence under the marker (ADVICE r11): a remove that purged
+            # only the flat dirs would leave the removed vectors serving
+            # from the stream sidecars; with the marker held, new ingest
+            # batches fail fast before the check runs
+            m.guard(check_no_stream_epochs, spark, path, "remove from")
+            rid = _rid_frame(spark, ids)
+            if isinstance(ids, DataFrame):
+                # every artifact fold broadcasts this frame; one eager
+                # batch-sized checkpoint stops each broadcast
+                # re-evaluating the caller's arbitrary upstream plan
+                # (VERDICT r14 next-round #1)
+                rid = m.checkpoint(rid)
+            specs = {}
+            for name, ddl in ddls.items():
+                id_type = spark.createDataFrame([], ddl).schema[
+                    id_col].dataType.simpleString()
+                keyed = F.broadcast(
+                    rid.select(F.col("__rid").cast(id_type).alias("__rid"))
                 )
 
-            stats[name] = compact_flat_dir(
-                spark, full, ddl, [id_col], force=force,
-                stale_after_sec=stale_after_sec,
-                transform=drop_removed, cluster_by=[id_col],
-            )
+                def drop_removed(df: DataFrame, _k=keyed) -> DataFrame:
+                    return df.join(
+                        _k, df[id_col] == _k["__rid"], "left_anti"
+                    )
 
-        from .probe import parallel_writes
-
-        from ..tools.checkpoints import free_local_checkpoint
-
-        try:
-            parallel_writes(*[
-                lambda _n=name: _fold_one(_n) for name in targets
-            ])
-        except BaseException:
-            root.abandon()  # marker stays: readers must not resume
-            raise
-        finally:
-            # folds done (or failed) — free the removal-id blocks
-            free_local_checkpoint(rid_cp)
-        if owns:
-            root.release()
-        return stats
+                specs[name] = (ddl, [id_col], drop_removed, [id_col])
+            return fold_artifacts(m, specs)
 
     # -- at-rest form: a 100 TB index is built once and SERVED many
     # -- times across sessions; rebuilding Lloyd iterations per process
@@ -2090,7 +2011,7 @@ class AnnIndex:
         # running twice per save (range boundary sampling)
         from contextlib import ExitStack
 
-        from .probe import key_bloom, parallel_writes, range_cluster
+        from .probe import key_bloom, range_cluster
 
         # the artifacts are independent frames — overlap their writes
         # (guide §2.6: the save pays the slowest artifact, not the

@@ -203,16 +203,19 @@ def save_gtfs(
                         if fname == biggest:
                             header = (headers.get(fname) or
                                       headers[fname.removesuffix(".txt")])
+                            head = (",".join(_csv_quote(h)
+                                             for h in header)
+                                    + "\n").encode()
+                            # the entry is the header line PLUS the
+                            # staged parts: an entry crossing the limit
+                            # by less than the header must still get a
+                            # zip64 header, or zipfile raises at close
                             with zf.open(
                                 fname, "w",
-                                force_zip64=staged_bytes[fname]
+                                force_zip64=staged_bytes[fname] + len(head)
                                 > zipfile.ZIP64_LIMIT,
                             ) as dest:
-                                dest.write(
-                                    (",".join(_csv_quote(h)
-                                              for h in header)
-                                     + "\n").encode()
-                                )
+                                dest.write(head)
                                 for p in parts_per_file[fname]:
                                     with open(p, "rb") as src:
                                         shutil.copyfileobj(src, dest)

@@ -40,6 +40,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tools.concurrency import parallel_writes
 from .compact import EPOCH_COL, _epoch_dirs, _HadoopFS, check_not_compacting
 from .ingest import _read_or_empty
 
@@ -291,7 +292,7 @@ def ingest_vectors(
         # epoch files id-sorted + bloomed (constant partition value, so
         # the local sort survives the writer's partition re-sort): the
         # NEXT batch's sidecar probe prunes them too
-        from ..llm.probe import key_bloom, parallel_writes
+        from ..llm.probe import key_bloom
 
         jobs = [lambda: key_bloom(
             new_cells.sortWithinPartitions(id_col)
@@ -353,86 +354,50 @@ def absorb_stream(
     ``force=True`` re-run converges. Returns per-artifact absorbed row
     counts plus the epoch ids folded.
 
-    ``_lease`` (private) lends an ALREADY-HELD root marker lease in:
-    the owner (``takedown_stream_vectors``) keeps one marker spanning
-    its whole absorb → purge chain instead of dropping it between the
-    steps (VERDICT r12 what's-wrong #2). With a borrowed lease this
-    function never releases it — a refusal raises through with the
-    lease untouched (still heartbeating; the owner may release), a
-    mid-fold failure abandons it (heartbeat stops, marker stays — the
-    owner checks ``lease.abandoned``)."""
-    from .compact import _acquire_compact_marker, compact_flat_dir
+    ``_lease`` (private) is the :func:`.compact.maintenance` scope of
+    a caller that already holds the root marker: the owner
+    (``takedown_stream_vectors``) keeps one marker spanning its whole
+    absorb → purge chain instead of dropping it between the steps
+    (VERDICT r12 what's-wrong #2), and this absorb borrows it."""
+    from ..llm.similarity import _saved_artifacts
+    from .compact import fold_artifacts, maintenance
 
-    meta = _index_meta(spark, index_path)
+    meta, ddls = _saved_artifacts(spark, index_path)
     id_col = meta["id_col"]
-    targets = [("cells", meta["cells_ddl"])]
-    if meta["with_pq"]:
-        targets.append(("pq_codes", meta["codes_ddl"]))
     fs = _HadoopFS(spark, index_path)
-    owns = _lease is None
-    lease = _lease if _lease is not None else _acquire_compact_marker(
-        fs, index_path, stale_after_sec, force)
-    # crashed-epoch guard runs UNDER the marker (ADVICE r11): with it
-    # held, new ingest batches fail fast, so only one already mid-write
-    # can still land an epoch after this check
-    try:
-        check_stream_parity(spark, index_path)
-    except BaseException:
-        if owns:
-            lease.release()  # refusal — nothing mutated, clean marker
-        raise
-    stats: dict = {"epochs": stream_epochs(spark, index_path)}
-
-    def _absorb_one(name: str, ddl: str) -> None:
-        # one artifact's freeze -> fold -> epoch-dir delete pipeline;
-        # cells and pq_codes sidecars are independent DIRS (each fold
-        # holds its own per-dir marker and dot-staging dir) under the
-        # one held root marker, so the pipelines overlap (guide §2.6).
-        # Crash states converge via force=True exactly as with the
-        # sequential order — the root marker is the recovery contract.
-        sdir = _stream_dir(index_path, name)
-        epochs = _epoch_dirs(sdir, fs) if fs.exists(sdir) else {}
-        if not epochs:
+    with maintenance(spark, index_path, stale_after_sec, force,
+                     lease=_lease) as m:
+        # crashed-epoch guard runs UNDER the marker (ADVICE r11): with
+        # it held, new ingest batches fail fast, so only one already
+        # mid-write can still land an epoch after this check
+        m.guard(check_stream_parity, spark, index_path)
+        stats: dict = {"epochs": stream_epochs(spark, index_path)}
+        specs, absorbed_dirs = {}, []
+        for name, ddl in ddls.items():
+            sdir = _stream_dir(index_path, name)
+            epochs = _epoch_dirs(sdir, fs) if fs.exists(sdir) else {}
             stats[name] = 0
-            return
-        stream_rows = (
-            spark.read.schema(f"{ddl}, {EPOCH_COL} int")
-            .parquet(sdir).drop(EPOCH_COL)
+            if not epochs:
+                continue
             # freeze: the fold's staged write must not re-list the
             # stream dir after this pass starts deleting from it
-            .localCheckpoint(eager=True)
-        )
-        stats[name] = stream_rows.count()
-        compact_flat_dir(
-            spark, f"{index_path}/{name}", ddl, [id_col],
-            stale_after_sec=stale_after_sec, force=force,
-            transform=lambda flat, s=stream_rows: flat.unionByName(s),
-            cluster_by=[id_col],
-        )
-        # the fold consumed the frozen stream rows — free the blocks
-        # deterministically (guide §5)
-        from ..tools.checkpoints import free_local_checkpoint
-
-        free_local_checkpoint(stream_rows)
-        for d in epochs.values():
+            rows = m.checkpoint(
+                spark.read.schema(f"{ddl}, {EPOCH_COL} int")
+                .parquet(sdir).drop(EPOCH_COL)
+            )
+            stats[name] = rows.count()
+            specs[name] = (ddl, [id_col],
+                           lambda flat, _s=rows: flat.unionByName(_s),
+                           [id_col])
+            absorbed_dirs += [*epochs.values(), sdir]
+        # cells and pq_codes fold independently under the one held
+        # root marker; the stream dirs go only after both folds land
+        fold_artifacts(m, specs)
+        for d in absorbed_dirs:
             fs.delete(d)
-        fs.delete(sdir)
-
-    from ..llm.probe import parallel_writes
-
-    try:
-        parallel_writes(*[
-            lambda _n=name, _d=ddl: _absorb_one(_n, _d)
-            for name, ddl in targets
-        ])
         sroot = f"{index_path}/{ANN_STREAM_SUBDIR}"
         if fs.exists(sroot) and not fs.list_names(sroot):
             fs.delete(sroot)  # fold up the emptied stream parent
-    except BaseException:
-        lease.abandon()  # readers and ingest batches must fail fast
-        raise
-    if owns:
-        lease.release()
     return stats
 
 
@@ -484,7 +449,7 @@ def takedown_stream_vectors(
     legitimately re-ingestable — the takedown semantics).
 
     Returns ``{absorbed, removed, epoch_watermark}``."""
-    from .compact import _acquire_compact_marker, last_committed_epoch
+    from .compact import last_committed_epoch, maintenance
 
     watermark = None
     if checkpoint is not None:
@@ -510,18 +475,14 @@ def takedown_stream_vectors(
 
     from ..llm.similarity import AnnIndex
 
-    fs = _HadoopFS(spark, index_path)
-    lease = _acquire_compact_marker(fs, index_path, stale_after_sec, force)
-    mutated = False
-    try:
+    with maintenance(spark, index_path, stale_after_sec, force) as m:
         absorbed = absorb_stream(
             spark, index_path, force=force,
-            stale_after_sec=stale_after_sec, _lease=lease,
+            stale_after_sec=stale_after_sec, _lease=m,
         )
-        mutated = True  # absorb returned: sidecars folded and deleted
         removed = AnnIndex.remove(
             spark, index_path, ids, force=force,
-            stale_after_sec=stale_after_sec, _lease=lease,
+            stale_after_sec=stale_after_sec, _lease=m,
         )
         # -- closing verification, still under the marker (ADVICE r12):
         # a batch already mid-write before the lease was taken can land
@@ -547,15 +508,6 @@ def takedown_stream_vectors(
                     "vectors — stop the query and re-run with "
                     "force=True"
                 )
-    except BaseException:
-        if lease.abandoned:
-            raise  # a sub-step already abandoned it mid-mutation
-        if mutated:
-            lease.abandon()  # chain interrupted: readers must fail fast
-        else:
-            lease.release()  # pure refusal — nothing mutated
-        raise
-    lease.release()
     return {
         "absorbed": absorbed,
         "removed": removed,

@@ -45,10 +45,13 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..tools.checkpoints import free_local_checkpoint
+from ..tools.concurrency import parallel_writes
 from .sinks import EPOCH_COL
 
 _EPOCH_DIR_RE = re.compile(rf"^{re.escape(EPOCH_COL)}=(\d+)$")
@@ -203,11 +206,12 @@ _LIVE_HEARTBEATS = 3.0
 
 class _MarkerLease:
     """A held ``_COMPACTING`` marker plus the background thread that
-    heartbeats its mtime every ``heartbeat_sec``. ``release()`` is for
-    CLEAN completion only (stops the heartbeat, deletes the marker);
-    on failure call ``abandon()`` — the heartbeat stops so the marker
-    AGES, readers keep failing fast, and a later run (or ``force``)
-    can take over once it goes stale."""
+    heartbeats its mtime every ``heartbeat_sec``. Only
+    :func:`maintenance` holds one: ``release()`` on CLEAN completion
+    (stops the heartbeat, deletes the marker), ``abandon()`` on
+    failure — the heartbeat stops so the marker AGES, readers keep
+    failing fast, and a later run (or ``force``) can take over once it
+    goes stale. An abandoned lease stays abandoned."""
 
     def __init__(self, fs: _HadoopFS, marker: str,
                  heartbeat_sec: float) -> None:
@@ -231,15 +235,6 @@ class _MarkerLease:
             except Exception:
                 return  # marker gone or fs unreachable — stop beating
 
-    @property
-    def abandoned(self) -> bool:
-        """True once :meth:`abandon` (or :meth:`release`) stopped the
-        heartbeat — how an OWNER that lent this lease to a sub-step
-        (``_lease=`` threading, e.g. ``takedown_stream_vectors``) tells
-        a mid-mutation failure (the sub-step abandoned: marker must
-        stay) from a pure refusal (untouched: owner may release)."""
-        return self._stop.is_set()
-
     def abandon(self) -> None:
         """Stop heartbeating, LEAVE the marker (failure path)."""
         self._stop.set()
@@ -247,7 +242,10 @@ class _MarkerLease:
             self._thread.join(timeout=5.0)
 
     def release(self) -> None:
-        """Stop heartbeating and delete the marker (success path)."""
+        """Stop heartbeating and delete the marker (success path);
+        a no-op once abandoned."""
+        if self._stop.is_set():
+            return
         self.abandon()
         self._fs.delete(self.marker)
 
@@ -260,8 +258,9 @@ def _acquire_compact_marker(
     heartbeat_sec: float = HEARTBEAT_SEC,
 ) -> _MarkerLease:
     """Take the ``_COMPACTING`` marker for ``path`` and start its
-    heartbeat. An existing marker is judged by the age of its LAST
-    HEARTBEAT (a live holder touches it every ``heartbeat_sec``):
+    heartbeat, for :func:`maintenance` (which owns the lease). An
+    existing marker is judged by the age of its LAST HEARTBEAT (a live
+    holder touches it every ``heartbeat_sec``):
 
     - age <= ``_LIVE_HEARTBEATS * heartbeat_sec``: the holder is alive
       right now — refuse even under ``force`` (sweeping it would race
@@ -311,6 +310,97 @@ def _acquire_compact_marker(
             "atomic create"
         )
     return _MarkerLease(fs, marker, heartbeat_sec)
+
+
+class _Scope:
+    """One :func:`maintenance` scope: the marker lease it holds or
+    borrows and the checkpoints it made. The scope that OWNS the
+    marker also records, for every scope borrowing it, whether the run
+    has mutated anything yet and which exception was a refusal."""
+
+    def __init__(self, spark, path, stale_after_sec, force, lease, owner):
+        self.spark = spark
+        self.path = path
+        self.stale_after_sec = stale_after_sec
+        self.force = force
+        self._lease = lease
+        self._owner = owner if owner is not None else self
+        self._frames: list = []
+        self._mutated = False
+        self._refusal = None
+
+    def guard(self, check, *args, **kwargs):
+        """Run a refusal check and return its result. Call guards
+        before the run mutates anything: a guard that raises then ends
+        the scope as a REFUSAL — an owned marker is released clean, a
+        borrowed one is left to its owner, who releases it in turn
+        unless an earlier borrower already mutated."""
+        try:
+            return check(*args, **kwargs)
+        except BaseException as exc:
+            if not self._owner._mutated:
+                self._owner._refusal = exc
+            raise
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint(eager=True)``, freed when the scope
+        exits — on success, refusal and failure alike (guide §5). Only
+        for frames whose every consumer finishes inside the scope."""
+        cp = df.localCheckpoint(eager=True)
+        self._frames.append(cp)
+        return cp
+
+
+@contextmanager
+def maintenance(
+    spark: SparkSession,
+    path: str,
+    stale_after_sec: float,
+    force: bool,
+    lease: "_Scope | None" = None,
+):
+    """The one way maintenance code holds a ``_COMPACTING`` marker or
+    a batch checkpoint: ``with maintenance(spark, root, stale_after_sec,
+    force) as m:`` takes the marker at ``path`` (see
+    :func:`_acquire_compact_marker` for the liveness and ``force``
+    rules) and keeps it heartbeated for the block. On exit:
+
+    - success releases the marker;
+    - a :meth:`_Scope.guard` refusal (nothing mutated) releases it;
+    - any other failure abandons it — the heartbeat stops and the
+      marker stays, so readers fail fast until a ``force=True`` re-run
+      converges;
+    - every ``m.checkpoint(df)`` is freed.
+
+    ``lease=`` borrows the marker of an enclosing scope instead of
+    taking one (an operator running as one step of a longer chain
+    under the chain's marker): the borrower never releases it — its
+    success or failure marks the owner's run as mutated, and a failure
+    also abandons the marker, which then stays abandoned."""
+    if lease is None:
+        held = _acquire_compact_marker(
+            _HadoopFS(spark, path), path, stale_after_sec, force
+        )
+        m = _Scope(spark, path, stale_after_sec, force, held, None)
+    else:
+        m = _Scope(spark, path, stale_after_sec, force,
+                   lease._lease, lease._owner)
+    owner = m._owner
+    try:
+        yield m
+    except BaseException as exc:
+        if exc is not owner._refusal:
+            owner._mutated = True
+            m._lease.abandon()
+        elif m is owner:
+            m._lease.release()
+        raise
+    else:
+        owner._mutated = True
+        if m is owner:
+            m._lease.release()
+    finally:
+        free_local_checkpoint(*m._frames)
 
 
 def _epoch_dirs(path: str, fs: "_HadoopFS | None" = None) -> "dict[int, str]":
@@ -475,23 +565,32 @@ def _rid_frame(spark: SparkSession, ids) -> DataFrame:
     )
 
 
-def _takedown_scan(
-    full: DataFrame,
-    rid: DataFrame,
+def _takedown_partitions(
+    m: _Scope,
+    ids,
     part_cols: "Sequence[str]",
     key_col: str,
-):
-    """The fused locate + bookkeeping pass every partition-pruned
-    takedown starts with: ONE column-pruned scan of ``full`` computes,
-    per hive partition combo, the total and removed-row counts,
-    keeping only combos that actually hold removed rows. Returns
-    ``(per_part, stats)`` — ``per_part`` rows are ``(combo_values,
-    pkey, n, n_removed)`` and ``stats`` is the operator's return
-    skeleton (counts over the AFFECTED partitions only,
-    ``partitions_deleted`` still 0)."""
+    sort_by: "Sequence[str]",
+    target_shards: int = 1,
+) -> "dict[str, int]":
+    """Partition-pruned takedown of ``ids`` from the hive corpus at
+    ``m.path`` — the kernel of ``remove_from_corpus`` and
+    ``takedown_stream_corpus``. ONE column-pruned scan computes, per
+    hive partition combo, the total and removed-row counts (locate and
+    before/after bookkeeping fused: with the rewrite's own read, the
+    2-scan minimum); ONLY the combos holding removed rows are
+    rewritten, by dynamic partition overwrite with the writer's own
+    shard/sort law, and combos left empty have their directories
+    deleted. Untouched partitions are never opened. Returns
+    ``{partitions_affected, partitions_deleted, rows_before,
+    rows_after}`` (row counts over the affected partitions only)."""
+    from ..sources.corpus import write_corpus
+
+    rid = F.broadcast(m.checkpoint(_rid_frame(m.spark, ids)))
+    full = m.spark.read.parquet(m.path)
+    hit = full[key_col].cast("string") == rid["__rid"]
     marked = (
-        full.join(rid, full[key_col].cast("string") == rid["__rid"],
-                  "left")
+        full.join(rid, hit, "left")
         .groupBy(*part_cols)
         .agg(
             F.count("*").alias("__n"),
@@ -511,20 +610,29 @@ def _takedown_scan(
         "rows_before": sum(n for _, _, n, _ in per_part),
         "rows_after": sum(n - r for _, _, n, r in per_part),
     }
-    return per_part, stats
-
-
-def _emptied_combos(
-    per_part, part_cols: "Sequence[str]"
-) -> "set[tuple]":
-    """The partition combos a takedown leaves with zero rows — as raw
-    value-STRING tuples matching hive directory names (split from the
-    SPARK-side partition key, never ``str(v)``), ready for
-    :func:`_delete_leaf_partitions`."""
-    return {
-        split_partition_key(pk, part_cols)
-        for _, pk, n, r in per_part if n == r
-    }
+    if per_part:
+        pred = partition_membership_pred(
+            part_cols,
+            [combo for combo, _, _, _ in per_part],
+            [pk for _, pk, _, _ in per_part],
+        )
+        write_corpus(
+            full.filter(pred).join(rid, hit, "left_anti"), m.path,
+            partition_by=tuple(part_cols), sort_by=tuple(sort_by),
+            target_shards=target_shards,
+            mode="overwrite", dynamic_overwrite=True,
+        )
+        # emptied combos as raw value-STRING tuples matching hive
+        # directory names: split from the SPARK-side partition key,
+        # never str(v)
+        emptied = {
+            split_partition_key(pk, part_cols)
+            for _, pk, n, r in per_part if n == r
+        }
+        stats["partitions_deleted"] = _delete_leaf_partitions(
+            _HadoopFS(m.spark, m.path), m.path, part_cols, emptied
+        )
+    return stats
 
 
 def _delete_leaf_partitions(
@@ -680,8 +788,6 @@ def compact_corpus(
     # corpus tree and the two index sidecar trees are independent
     # directory trees — overlap their fold pipelines (optimization
     # guide §2.6) so the maintenance pass pays the slowest tree
-    from ..tools.concurrency import parallel_writes
-
     stats: "dict[str, dict[str, int]]" = {}
 
     def _fold_tree(label, p, keys, part_by, sort):
@@ -752,14 +858,12 @@ def compact_flat_dir(
     from pyspark.sql import Observation
 
     fs = _HadoopFS(spark, path)
-    lease = _acquire_compact_marker(fs, path, stale_after_sec, force)
-    try:
+    with maintenance(spark, path, stale_after_sec, force):
         files_before = fs.count_files(path)
         # the few-files fast path must not skip a row-level rewrite:
         # with a transform the fold IS the operation (e.g.
         # DedupIndex.remove's anti-join), not just file maintenance
         if transform is None and files_before <= max(target_shards, 1):
-            lease.release()
             return {"files_before": files_before,
                     "files_after": files_before, "skipped": 1}
         # the staging dir hides behind a leading dot: parquet partition
@@ -839,11 +943,32 @@ def compact_flat_dir(
         for name in old:
             fs.delete(f"{path}/{name}")
         fs.delete(staging)
-    except BaseException:
-        lease.abandon()  # heartbeat stops; the marker ages toward sweep
-        raise
-    lease.release()
     return {"files_before": files_before, "files_after": moved,
             "skipped": 0,
             "rows_before": int(obs_in.get["rows"]),
             "rows_after": int(obs_out.get["rows"])}
+
+
+def fold_artifacts(m: _Scope, specs: dict) -> "dict[str, dict[str, int]]":
+    """Rewrite the independent artifact dirs ``{m.path}/{name}`` of one
+    maintained root, each through :func:`compact_flat_dir` (its own
+    per-dir marker and staged fold) under the scope's root marker.
+    ``specs`` maps ``name -> (ddl, keys, transform, cluster_by)``.
+    The folds overlap (guide §2.6), so the run pays the slowest fold
+    instead of the sum; any crash state converges through a
+    ``force=True`` re-run — the root marker, not the fold order, is
+    the recovery contract. Returns the per-artifact fold stats."""
+    stats: dict = {}
+
+    def fold(name, ddl, keys, transform, cluster_by):
+        stats[name] = compact_flat_dir(
+            m.spark, f"{m.path}/{name}", ddl, keys, force=m.force,
+            stale_after_sec=m.stale_after_sec, transform=transform,
+            cluster_by=cluster_by,
+        )
+
+    parallel_writes(*[
+        lambda _n=name, _s=spec: fold(_n, *_s)
+        for name, spec in specs.items()
+    ])
+    return stats

@@ -39,6 +39,7 @@ from ..llm.dedup import (
     minhash_signatures,
 )
 from ..sources.corpus import write_corpus
+from ..tools.concurrency import parallel_writes
 from .compact import _HadoopFS
 from .sinks import EPOCH_COL
 
@@ -242,7 +243,7 @@ def ingest_with_dedup(
         # All three writes derive from the checkpointed `novel` and
         # target disjoint dirs — overlap them (guide §2.6) so the
         # epoch pays the slowest write, not the sum
-        from ..llm.probe import key_bloom, parallel_writes
+        from ..llm.probe import key_bloom
 
         def _epoch_write(df, p, key):
             return lambda: key_bloom(
@@ -342,16 +343,14 @@ def takedown_stream_corpus(
     consumers (``classify``/``load``) fail fast mid-run or after a
     crash; a ``force=True`` re-run converges (the anti-join filter and
     the wholesale index rebuild are both idempotent)."""
+    from contextlib import ExitStack
+
     from ..llm.dedup import DedupIndex
     from .compact import (
-        _acquire_compact_marker,
-        _delete_leaf_partitions,
-        _emptied_combos,
         _epoch_dirs,
-        _rid_frame,
-        _takedown_scan,
+        _takedown_partitions,
         last_committed_epoch,
-        partition_membership_pred,
+        maintenance,
     )
 
     # -- 1. stopped-query verification --------------------------------
@@ -394,18 +393,13 @@ def takedown_stream_corpus(
             for k, v in passed.items()
         }
     key = meta["id_col"]
-    rid_cp = _rid_frame(spark, ids).localCheckpoint(eager=True)
-    rid = F.broadcast(rid_cp)
-
-    fs = _HadoopFS(spark, corpus_path)
-    corpus_lease = _acquire_compact_marker(
-        fs, corpus_path, stale_after_sec, force
-    )
-    index_lease = None
-    try:
-        index_lease = _acquire_compact_marker(
-            fs, f"{corpus_path}/_index", stale_after_sec, force
-        )
+    with maintenance(spark, corpus_path, stale_after_sec, force) as m, \
+            ExitStack() as index_scope:
+        # the _index root holds its own marker for the whole run; it is
+        # taken second, so its refusal is this run's and leaves the
+        # corpus marker clean
+        m.guard(index_scope.enter_context, maintenance(
+            spark, f"{corpus_path}/_index", stale_after_sec, force))
         # landed-epoch snapshot for the CLOSING re-check (1b), taken
         # UNDER both markers immediately before the scan lists files: a
         # batch already mid-write when the markers were taken can land
@@ -418,30 +412,9 @@ def takedown_stream_corpus(
         # positives.
         landed_before = set(_epoch_dirs(corpus_path))
         # -- 2. partition-pruned corpus filter -------------------------
-        # one column-pruned pass fuses locate + before/after counts +
-        # survivor/emptied sets (the 2-scan minimum with the rewrite)
-        part_cols = [EPOCH_COL, *partition_by]
-        full = spark.read.parquet(corpus_path)
-        per_part, stats = _takedown_scan(full, rid, part_cols, key)
-        if per_part:
-            pred = partition_membership_pred(
-                part_cols,
-                [combo for combo, _, _, _ in per_part],
-                [pk for _, pk, _, _ in per_part],
-            )
-            keep = full.filter(pred).join(
-                rid, full[key].cast("string") == rid["__rid"],
-                "left_anti",
-            )
-            write_corpus(
-                keep, corpus_path,
-                partition_by=tuple(part_cols), sort_by=(key,),
-                mode="overwrite", dynamic_overwrite=True,
-            )
-            stats["partitions_deleted"] = _delete_leaf_partitions(
-                fs, corpus_path, part_cols,
-                _emptied_combos(per_part, part_cols),
-            )
+        stats = _takedown_partitions(
+            m, ids, [EPOCH_COL, *partition_by], key, (key,)
+        )
         # -- 3. flat tracked index rebuild over the retained corpus ----
         # (raw read, not read_corpus: this run HOLDS the corpus marker
         # read_corpus fails fast on; listing is post-rewrite by order)
@@ -477,18 +450,6 @@ def takedown_stream_corpus(
                     "cover them — stop the query and re-run with "
                     "force=True"
                 )
-    except BaseException:
-        if index_lease is not None:
-            index_lease.abandon()
-        corpus_lease.abandon()  # markers stay: readers must fail fast
-        raise
-    index_lease.release()
-    corpus_lease.release()
-    # every consumer (scan, rewrite, rebuild) has fully evaluated —
-    # free the takedown-ids checkpoint deterministically (guide §5)
-    from ..tools.checkpoints import free_local_checkpoint
-
-    free_local_checkpoint(rid_cp)
     return {
         "corpus": stats,
         "index": {"rebuilt": True, "track_ids": True},
@@ -529,7 +490,7 @@ def restore_stream_index_layout(
     entry point. Returns ``{hashes, bands}`` restored row counts."""
     import json
 
-    from .compact import _acquire_compact_marker, _HadoopFS
+    from .compact import maintenance
 
     index_path = f"{corpus_path}/_index"
     manifest = _read_manifest(spark, f"{index_path}/manifest")
@@ -543,38 +504,29 @@ def restore_stream_index_layout(
 
     tracked = manifest.get("track_ids", False)
     suffix = ID_COL_SUFFIX if tracked else ""
-    fs = _HadoopFS(spark, index_path)
-    lease = _acquire_compact_marker(fs, index_path, stale_after_sec, force)
     counts = {}
-    def _restore_one(name, schema, cols):
-        # one artifact's freeze -> count -> rewrite pipeline; hashes
-        # and bands are independent DIRS under the one held root
-        # marker, so the pipelines overlap (guide §2.6); the manifest
-        # rewrite (the completeness marker) still lands strictly last
-        flat = (
-            spark.read.schema(schema).parquet(f"{index_path}/{name}")
-            .select(*cols).distinct()
-            .withColumn(EPOCH_COL, F.lit(-1))
-        )
-        # localCheckpoint: the overwrite truncates the very files
-        # this plan reads (the recacheByPath/read-then-overwrite
-        # hazard) — materialize before writing
-        flat = flat.localCheckpoint(eager=True)
-        counts[name] = flat.count()
-        (
-            flat.write.mode("overwrite")
-            .partitionBy(EPOCH_COL)
-            .parquet(f"{index_path}/{name}")
-        )
-        # the rewrite consumed the frozen frame — free the blocks
-        # deterministically (guide §5)
-        from ..tools.checkpoints import free_local_checkpoint
+    with maintenance(spark, index_path, stale_after_sec, force) as m:
+        def _restore_one(name, schema, cols):
+            # one artifact's freeze -> count -> rewrite pipeline;
+            # hashes and bands are independent DIRS under the one held
+            # root marker, so the pipelines overlap (guide §2.6); the
+            # manifest rewrite (the completeness marker) still lands
+            # strictly last. The checkpoint is load-bearing: the
+            # overwrite truncates the very files this plan reads (the
+            # recacheByPath/read-then-overwrite hazard) — materialize
+            # before writing
+            flat = m.checkpoint(
+                spark.read.schema(schema).parquet(f"{index_path}/{name}")
+                .select(*cols).distinct()
+                .withColumn(EPOCH_COL, F.lit(-1))
+            )
+            counts[name] = flat.count()
+            (
+                flat.write.mode("overwrite")
+                .partitionBy(EPOCH_COL)
+                .parquet(f"{index_path}/{name}")
+            )
 
-        free_local_checkpoint(flat)
-
-    from ..llm.probe import parallel_writes
-
-    try:
         parallel_writes(
             lambda: _restore_one("hashes", HASH_SCHEMA + suffix, ["__h"]),
             lambda: _restore_one("bands", BAND_SCHEMA + suffix,
@@ -590,8 +542,4 @@ def restore_stream_index_layout(
         single_row_df(
             spark, "manifest string", json.dumps(stream_meta)
         ).write.mode("overwrite").parquet(f"{index_path}/manifest")
-    except BaseException:
-        lease.abandon()  # readers and restarts must fail fast
-        raise
-    lease.release()
     return counts

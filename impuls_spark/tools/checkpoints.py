@@ -14,6 +14,9 @@ ONLY call this when every frame derived from the checkpoint has been
 fully evaluated (or checkpointed itself): a locally-checkpointed RDD
 has its lineage truncated, so a use after free raises
 ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
+Maintenance code never calls it directly: a takedown or fold takes its
+batch checkpoints through ``streaming.compact.maintenance``'s
+``m.checkpoint(df)``, which frees them on every exit path.
 """
 
 from __future__ import annotations

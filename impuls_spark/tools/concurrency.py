@@ -26,8 +26,9 @@ def parallel_writes(*thunks) -> None:
     with sequential writes); the first failure re-raises."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(thunks) == 1:
-        thunks[0]()
+    if len(thunks) <= 1:
+        for thunk in thunks:
+            thunk()
         return
     # 2-3 jobs in flight fill the tail without fighting for executors
     # (guide §2.6); tiny manifest-sized writes finish inside the heavy

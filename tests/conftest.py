@@ -49,7 +49,9 @@ def feed(spark, gtfs_dir):
 # run deselects them (`-m "not slow"` via addopts) so a plain
 # `pytest tests/ -x -q` finishes inside a CI/verify time budget; every
 # operator keeps at least one fast test in the default lane. Full
-# suite: `pytest tests/ -q -m ""`; only the slow lane: `-m slow`.
+# suite: `pytest tests/ -q -m ""`; only the slow lane: `-m slow`. A
+# slow test named by node id (`pytest tests/test_x.py::test_name`)
+# runs without `-m ""`.
 _SLOW_TESTS = {
     "test_merge_geo_skew_at_generator_scale",
     "test_warsaw_like_end_to_end",
@@ -88,7 +90,31 @@ _SLOW_TESTS = {
 }
 
 
+def _named_on_command_line(config):
+    """(file path, test part) of each node id given on the command line,
+    e.g. ``tests/test_x.py::test_multi_file`` — such a test was asked
+    for by name, so the default ``not slow`` filter must not drop it."""
+    base = config.invocation_params.dir
+    named = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            named.append(((base / path).resolve(), rest))
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    named = _named_on_command_line(config)
     for item in items:
-        if item.name.split("[", 1)[0] in _SLOW_TESTS:
-            item.add_marker(pytest.mark.slow)
+        if item.name.split("[", 1)[0] not in _SLOW_TESTS:
+            continue
+        test_part = item.nodeid.partition("::")[2]
+        if any(
+            item.path == path and (
+                test_part == rest or test_part.startswith((rest + "[",
+                                                           rest + "::"))
+            )
+            for path, rest in named
+        ):
+            continue
+        item.add_marker(pytest.mark.slow)

@@ -112,3 +112,99 @@ def test_remove_stats_ride_the_fold_job(spark, tmp_path):
     assert stats["bands"]["rows_after"] == spark.read.parquet(
         f"{path}/bands").count()
     assert stats["hashes"]["rows_before"] - stats["hashes"]["rows_after"] == 2
+
+
+def _ids(spark):
+    return spark.range(3, 6).select(F.col("id").alias("doc_id"))
+
+
+def _dedup_remove(spark, root):
+    from impuls_spark.llm.dedup import DedupIndex
+
+    DedupIndex.build(_docs(spark, 0, 20), root, track_ids=True)
+    idx = DedupIndex.load(spark, root)
+    return lambda: idx.remove(_ids(spark))
+
+
+def _ann_remove(spark, root):
+    from impuls_spark.llm.similarity import AnnIndex
+
+    from .test_ann_streaming import DIM, _emb
+
+    AnnIndex.build(_emb(spark, 0, 20), _emb(spark, 0, 4), dim=DIM, m=4,
+                   pq_k=4).save(root)
+    return lambda: AnnIndex.remove(
+        spark, root, _ids(spark).select(F.col("doc_id").alias("vec_id"))
+    )
+
+
+def _corpus_remove(spark, root):
+    from impuls_spark.sources.corpus import remove_from_corpus, write_corpus
+
+    write_corpus(_docs(spark, 0, 20).withColumn("lang", F.lit("en")), root,
+                 partition_by=("lang",))
+    return lambda: remove_from_corpus(spark, root, _ids(spark))
+
+
+def _shards_remove(spark, root):
+    from impuls_spark.sources.corpus import (
+        remove_from_shards,
+        write_training_shards,
+    )
+
+    write_training_shards(_docs(spark, 0, 20), root, n_shards=16)
+    return lambda: remove_from_shards(spark, root, _ids(spark))
+
+
+def _stream_corpus_takedown(spark, root):
+    from impuls_spark.streaming.ingest import takedown_stream_corpus
+
+    _docs(spark, 0, 20).withColumn("lang", F.lit("en")).write.parquet(
+        f"{root}/__epoch=0"
+    )
+    return lambda: takedown_stream_corpus(
+        spark, root, _ids(spark), assume_stopped=True
+    )
+
+
+@pytest.mark.parametrize("setup, refusal", [
+    (_dedup_remove, "live_marker"),
+    (_ann_remove, "live_marker"),
+    (_ann_remove, "stream_epochs"),
+    (_corpus_remove, "live_marker"),
+    (_shards_remove, "live_marker"),
+    (_stream_corpus_takedown, "live_marker"),
+    (_stream_corpus_takedown, "live_index_marker"),
+])
+def test_refused_takedown_pins_nothing(spark, tmp_path, setup, refusal):
+    """Every takedown given a DataFrame of ids checkpoints it inside its
+    maintenance scope, so a refusal — a live root marker held by
+    another run, a live marker on the stream corpus's second root
+    (``_index``), or (ANN) un-absorbed stream epochs — frees the
+    checkpoint, leaves another run's marker exactly as it found it, and
+    releases the markers the refused run took itself."""
+    import os
+
+    from impuls_spark.streaming.compact import compact_marker_path
+
+    root = str(tmp_path / "root")
+    run = setup(spark, root)
+    marker = compact_marker_path(root)
+    held, match = None, "ALIVE"
+    if refusal == "stream_epochs":
+        os.makedirs(f"{root}/stream/cells/__epoch=0")
+        match = "un-absorbed"
+    else:
+        held = marker if refusal == "live_marker" else compact_marker_path(
+            f"{root}/_index")
+        os.makedirs(os.path.dirname(held), exist_ok=True)
+        open(held, "w").close()  # fresh heartbeat: the holder is alive
+        mtime = os.path.getmtime(held)
+    base = _n_persistent(spark)
+    with pytest.raises(RuntimeError, match=match):
+        run()
+    assert _n_persistent(spark) == base
+    if held is not None:
+        assert os.path.getmtime(held) == mtime
+    if held != marker:
+        assert not os.path.exists(marker)  # refusal releases it clean

@@ -139,3 +139,40 @@ def test_gtfs_zip_parallel_assembly_is_byte_identical(feed, tmp_path):
     save_gtfs(feed, headers, out_zip2, ensure_order=True)
     with open(out_zip, "rb") as a, open(out_zip2, "rb") as b:
         assert a.read() == b.read()
+
+
+def test_gtfs_zip_streamed_entry_zip64_counts_header(feed, tmp_path,
+                                                     monkeypatch):
+    """The streamed (largest) zip entry is the header line plus the
+    staged CSV parts; its zip64 decision must count both. With the
+    limit lowered so the staged parts fit under it but parts + header
+    do not, the save must still produce a readable archive instead of
+    zipfile's "File size too large" at entry close."""
+    import os
+
+    headers = {
+        "trips.txt": ["route_id", "service_id", "trip_id"],
+        "stop_times.txt": ["trip_id", "arrival_time", "departure_time",
+                           "stop_id", "stop_sequence"],
+    }
+    out_dir = str(tmp_path / "dir_target")
+    save_gtfs(feed, headers, out_dir, ensure_order=True)
+    # the dir target writes the same header + parts the zip streams
+    expected = {}
+    for fname in headers:
+        with open(os.path.join(out_dir, fname), "rb") as f:
+            expected[fname] = f.read()
+    biggest = max(expected, key=lambda fn: len(expected[fn]))
+    head_len = expected[biggest].index(b"\n") + 1
+    staged = len(expected[biggest]) - head_len
+    limit = staged + head_len // 2
+    assert staged <= limit < staged + head_len
+
+    out_zip = str(tmp_path / "boundary.zip")
+    monkeypatch.setattr(zipfile, "ZIP64_LIMIT", limit)
+    save_gtfs(feed, headers, out_zip, ensure_order=True)
+    monkeypatch.undo()
+    with zipfile.ZipFile(out_zip) as zf:
+        assert zf.namelist() == list(headers)
+        for fname, data in expected.items():
+            assert zf.read(fname) == data

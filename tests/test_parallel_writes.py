@@ -1,13 +1,14 @@
-"""Focused tests for probe.parallel_writes — the r14 §2.6 write-overlap
-helper under DedupIndex.build/ingest/remove, AnnIndex.save/append/
-retrain/remove, and the streaming epoch writers/absorb."""
+"""Focused tests for tools.concurrency.parallel_writes — the r14 §2.6
+write-overlap helper under DedupIndex.build/ingest/remove,
+AnnIndex.save/append/retrain/remove, and the streaming epoch
+writers/absorb."""
 
 import threading
 import time
 
 import pytest
 
-from impuls_spark.llm.probe import parallel_writes
+from impuls_spark.tools.concurrency import parallel_writes
 
 
 def test_single_thunk_runs_inline():
@@ -66,8 +67,6 @@ def test_single_thunk_error_propagates():
 def test_parallel_writes_attaches_sibling_errors():
     """ADVICE r14: when several overlapped writes fail, the re-raised
     first error carries the siblings' diagnoses as notes."""
-    from impuls_spark.tools.concurrency import parallel_writes
-
     def boom(msg):
         def _t():
             raise RuntimeError(msg)
