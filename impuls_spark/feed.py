@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schema as S
+from .tools.checkpoints import checkpoint_rdd
+from .tools.concurrency import parallel_writes
+from .tools.rows import empty_df
 
 
 class FeedDataset(Mapping[str, DataFrame]):
@@ -39,13 +42,12 @@ class FeedDataset(Mapping[str, DataFrame]):
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "FeedDataset":
-        """A feed with all 17 tables present and empty (typed)."""
+        """A feed with all 17 tables present and empty (typed). Each is
+        an empty ``LocalRelation`` (:func:`~.tools.rows.empty_df`), so an
+        absent table costs no job and folds out of the joins over it."""
         return cls(
             spark,
-            {
-                name: spark.createDataFrame([], spec.schema)
-                for name, spec in S.TABLES.items()
-            },
+            {name: empty_df(spark, spec.schema) for name, spec in S.TABLES.items()},
         )
 
     # -- Mapping protocol ---------------------------------------------
@@ -170,11 +172,39 @@ class FeedDataset(Mapping[str, DataFrame]):
         (multi_file.py:437-458); ``checkpoint`` is the in-memory
         analog (block-manager storage, no disk round-trip), and
         :func:`impuls_spark.sources.save_feed_parquet` the durable one.
+
+        Only tables with lineage to cut run a job:
+
+        - a table that is already a live checkpoint (its analyzed plan
+          is a bare ``LogicalRDD``) is carried through as it is;
+        - a table whose optimized plan is an empty ``LocalRelation`` —
+          an absent table, or a cascade child of one — becomes a fresh
+          :func:`~.tools.rows.empty_df` of the same schema. It is never
+          checkpointed: an RDD would hide the emptiness from every
+          later plan, which could then no longer fold it away;
+        - the rest are checkpointed through
+          :func:`~.tools.concurrency.parallel_writes`, up to 3 in
+          flight, so their small single-stage jobs overlap instead of
+          each paying the scheduling floor in turn. A failure in one
+          re-raises from here once the others have finished.
         """
-        return FeedDataset(
-            self.spark,
-            {name: df.localCheckpoint(eager=eager) for name, df in self._tables.items()},
-        )
+        out: dict[str, DataFrame] = {}
+        cut = []
+        for name, df in self._tables.items():
+            if checkpoint_rdd(df) is not None:
+                out[name] = df
+                continue
+            plan = df._jdf.queryExecution().optimizedPlan()
+            if plan.getClass().getSimpleName() == "LocalRelation" and plan.data().isEmpty():
+                out[name] = empty_df(self.spark, df.schema)
+            else:
+                cut.append(name)
+
+        def cut_one(name: str) -> None:
+            out[name] = self._tables[name].localCheckpoint(eager=eager)
+
+        parallel_writes(*[lambda n=name: cut_one(n) for name in cut])
+        return FeedDataset(self.spark, {name: out[name] for name in self._tables})
 
     def counts(self) -> dict[str, int]:
         """Row count per table (action — driver-side diagnostics only)."""

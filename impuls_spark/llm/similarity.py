@@ -24,6 +24,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..tools.concurrency import parallel_writes
 
@@ -1972,8 +1973,7 @@ class AnnIndex:
                 rid = m.checkpoint(rid)
             specs = {}
             for name, ddl in ddls.items():
-                id_type = spark.createDataFrame([], ddl).schema[
-                    id_col].dataType.simpleString()
+                id_type = StructType.fromDDL(ddl)[id_col].dataType.simpleString()
                 keyed = F.broadcast(
                     rid.select(F.col("__rid").cast(id_type).alias("__rid"))
                 )

@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession
 from .errors import InputNotModified
 from .feed import FeedDataset
 from .task import PipelineOptions, Task, TaskRuntime
+from .tools.checkpoints import checkpoint_rdd, free_local_checkpoint
 from .tools.machine_load import LoadTracker
 
 logger = logging.getLogger(__name__)
@@ -72,11 +73,13 @@ class Pipeline:
         feed = feed if feed is not None else FeedDataset.empty(spark)
 
         self.run_stats = []
+        #: checkpoints this run's barriers made that the feed still uses
+        owned: list = []
         for i, task in enumerate(self.tasks, start=1):
             with LoadTracker() as tracker:
                 feed = task.transform(feed, runtime)
                 if self.checkpoint_every and i % self.checkpoint_every == 0:
-                    feed = feed.checkpoint()
+                    feed, owned = _barrier(feed, owned)
             stats = {"task": task.name, **tracker.stats()}
             self.run_stats.append(stats)
             logger.info(
@@ -84,3 +87,24 @@ class Pipeline:
                 task.name, stats["seconds"], stats["peak_rss_mib"],
             )
         return feed
+
+
+def _barrier(feed: FeedDataset, owned: list) -> tuple[FeedDataset, list]:
+    """Checkpoint ``feed``, then free the blocks of every frame in
+    ``owned`` (checkpoints earlier barriers made) that the new feed no
+    longer holds. Once the barrier has materialized, nothing reads
+    them: every table is a fresh checkpoint, an empty
+    ``LocalRelation``, or a checkpoint carried through, and the RDDs of
+    the carried ones stay. Frames the caller passed in are never in
+    ``owned``. Returns the new feed and its ``owned`` list."""
+    cut = feed.checkpoint()
+    rdds = {name: checkpoint_rdd(df) for name, df in cut.items()}
+    held = {rdd.id() for rdd in rdds.values() if rdd is not None}
+    keep, done = [], []
+    for df in owned:
+        rdd = checkpoint_rdd(df)
+        (keep if rdd is not None and rdd.id() in held else done).append(df)
+    free_local_checkpoint(*done)
+    made = [cut[name] for name, rdd in rdds.items()
+            if rdd is not None and cut[name] is not feed[name]]
+    return cut, keep + made

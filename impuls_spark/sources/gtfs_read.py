@@ -7,9 +7,13 @@ typed projection built from the mapping table (gtfs_schema.py); Catalyst
 prunes/pushes everything, executors parallelize per file split. There is
 no row loop anywhere.
 
-Scale notes: each .txt is read all-string (no inference pass), projected
-once, and never collected. ``multiLine`` stays False so big files split
-by byte range across executors. Line-number surrogate PKs use
+Scale notes: each .txt is read all-string, projected once, and never
+collected. Its schema comes from the header row, peeked on the driver
+(one line, any file size) and named exactly as Spark's header inference
+would name it, so loading a feed plans every read without running a
+single Spark job: no inference pass, no header-reading job per file.
+``multiLine`` stays False so big files split by byte range across
+executors. Line-number surrogate PKs use
 ``zipWithIndex``-equivalent semantics via ``monotonically_increasing_id``
 ordering (stable for a single-file read, where splits are ordered by
 byte offset — SURVEY §4.2.4).
@@ -26,6 +30,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import schema as S
 from ..feed import FeedDataset
@@ -40,6 +45,26 @@ def _peek_header(path: str) -> list[str]:
     """Read the CSV header row driver-side (one line, any file size)."""
     with open(path, newline="", encoding="utf-8-sig") as fh:
         return next(csv.reader(fh))
+
+
+def _read_csv(spark: SparkSession, path: str, header: list[str]) -> DataFrame:
+    """``path`` read all-string under the column names Spark's own
+    header inference gives ``header`` (``CSVUtils.makeSafeHeader``):
+    an empty cell becomes ``_c<index>``, and every copy of a duplicate
+    name (compared case-insensitively unless ``spark.sql.caseSensitive``)
+    gets its index appended. With the schema given, ``header=True``
+    only skips the first line, so the read plans without a job."""
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    keys = [h if case_sensitive else h.lower() for h in header]
+    dups = {k for k in keys if keys.count(k) > 1}
+    names = [
+        f"_c{i}" if not h else f"{h}{i}" if k in dups else h
+        for i, (h, k) in enumerate(zip(header, keys))
+    ]
+    schema = StructType([StructField(n, StringType()) for n in names])
+    return spark.read.csv(
+        path, schema=schema, header=True, quote='"', escape='"', encoding="UTF-8"
+    )
 
 
 def _with_line_numbers(df: DataFrame, col: str) -> DataFrame:
@@ -87,14 +112,7 @@ def _read_one(
         raise MissingGtfsFile(
             f"{spec.file}: required columns missing: {missing_required}"
         )
-    raw = spark.read.csv(
-        path,
-        header=True,
-        inferSchema=False,
-        quote='"',
-        escape='"',
-        encoding="UTF-8",
-    )
+    raw = _read_csv(spark, path, header)
     # empty string cells -> NULL (one convention everywhere; SURVEY §1.3)
     raw = raw.select(
         *[F.nullif(F.col(c), F.lit("")).alias(c) for c in raw.columns]
@@ -173,7 +191,7 @@ def _extra_table_rows(
     for file_ix, fname in enumerate(files):
         path = os.path.join(dir_path, fname)
         header = _peek_header(path)
-        raw = spark.read.csv(path, header=True, inferSchema=False, quote='"', escape='"')
+        raw = _read_csv(spark, path, header)
         fields = F.map_filter(
             F.map_from_arrays(
                 F.array(*[F.lit(c) for c in header]),

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tools.concurrency import parallel_writes
+from ..tools.rows import empty_df
 from .compact import EPOCH_COL, _epoch_dirs, _HadoopFS, check_not_compacting
 from .ingest import _read_or_empty
 
@@ -160,7 +161,7 @@ def _read_stream_rows(
         full = spark.read.schema(f"{ddl}, {EPOCH_COL} int").parquet(sdir)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], ddl)
+            return empty_df(spark, ddl)
         raise
     if upto_epoch is not None:
         full = full.filter(F.col(EPOCH_COL) <= int(upto_epoch))

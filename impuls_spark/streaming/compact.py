@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..tools.checkpoints import free_local_checkpoint
 from ..tools.concurrency import parallel_writes
+from ..tools.rows import empty_df
 from .sinks import EPOCH_COL
 
 _EPOCH_DIR_RE = re.compile(rf"^{re.escape(EPOCH_COL)}=(\d+)$")
@@ -559,7 +560,7 @@ def _rid_frame(spark: SparkSession, ids) -> DataFrame:
         ).distinct()
     vals = [str(i) for i in ids]
     if not vals:
-        return spark.createDataFrame([], "__rid string")
+        return empty_df(spark, "__rid string")
     return spark.range(0, 1, 1, 1).select(
         F.explode(F.array_distinct(F.lit(vals))).alias("__rid")
     )

@@ -40,6 +40,7 @@ from ..llm.dedup import (
 )
 from ..sources.corpus import write_corpus
 from ..tools.concurrency import parallel_writes
+from ..tools.rows import empty_df
 from .compact import _HadoopFS
 from .sinks import EPOCH_COL
 
@@ -79,7 +80,7 @@ def _read_or_empty(
             except Exception:
                 continue
         if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], schema)
+            return empty_df(spark, schema)
         raise
     return df.filter(F.col(EPOCH_COL) != current_epoch).drop(EPOCH_COL)
 

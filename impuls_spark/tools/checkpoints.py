@@ -22,6 +22,20 @@ batch checkpoints through ``streaming.compact.maintenance``'s
 from __future__ import annotations
 
 
+def checkpoint_rdd(df):
+    """The JVM RDD holding ``df``'s checkpoint blocks, or None.
+
+    A frame counts as checkpointed when its analyzed plan is a bare
+    ``LogicalRDD`` whose RDD is still persisted: exactly what
+    ``localCheckpoint`` returns, and not yet freed. Anything on top of
+    that leaf (a ``Project``, a ``Filter``) is lineage of its own."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    rdd = plan.rdd()
+    return rdd if rdd.getStorageLevel().isValid() else None
+
+
 def free_local_checkpoint(*dfs) -> None:
     """Unpersist the checkpoint blocks behind locally-checkpointed
     DataFrames, best-effort (non-blocking). A frame that is not backed
@@ -32,8 +46,8 @@ def free_local_checkpoint(*dfs) -> None:
         if df is None:
             continue
         try:
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
+            rdd = checkpoint_rdd(df)
+            if rdd is not None:
+                rdd.unpersist(False)
         except Exception:  # noqa: BLE001 — cleanup must never fail a job
             pass

@@ -14,6 +14,12 @@ def parallel_writes(*thunks) -> None:
     earlier write's tail frees, so an index build/save/feed export
     pays the SLOWEST artifact write instead of the SUM.
 
+    The same holds for any set of independent actions, not only
+    writes: ``FeedDataset.checkpoint`` runs the eager
+    ``localCheckpoint`` of each table that needs one through here, so a
+    pipeline barrier's small single-stage jobs overlap instead of each
+    paying the scheduling floor in turn.
+
     The caller guarantees independence: no thunk may read a path
     another thunk writes, and any shared upstream frame must be
     persisted/checkpointed first (otherwise each job recomputes it —

@@ -5,6 +5,25 @@ Python workers for a constant)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+
+def empty_df(spark, schema: "StructType | str") -> DataFrame:
+    """Zero-row frame of ``schema`` (a ``StructType``, nullability kept
+    exactly, or a DDL string), built as a JVM-side ``LocalRelation``.
+
+    ``spark.createDataFrame`` of no rows plans a Python-backed
+    ``LogicalRDD``: Catalyst cannot see that it is empty, so every
+    action over it runs a Python-worker job, and a join against it
+    re-runs the other side's whole lineage to produce no rows. An empty
+    ``LocalRelation`` is visible to the optimizer:
+    ``PropagateEmptyRelation`` folds the joins and filters over it
+    into another empty ``LocalRelation``, which no job has to compute."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    jrows = spark._jvm.java.util.ArrayList()
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
 
 
 def single_row_df(spark, ddl: str, *values) -> DataFrame:
@@ -20,7 +39,7 @@ def single_row_df(spark, ddl: str, *values) -> DataFrame:
     the stored bytes are the same one-row parquet."""
     from pyspark.sql import functions as F
 
-    fields = spark.createDataFrame([], ddl).schema.fields
+    fields = StructType.fromDDL(ddl).fields
     if len(fields) != len(values):
         raise ValueError(
             f"{len(fields)} fields in {ddl!r} but {len(values)} values"

@@ -28,6 +28,16 @@ def spark():
     session.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """Callable giving the number of Spark jobs submitted so far. It
+    reads the DAG scheduler's job-id counter: the status store's job
+    list stops growing once it holds ``spark.ui.retainedJobs`` jobs,
+    which a full test session passes."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    return dag.nextJobId
+
+
 @pytest.fixture(scope="session")
 def gtfs_dir(tmp_path_factory):
     """Deterministic WKD-shaped GTFS feed as a directory of .txt files."""

@@ -89,3 +89,61 @@ def test_unknown_columns_roundtrip_through_extra_fields(spark, tmp_path):
         F.element_at(F.col("extra_fields"), "vehicle_type").isNotNull()
     )
     assert 0 < with_vt.count() < trips.count()
+
+
+def test_load_gtfs_runs_no_spark_job(spark, spark_jobs, tmp_path):
+    """Every file's schema comes from its peeked header, so loading
+    plans the reads without a header-inference job per file."""
+
+    def mutate(rows):
+        rows["vehicle_types.txt"] = [{"vehicle_id": "EN57", "label": "EMU"}]
+        for r in rows["stops.txt"]:
+            r["platform_note"] = "x"
+
+    path = write_feed(str(tmp_path / "feed.zip"), mutate=mutate)
+    before = spark_jobs()
+    feed = load_gtfs(spark, path, extra_fields=True,
+                     extra_files=["vehicle_types.txt"])
+    assert spark_jobs() == before
+    assert feed["stop_times"].count() > 0
+    assert feed["extra_table_rows"].count() == 1
+
+
+def test_bom_prefixed_header_loads_first_column(spark, tmp_path):
+    path = write_feed(str(tmp_path / "feed"))
+    agency = tmp_path / "feed" / "agency.txt"
+    text = agency.read_text(encoding="utf-8")
+    agency.write_text("﻿" + text, encoding="utf-8")
+    feed = load_gtfs(spark, path)
+    ids = [r["agency_id"] for r in feed["agencies"].collect()]
+    assert ids and None not in ids
+    assert feed["agencies"].columns[0] == "agency_id"
+
+
+def test_header_names_match_spark_inference(spark, tmp_path):
+    """A case-variant duplicate and an empty header cell get the names
+    Spark's header inference gives them, under either case setting."""
+    from impuls_spark.sources.gtfs_read import _peek_header, _read_csv
+
+    def mutate(rows):
+        for i, r in enumerate(rows["agency.txt"]):
+            r.update({"Note": "a", "": "b", "note": "c", "NOTE": str(i)})
+
+    path = write_feed(str(tmp_path / "feed"), mutate=mutate)
+    agency = str(tmp_path / "feed" / "agency.txt")
+    header = _peek_header(agency)
+    assert "" in header and "note" in header
+    key = "spark.sql.caseSensitive"
+    old = spark.conf.get(key)
+    try:
+        for case_sensitive in ("false", "true"):
+            spark.conf.set(key, case_sensitive)
+            inferred = spark.read.csv(agency, header=True, quote='"',
+                                      escape='"')
+            ours = _read_csv(spark, agency, header)
+            assert ours.columns == inferred.columns
+            assert ours.collect() == inferred.collect()
+            # the unknown columns never reach the typed projection
+            assert load_gtfs(spark, path)["agencies"].count() == 1
+    finally:
+        spark.conf.set(key, old)
