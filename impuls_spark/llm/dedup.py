@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..tools.checkpoints import free_local_checkpoint
 from ..tools.concurrency import parallel_writes
 
 SEP = "\x1f"
@@ -798,10 +799,13 @@ def incremental_dedup(
     (``streaming.ingest_with_dedup`` sets it): a left-semi against an
     index-sized right side cannot broadcast-build, so the default
     shuffles the whole corpus hash/band tables through the wire EVERY
-    epoch; instead the bounded batch keys broadcast into a semi-join
-    against the index scan (map-side, no exchange on the corpus
-    tables) and the at-most-batch-sized matched sets broadcast back.
-    Only set it when the new side is trigger-bounded.
+    epoch; instead the bounded batch keys push into the index scan as
+    a parquet predicate (``probe.pushdown_key_filter``: exact
+    membership, no exchange on the corpus tables) and the
+    at-most-batch-sized matched sets broadcast back. In that mode the
+    returned frame is MATERIALIZED (locally checkpointed) and every
+    intermediate checkpoint is freed before returning. Only set it
+    when the new side is trigger-bounded.
     """
     if corpus_hashes is None:
         corpus_hashes = corpus_df.select(
@@ -813,11 +817,13 @@ def incremental_dedup(
                                shingle_n),
             id_col, n_hashes, band_size,
         ).select("band", "key").distinct()
-    return _classify_against_index(
+    status, _, _, temps = _classify_against_index(
         new_df, corpus_hashes, corpus_bands,
         text_col, id_col, n_hashes, band_size, shingle_n,
         broadcast_new=broadcast_new,
     )
+    free_local_checkpoint(*temps)
+    return status
 
 
 def _classify_against_index(
@@ -830,111 +836,101 @@ def _classify_against_index(
     band_size: int,
     shingle_n: int,
     broadcast_new: bool = False,
+    cut: bool = False,
 ):
-    """:func:`incremental_dedup`'s kernel. Returns the status frame —
-    in broadcast (micro-batch) mode MATERIALIZED (locally
-    checkpointed, at most batch-sized), with every intermediate
-    checkpoint freed before returning: the r14 harness left 3 pinned
-    batch RDDs per classification to Python GC, measured as 4-6x
-    rep-time spikes (guide §5 — unpersist when done).
-    :class:`DedupIndex.ingest` inlines this kernel rather than calling
-    it, because its appends need the intermediates."""
-    new_hash = new_df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("__h")
-    )
-    if broadcast_new:
-        # micro-batch mode (see incremental_dedup): broadcast the
-        # bounded batch keys INTO the index scan, then broadcast the
-        # at-most-batch-sized matched sets back — the corpus tables
-        # are scanned (column-pruned) but never exchanged. The
-        # pushdown_key_filter additionally compiles the batch keys
-        # into a parquet In predicate, so a key-clustered index
-        # (DedupIndex.build/compact layout) skips the row groups the
-        # batch can't touch — the scan itself stops being O(index)
+    """The one classify kernel, shared by :func:`incremental_dedup`,
+    :meth:`DedupIndex.classify` and :meth:`DedupIndex.ingest`. Returns
+    ``(status, new_hash, rest_bands, temps)``: the (id, status) frame,
+    the batch's (id, ``__h``) md5 frame and its (id, band, key) band
+    frame that an ingest appends, and the intermediate checkpoints the
+    caller frees once it is done with ``new_hash`` / ``rest_bands``
+    (guide §5: the r14 harness left 3 pinned batch RDDs per
+    classification to Python GC, measured as 4-6x rep-time spikes).
+
+    ``cut`` (always on in broadcast mode) materializes ``rest_bands``
+    and ``status`` with ``localCheckpoint``; without it (and without
+    ``broadcast_new``) every frame stays lazy. If the kernel raises,
+    it frees what it had already checkpointed."""
+    cut = cut or broadcast_new
+    temps: list = []
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint(eager=True)
+        temps.append(df)
+        return df
+
+    def keep(df: DataFrame) -> DataFrame:
+        return df
+
+    def probe(index: DataFrame, key: str, batch: DataFrame) -> DataFrame:
+        # micro-batch mode (see incremental_dedup): the batch keys push
+        # INTO the index scan as a parquet predicate (on the
+        # key-clustered build/compact layout the scan skips the row
+        # groups the batch can't touch, so it stops being O(index)); the
+        # scan returns exactly the batch's matches, which broadcast
+        # back — the corpus tables are never exchanged
+        if not broadcast_new:
+            return index
         from .probe import pushdown_key_filter
 
-        # lineage cuts (broadcast mode only — the batch is trigger-
-        # bounded by contract): `exact` feeds both the rest_bands cut
-        # (via `rest`) and the status join, so uncut it re-runs the
-        # batch md5 pass ~4x and the PUSHED INDEX SCAN 2x per
-        # classification (r14 measurement); both frames are at most
-        # batch-sized
-        new_hash = new_hash.localCheckpoint(eager=True)
-        batch_h = new_hash.select("__h").distinct()
-        matched_h = pushdown_key_filter(
-            corpus_hashes, "__h", batch_h
-        ).join(F.broadcast(batch_h), "__h", "left_semi")
-        exact = exact_cp = new_hash.join(
-            F.broadcast(matched_h), "__h", "left_semi"
-        ).select(id_col).localCheckpoint(eager=True)
-    else:
-        exact_cp = None
-        exact = new_hash.join(
-            corpus_hashes, "__h", "left_semi"
-        ).select(id_col)
+        return F.broadcast(pushdown_key_filter(index, key, batch))
 
-    if broadcast_new:
-        # every remaining join operand is batch-bounded: hint them all
-        # so one epoch plans ZERO sort-merge joins
-        exact = F.broadcast(exact)
-    rest = new_df.join(exact, id_col, "left_anti")
-    rest_bands = _band_keys(
-        minhash_signatures(rest, text_col, id_col, n_hashes, shingle_n),
-        id_col, n_hashes, band_size,
-    )
-    if broadcast_new:
-        # materialize once: the frame probes AND builds below, and the
-        # ingest caller appends it to the stored index afterwards
-        rest_bands = rest_bands.localCheckpoint(eager=True)
-        # pushdown on `key` alone (a composite (band, key) In is not
-        # pushable); cross-band key collisions make it a superset the
-        # exact (band, key) semi-join then refines
-        batch_bk = rest_bands.select("band", "key").distinct()
-        matched_b = pushdown_key_filter(
-            corpus_bands, "key", batch_bk
-        ).join(F.broadcast(batch_bk), ["band", "key"], "left_semi")
+    # broadcast mode: every join operand besides the probed scans is
+    # batch-bounded — hint them all so one classification plans ZERO
+    # sort-merge joins. Its lineage cuts: `exact` feeds both the
+    # rest_bands cut (via `rest`) and the status join, so uncut it
+    # re-runs the batch md5 pass ~4x and the PUSHED INDEX SCAN 2x per
+    # classification (r14 measurement); both frames are batch-sized
+    small = F.broadcast if broadcast_new else keep
+    batch_cut = checkpoint if broadcast_new else keep
+    try:
+        new_hash = batch_cut(new_df.select(
+            F.col(id_col), F.md5(F.col(text_col)).alias("__h")
+        ))
+        exact = small(batch_cut(new_hash.join(
+            probe(corpus_hashes, "__h", new_hash), "__h", "left_semi"
+        ).select(id_col)))
+        rest = new_df.join(exact, id_col, "left_anti")
+        rest_bands = _band_keys(
+            minhash_signatures(rest, text_col, id_col, n_hashes,
+                               shingle_n),
+            id_col, n_hashes, band_size,
+        )
+        if cut:
+            # the ONE MinHash pass: the bands probe, the status and an
+            # ingest's band append all read these blocks
+            rest_bands = checkpoint(rest_bands)
+        # the probe is on `key` alone (a composite (band, key) In is not
+        # pushable): its matches are exact on the key, and this
+        # (band, key) semi-join refines cross-band collisions
         near = (
-            rest_bands.join(
-                F.broadcast(matched_b), ["band", "key"], "left_semi"
+            rest_bands.join(probe(corpus_bands, "key", rest_bands),
+                            ["band", "key"], "left_semi")
+            .select(id_col).distinct()
+        )
+        status = (
+            new_df.select(id_col)
+            .join(small(exact.withColumn("__e", F.lit(1))), id_col, "left")
+            .join(small(near.withColumn("__n", F.lit(1))), id_col, "left")
+            .select(
+                id_col,
+                F.when(F.col("__e").isNotNull(), F.lit("exact"))
+                .when(F.col("__n").isNotNull(), F.lit("near"))
+                .otherwise(F.lit("novel"))
+                .alias("status"),
             )
-            .select(id_col).distinct()
         )
-    else:
-        near = (
-            rest_bands.join(corpus_bands, ["band", "key"], "left_semi")
-            .select(id_col).distinct()
-        )
-
-    e_marked = exact.withColumn("__e", F.lit(1))
-    n_marked = near.withColumn("__n", F.lit(1))
-    if broadcast_new:
-        e_marked = F.broadcast(e_marked)
-        n_marked = F.broadcast(n_marked)
-    status = (
-        new_df.select(id_col)
-        .join(e_marked, id_col, "left")
-        .join(n_marked, id_col, "left")
-        .select(
-            id_col,
-            F.when(F.col("__e").isNotNull(), F.lit("exact"))
-            .when(F.col("__n").isNotNull(), F.lit("near"))
-            .otherwise(F.lit("novel"))
-            .alias("status"),
-        )
-    )
-    if broadcast_new:
-        # cut the verdicts themselves (they still read the pinned
-        # intermediates through `exact`/`near`), then FREE those
-        # intermediates deterministically: one batch-sized frame stays
-        # pinned (the result the caller holds) instead of three
-        # (VERDICT r14 what's-wrong #1 — the d74 rep-spike source).
-        # The eager evaluation adds no total work: the caller's action
-        # was about to run this exact plan.
-        from ..tools.checkpoints import free_local_checkpoint
-
-        status = status.localCheckpoint(eager=True)
-        free_local_checkpoint(new_hash, exact_cp, rest_bands)
-    return status
+        if cut:
+            # the verdicts themselves: they still read the pinned
+            # intermediates (and, lazily, the index), so the caller
+            # may free `temps` once it is done with new_hash/rest_bands.
+            # The eager evaluation adds no total work: the caller's
+            # action was about to run this exact plan.
+            status = status.localCheckpoint(eager=True)
+    except BaseException:
+        free_local_checkpoint(*temps)
+        raise
+    return status, new_hash, rest_bands, tuple(temps)
 
 
 def block_dedup(
@@ -1491,10 +1487,10 @@ class DedupIndex:
         check_not_compacting(self.spark, self.path, "classify against")
         self._check_batch(new_df)
         m = self.meta
-        return _classify_against_index(
-            new_df, self.hashes, self.bands, m["text_col"], m["id_col"],
-            m["n_hashes"], m["band_size"], m["shingle_n"],
-            broadcast_new=broadcast_new,
+        return incremental_dedup(
+            new_df, None, m["text_col"], m["id_col"], m["n_hashes"],
+            m["band_size"], m["shingle_n"], corpus_hashes=self.hashes,
+            corpus_bands=self.bands, broadcast_new=broadcast_new,
         )
 
     def ingest(
@@ -1520,7 +1516,13 @@ class DedupIndex:
         ``broadcast_new`` is :func:`incremental_dedup`'s micro-batch
         join mode (broadcast the bounded batch keys, never exchange
         the index tables) — set it only for trigger-bounded daily/
-        hourly appends, never for a backfill the size of the index."""
+        hourly appends, never for a backfill the size of the index.
+
+        Classification is :func:`_classify_against_index`, the same
+        kernel :meth:`classify` runs, with its lineage cuts on in both
+        modes. Refuses before any work on a ``_COMPACTING`` marker on
+        the root or either store dir, and frees the kernel's
+        checkpoints on every exit path, a failed append included."""
         if self._epoched:
             raise ValueError(
                 "this DedupIndex is a read-only view over a streaming "
@@ -1531,117 +1533,35 @@ class DedupIndex:
         bad = set(accept) - {"exact", "near", "novel"}
         if bad:
             raise ValueError(f"unknown accept statuses: {sorted(bad)}")
-        m = self.meta
-        id_col, text_col = m["id_col"], m["text_col"]
+        from ..streaming.compact import check_not_compacting
 
-        # Ingest inlines the classify kernel so the expensive pieces
-        # materialize EXACTLY ONCE, with lineage CUTS before any append.
-        # Lineage-cut rationale: every downstream consumer (the two
-        # append writes and the frame handed back to the caller) would
-        # otherwise re-execute plans that READ the index parquet —
-        # and a plain persist() is not enough, because Spark's cache
-        # manager re-caches any cached plan whose source path is
-        # written (recacheByPath on the append), recomputing it against
-        # the NEW files and flipping the batch's own novel docs to
-        # 'exact'/'near'. localCheckpoint truncates the plan to the
+        def check_markers() -> None:
+            # an append racing a compaction's list/move/delete window
+            # can be deleted without being folded — silent data loss
+            # the marker turns into an error
+            for p in (self.path, f"{self.path}/bands",
+                      f"{self.path}/hashes"):
+                check_not_compacting(self.spark, p, "ingest into")
+
+        check_markers()
+        m = self.meta
+        id_col = m["id_col"]
+        # Lineage cuts before any append (`cut=True`): every downstream
+        # consumer (the two append writes and the frame handed back to
+        # the caller) would otherwise re-execute plans that READ the
+        # index parquet — and a plain persist() is not enough, because
+        # Spark's cache manager re-caches any cached plan whose source
+        # path is written (recacheByPath on the append), recomputing it
+        # against the NEW files and flipping the batch's own novel docs
+        # to 'exact'/'near'. localCheckpoint truncates the plan to the
         # materialized blocks, which no path refresh can touch.
         # (Executor-loss durability caveat as with Merge's lineage cut;
         # both frames are batch-sized.)
-        new_hash = new_df.select(
-            F.col(id_col), F.md5(F.col(text_col)).alias("__h")
+        status, new_hash, rest_bands, temps = _classify_against_index(
+            new_df, self.hashes, self.bands, m["text_col"], id_col,
+            m["n_hashes"], m["band_size"], m["shingle_n"],
+            broadcast_new=broadcast_new, cut=True,
         )
-        exact_cp = None
-        if broadcast_new:
-            # micro-batch join mode (see incremental_dedup): broadcast
-            # the bounded batch keys into the index scans; the index
-            # tables are read column-pruned but never exchanged, and
-            # the batch keys push into the scan as a parquet In
-            # predicate (key-clustered layout -> row-group skipping)
-            from .probe import pushdown_key_filter
-
-            # cut 0 (broadcast mode only — the batch is trigger-
-            # bounded by contract): without it the batch md5 pass runs
-            # once per consumer (batch_h, the exact semi-join's left
-            # side, the hashes append) and the PUSHED INDEX SCAN under
-            # `exact` runs again for every frame derived from `rest`
-            # (rest_bands cut, status cut) — measured as the dominant
-            # repeat cost of an ingest epoch (r14)
-            new_hash = new_hash.localCheckpoint(eager=True)
-            batch_h = new_hash.select("__h").distinct()
-            matched_h = pushdown_key_filter(
-                self.hashes, "__h", batch_h
-            ).join(F.broadcast(batch_h), "__h", "left_semi")
-            exact = exact_cp = new_hash.join(
-                F.broadcast(matched_h), "__h", "left_semi"
-            ).select(id_col).localCheckpoint(eager=True)
-        else:
-            exact = new_hash.join(
-                self.hashes, "__h", "left_semi"
-            ).select(id_col)
-        rest = new_df.join(exact, id_col, "left_anti")
-        # cut 1: the batch's band keys — the ONE MinHash pass of this
-        # ingest (classification, band append, and the returned status
-        # all read these blocks; recomputing would double the dominant
-        # shingle+minhash cost, measured ~3x on the sf1 suite run)
-        rest_bands = _band_keys(
-            minhash_signatures(rest, text_col, id_col, m["n_hashes"],
-                               m["shingle_n"]),
-            id_col, m["n_hashes"], m["band_size"],
-        ).localCheckpoint(eager=True)
-        if broadcast_new:
-            batch_bk = rest_bands.select("band", "key").distinct()
-            matched_b = pushdown_key_filter(
-                self.bands, "key", batch_bk
-            ).join(F.broadcast(batch_bk), ["band", "key"], "left_semi")
-            near = (
-                rest_bands.join(
-                    F.broadcast(matched_b), ["band", "key"], "left_semi"
-                )
-                .select(id_col).distinct()
-            )
-        else:
-            near = (
-                rest_bands.join(self.bands, ["band", "key"], "left_semi")
-                .select(id_col).distinct()
-            )
-        e_marked = exact.withColumn("__e", F.lit(1))
-        n_marked = near.withColumn("__n", F.lit(1))
-        if broadcast_new:
-            # every remaining operand is batch-bounded: hint them all
-            # so one ingest plans zero sort-merge joins
-            e_marked = F.broadcast(e_marked)
-            n_marked = F.broadcast(n_marked)
-        status = (
-            new_df.select(id_col)
-            .join(e_marked, id_col, "left")
-            .join(n_marked, id_col, "left")
-            .select(
-                id_col,
-                F.when(F.col("__e").isNotNull(), F.lit("exact"))
-                .when(F.col("__n").isNotNull(), F.lit("near"))
-                .otherwise(F.lit("novel"))
-                .alias("status"),
-            )
-        )
-        # cut 2: the verdicts themselves (their plan still reads the
-        # hash store through `exact`) — must land before any append
-        status = status.localCheckpoint(eager=True)
-        accepted = status.filter(
-            F.col("status").isin(*accept)
-        ).select(id_col)
-        # both append inputs now derive from checkpointed frames or
-        # index-independent scans (new_hash is md5 over the batch), so
-        # neither re-reads the store and append order is free.
-        # Fail fast if a compaction holds (or a crashed one left) its
-        # marker on either store dir: an append racing the fold's
-        # list/move/delete window can be deleted without being folded —
-        # silent data loss the marker turns into an error.
-        from ..streaming.compact import check_not_compacting
-
-        check_not_compacting(self.spark, self.path, "ingest into")
-        check_not_compacting(self.spark, f"{self.path}/bands", "ingest into")
-        check_not_compacting(self.spark, f"{self.path}/hashes",
-                             "ingest into")
         tracked = self.meta.get("track_ids", False)
         id_str = F.col(id_col).cast("string").alias("__id")
         # appended batch files carry the same within-file key order and
@@ -1650,35 +1570,42 @@ class DedupIndex:
         # compact folds them into the range-partitioned layout
         from .probe import key_bloom
 
-        # append order is free (both inputs derive from checkpointed
-        # frames or index-independent scans, see above) — overlap the
-        # two appends so the ingest pays the slower one (guide §2.6)
-        parallel_writes(
-            lambda: key_bloom(
-                rest_bands.join(accepted, id_col, "left_semi")
-                .select("band", "key", *([id_str] if tracked else []))
-                .distinct()
-                .sortWithinPartitions("key")
-                .write.mode("append"), "key",
-            ).parquet(f"{self.path}/bands"),
-            lambda: key_bloom(
-                new_hash.join(accepted, id_col, "left_semi")
-                .select("__h", *([id_str] if tracked else []))
-                .distinct()
-                .sortWithinPartitions("__h")
-                .write.mode("append"), "__h",
-            ).parquet(f"{self.path}/hashes"),
-        )
-        # the appends were the intermediates' last consumers — free
-        # their checkpoint blocks NOW instead of leaving them pinned
-        # until Python GC (guide §5; the r14 d74 rep-spike source).
-        # `status` (cut 2) is already a standalone checkpoint, so the
-        # caller's reads never touch the freed blocks.
-        from ..tools.checkpoints import free_local_checkpoint
-
-        free_local_checkpoint(
-            rest_bands, *([new_hash, exact_cp] if broadcast_new else [])
-        )
+        try:
+            # a compaction that started during classification
+            check_markers()
+            accepted = status.filter(
+                F.col("status").isin(*accept)
+            ).select(id_col)
+            # both append inputs derive from checkpointed frames or
+            # index-independent scans (new_hash is md5 over the batch),
+            # so neither re-reads the store and append order is free —
+            # overlap the two appends so the ingest pays the slower one
+            # (guide §2.6)
+            parallel_writes(
+                lambda: key_bloom(
+                    rest_bands.join(accepted, id_col, "left_semi")
+                    .select("band", "key",
+                            *([id_str] if tracked else []))
+                    .distinct()
+                    .sortWithinPartitions("key")
+                    .write.mode("append"), "key",
+                ).parquet(f"{self.path}/bands"),
+                lambda: key_bloom(
+                    new_hash.join(accepted, id_col, "left_semi")
+                    .select("__h", *([id_str] if tracked else []))
+                    .distinct()
+                    .sortWithinPartitions("__h")
+                    .write.mode("append"), "__h",
+                ).parquet(f"{self.path}/hashes"),
+            )
+        except BaseException:
+            free_local_checkpoint(status)
+            raise
+        finally:
+            # the appends were the intermediates' last consumers; the
+            # returned status is a standalone checkpoint, so the
+            # caller's reads never touch the freed blocks
+            free_local_checkpoint(*temps)
         return status
 
     def compact(self, target_shards: int = 1,

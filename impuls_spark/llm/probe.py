@@ -29,8 +29,8 @@ The fix is two-sided:
      parquet threshold is LEFT ALONE (an admitted In of this size is
      the Or-chain that StackOverflows, see below); the reader instead
      gets the keys' CHUNKED SPANS — an OR-of-``between`` over ~64
-     contiguous key runs computed driver-side from the already-
-     collected keys — for row-group pruning far tighter than the
+     contiguous key runs whose bounds come with the collected keys —
+     for row-group pruning far tighter than the
      single native ``[min, max]`` range the r13 design relied on.
      2.6-4.9x vs the bare semi-join at 200M rows.
   3. above ``PROBE_PUSHDOWN_MAX``: NO key collect. The batch is
@@ -46,9 +46,17 @@ The fix is two-sided:
      falls back to the single global ``between`` so the scan never
      pays per-row chunk evaluation for zero pruning.
 
-All three regimes are SUPERSET-safe: callers keep their semi-join as
-the exact membership step, the pushed predicate only decides how much
-of the artifact is read.
+The probe returns EXACT membership in every regime: regimes 1-2 apply
+the batch's keys as an ``In`` (exact on the key); where the pushed
+predicate is only a superset (regime 3, and regime 2's spans-only
+fallback) the function adds the broadcast semi-join against the batch
+keys itself. Callers therefore never semi-join the probed scan against
+the batch keys again. The keys stay in the JVM: one job collects them
+as a sorted array row, ``Column.isInCollection`` builds the In from
+the JVM-side list, and the chunk bounds arrive as one string of SQL
+literals for a single ``F.expr`` — a constant number of Py4J round
+trips whatever the key count (a per-key Python ``isin`` measured
+16,378 round trips for a 3,000-key probe, 259 for a 50-key one).
 
 Parquet receives a full In set only when the value count is at or
 below ``spark.sql.parquet.pushdown.inFilterThreshold`` (default 10) —
@@ -66,24 +74,23 @@ ceiling explicitly. The ceiling exists because an ADMITTED In reaches
 parquet as a values-deep Or-chain whose recursive evaluation
 overflows the stack in the low thousands of values (measured r13,
 PROBE_CAP.json) — the raise must never exceed :data:`PARQUET_IN_MAX`,
-and the mid regime refuses to apply its ``isin`` at all if the
-session threshold would admit it (ADVICE r13).
+and the mid regime refuses to apply its In at all if the session
+threshold would admit it (ADVICE r13).
 """
 
 from __future__ import annotations
 
-import functools
-import operator
+import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Probe batches above this many distinct keys skip the key-collect
-#: entirely and degrade to the chunked multi-span filter (regime 3) —
-#: the semi-join stays the exact membership step for backfills either
-#: way. SET FROM MEASUREMENT: 5000 is the largest key count where the
-#: collected ``isin`` measurably beat the bare semi-join (5.65 s vs
-#: 14.9 s on the 200M-row artifact, PROBE_CAP_200M.json), and the
+#: Probe batches above this many distinct keys get no In and degrade
+#: to the chunked multi-span filter (regime 3), made exact by a
+#: broadcast semi-join against the batch keys. SET FROM MEASUREMENT:
+#: 5000 is the largest key count where the collected ``isin``
+#: measurably beat the bare semi-join (5.65 s vs 14.9 s on the
+#: 200M-row artifact, PROBE_CAP_200M.json), and the
 #: literal's driver+optimizer cost grows super-linearly with plan
 #: complexity past it — a 15k-key ``isin`` inside the d74 classify
 #: plan measured ~45 s of pure driver-side overhead (66 s total vs
@@ -281,34 +288,54 @@ def _merge_spans(spans: "list[tuple]") -> "list[tuple]":
     return out
 
 
-def _chunk_span_pred(col: Column, chunks: "list[tuple]") -> Column:
-    """OR-of-``between`` over the chunks, nested two levels deep
+def _literal_sql(x: Column, dtype: str) -> Column:
+    """Spark-side SQL text of a typed literal equal to ``x``: a string
+    as ``CAST(X'<utf-8 hex>' AS STRING)``, so every byte (the ``\\x1f``
+    band separator included) survives the trip into the span
+    expression; a binary as ``X'<hex>'``; any other type as
+    ``CAST('<x as string>' AS <type>)``, which parses back to the same
+    value. Constant folding turns each text back into a ``Literal``,
+    so the spans still translate to data-source filters."""
+    if dtype == "string":
+        parts = [F.lit("CAST(X'"), F.hex(x), F.lit("' AS STRING)")]
+    elif dtype == "binary":
+        parts = [F.lit("X'"), F.hex(x), F.lit("'")]
+    else:
+        parts = [F.lit("CAST('"), x.cast("string"), F.lit(f"' AS {dtype})")]
+    return F.concat(*parts)
+
+
+def _span_pred(key_col: str, spans: "list[tuple[str, str]]") -> Column:
+    """OR-of-``between`` over ``(lo, hi)`` literal texts (see
+    :func:`_literal_sql`), nested two levels deep
     (:data:`PROBE_SPAN_FANOUT` leaves per super-span) so per-row
     evaluation short-circuits in ~2*(n/fanout) comparisons for misses.
-    Every piece translates to data-source And/Or/GtEq/LtEq filters, so
-    parquet prunes row groups at leaf granularity; depth is bounded by
-    the chunk count — two orders of magnitude under the Or-chain SOE
-    boundary."""
-    def _flat(group):
-        return functools.reduce(operator.or_, [
-            col.between(F.lit(lo), F.lit(hi)) for lo, hi in group
-        ])
+    Built as ONE SQL expression, so its cost on the driver does not
+    grow with the span count. Every piece translates to data-source
+    And/Or/GtEq/LtEq filters, so parquet prunes row groups at leaf
+    granularity; depth is bounded by the chunk count — two orders of
+    magnitude under the Or-chain SOE boundary."""
+    c = "`" + key_col.replace("`", "``") + "`"
 
-    if len(chunks) <= PROBE_SPAN_FANOUT:
-        return _flat(chunks)
+    def between(lo: str, hi: str) -> str:
+        return f"({c} >= {lo} AND {c} <= {hi})"
+
+    def flat(group) -> str:
+        return " OR ".join(between(lo, hi) for lo, hi in group)
+
+    if len(spans) <= PROBE_SPAN_FANOUT:
+        return F.expr(flat(spans))
     groups = [
-        chunks[i:i + PROBE_SPAN_FANOUT]
-        for i in range(0, len(chunks), PROBE_SPAN_FANOUT)
+        spans[i:i + PROBE_SPAN_FANOUT]
+        for i in range(0, len(spans), PROBE_SPAN_FANOUT)
     ]
-    return functools.reduce(operator.or_, [
-        col.between(F.lit(g[0][0]), F.lit(g[-1][1])) & _flat(g)
-        for g in groups
-    ])
+    return F.expr(" OR ".join(
+        f"({between(g[0][0], g[-1][1])} AND ({flat(g)}))" for g in groups
+    ))
 
 
-def _multi_span_filter(
-    index_df: DataFrame, key_col: str, batch_keys: DataFrame
-) -> Column:
+def _multi_span_filter(key_col: str, batch_keys: DataFrame,
+                       dtype: str) -> Column:
     """Regime 3: chunked span predicate for an over-cap batch with NO
     key collect. One tiny agg for the global [min, max]; one
     ``groupBy(surrogate bucket)`` agg whose result is bounded by
@@ -316,16 +343,21 @@ def _multi_span_filter(
     the predicate Column (a superset of the batch keys), or a
     ``lit(False)`` for an all-null batch."""
     key = F.col(key_col)
-    mm = batch_keys.agg(
-        F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-    ).collect()[0]
+
+    def bounds(df: DataFrame):
+        return df.select(
+            "lo", "hi", _literal_sql(F.col("lo"), dtype).alias("lo_sql"),
+            _literal_sql(F.col("hi"), dtype).alias("hi_sql"),
+        ).collect()
+
+    mm = bounds(batch_keys.agg(F.min(key).alias("lo"),
+                               F.max(key).alias("hi")))[0]
     lo, hi = mm["lo"], mm["hi"]
     if lo is None:
         return F.lit(False)
-    global_span = key.between(F.lit(lo), F.lit(hi))
+    global_span = _span_pred(key_col, [(mm["lo_sql"], mm["hi_sql"])])
     if lo == hi:
         return global_span
-    dtype = dict(batch_keys.dtypes).get(key_col)
     surr = _surrogate(dtype, lo, hi)
     if surr is None:
         return global_span
@@ -340,12 +372,14 @@ def _multi_span_filter(
     bucket = F.least(F.lit(k - 1), F.greatest(F.lit(0), F.floor(
         (pos_expr(key) - F.lit(lo_pos)) / F.lit(width)
     ).cast("int")))
-    rows = (
+    rows = bounds(
         batch_keys.where(key.isNotNull())
         .groupBy(bucket.alias("__b"))
-        .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
-        .collect()
+        .agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
     )
+    sql_of = {}
+    for r in rows:
+        sql_of[r["lo"]], sql_of[r["hi"]] = r["lo_sql"], r["hi_sql"]
     chunks = _merge_spans(sorted((r["lo"], r["hi"]) for r in rows))
     covered = sum(pos_of(h) - pos_of(l) + 1 for l, h in chunks)
     if covered / float(hi_pos - lo_pos + 1) >= PROBE_SPAN_COVERAGE:
@@ -353,7 +387,7 @@ def _multi_span_filter(
         # evaluation costs per-row comparisons and prunes nothing the
         # global span doesn't
         return global_span
-    return _chunk_span_pred(key, chunks)
+    return _span_pred(key_col, [(sql_of[l], sql_of[h]) for l, h in chunks])
 
 
 def pushdown_key_filter(
@@ -364,60 +398,86 @@ def pushdown_key_filter(
     """Restrict an index scan to a bounded batch's key set with a
     parquet-pushable predicate.
 
-    Returns ``index_df`` filtered to rows whose ``key_col`` is among
-    ``batch_keys``' distinct non-null values — semantically the same
-    rows an equality semi-join would keep (SQL equality never matches
-    NULL) in regimes 1-2, a SUPERSET in regime 3 — expressed as scan
-    predicates the parquet reader evaluates against row-group
-    statistics. Callers keep their semi-join as the exact membership
-    step, so every regime is correctness-equivalent. Three regimes by
+    Returns exactly the rows of ``index_df`` whose ``key_col`` is among
+    ``batch_keys``' non-null values: the rows an equality semi-join
+    would keep (SQL equality never matches NULL). Callers need no
+    semi-join of their own against the batch keys. How much of the
+    artifact is READ is decided by scan predicates the parquet reader
+    evaluates against row-group statistics, in three regimes by
     distinct key count (constants at module top, all set from
     scripts/probe_cap.py measurement):
 
     - ``<= PARQUET_IN_MAX`` (1 000): the threshold is raised so
       parquet receives the full In — set-exact row-group pruning
-      plus bloom skips for absent keys.
-    - ``<= PROBE_PUSHDOWN_MAX`` (5 000): the ``isin`` is still applied
-      — Catalyst evaluates it as an exact InSet at the scan — with
-      the keys' CHUNKED SPANS (driver-computed from the collected
-      keys, no extra jobs) pushed alongside for row-group pruning;
-      the parquet threshold is LEFT ALONE so the In is never the
-      Or-chain that StackOverflows (PROBE_CAP.json). If the session
-      threshold would admit the In anyway (user-raised), the isin is
-      dropped and the chunked spans carry the pruning alone
-      (ADVICE r13) — the SOE is unreachable from this function.
+      plus bloom skips for absent keys. The In is exact.
+    - ``<= PROBE_PUSHDOWN_MAX`` (5 000): the In is still applied —
+      Catalyst evaluates it as an exact InSet at the scan — with the
+      keys' CHUNKED SPANS pushed alongside for row-group pruning; the
+      parquet threshold is LEFT ALONE so the In is never the Or-chain
+      that StackOverflows (PROBE_CAP.json). If the session threshold
+      would admit the In anyway (user-raised), the In is dropped, the
+      chunked spans carry the pruning alone (ADVICE r13) and a
+      broadcast semi-join against the batch keys restores exactness —
+      the SOE is unreachable from this function.
     - above: no key collect; the batch is bucketed by a rank-
       preserving numeric surrogate (two small agg jobs, driver
       traffic bounded by the chunk count) into the same chunked
-      OR-of-between — over-cap backfills keep row-group pruning
-      whenever their keys cover a fraction of the keyspace, and fall
-      back to the single global span when they don't (uniform keys,
-      where no span scheme can prune)."""
-    rows = (
-        batch_keys.select(F.col(key_col))
-        .distinct()
-        .limit(PROBE_PUSHDOWN_MAX + 1)
-        .collect()
-    )
-    if len(rows) > PROBE_PUSHDOWN_MAX:
-        pred = _multi_span_filter(index_df, key_col, batch_keys)
-        return index_df.filter(pred)
-    keys = sorted(r[0] for r in rows if r[0] is not None)
-    if not keys:
-        return index_df.filter(F.lit(False))
+      OR-of-between, a superset made exact by the same broadcast
+      semi-join — over-cap backfills keep row-group pruning whenever
+      their keys cover a fraction of the keyspace, and fall back to
+      the single global span when they don't (uniform keys, where no
+      span scheme can prune).
+
+    The batch's distinct keys never reach Python. One job collects
+    them (at most ``PROBE_PUSHDOWN_MAX + 1``, sorted, as one array
+    row) into the JVM, where ``Column.isInCollection`` builds the In
+    from the JVM list; the same row carries the keys as SQL literal
+    texts, so the chunk bounds arrive as one string and the spans are
+    one ``F.expr``. The probe therefore costs a constant number of
+    Py4J round trips whatever the key count."""
     key = F.col(key_col)
+    dtype = batch_keys.select(key_col).schema[0].dataType.simpleString()
+    # ordered limit: a per-partition top-k merged in the result job (no
+    # separate single-partition exchange), so the collect runs the same
+    # 2 jobs as a plain collect() of the distinct keys
+    keys = (
+        batch_keys.select(key).where(key.isNotNull()).distinct()
+        .orderBy(key).limit(PROBE_PUSHDOWN_MAX + 1)
+        .agg(F.sort_array(F.collect_list(key)).alias("k"))
+    )
+    row = keys.select("k", F.to_json(F.transform(
+        "k", lambda x: _literal_sql(x, dtype)
+    )))._jdf.collectAsList().get(0)
+    jkeys = row.getList(0)
+    n = jkeys.size()
+
+    def exact(superset: DataFrame) -> DataFrame:
+        return superset.join(
+            F.broadcast(batch_keys.select(key_col).distinct()),
+            key_col, "left_semi",
+        )
+
+    if n > PROBE_PUSHDOWN_MAX:
+        return exact(index_df.filter(
+            _multi_span_filter(key_col, batch_keys, dtype)
+        ))
+    if n == 0:
+        return index_df.filter(F.lit(False))
+    in_keys = Column(key._jc.isInCollection(jkeys))
     spark = index_df.sparkSession
-    if len(keys) <= PARQUET_IN_MAX:
-        _ensure_in_pushdown(spark, len(keys))
-        return index_df.filter(key.isin(keys))
-    spans = _chunk_span_pred(key, _chunks_from_sorted(keys))
-    if _session_in_threshold(spark) >= len(keys):
+    if n <= PARQUET_IN_MAX:
+        _ensure_in_pushdown(spark, n)
+        return index_df.filter(in_keys)
+    spans = _span_pred(
+        key_col, _chunks_from_sorted(json.loads(row.getString(1)))
+    )
+    if _session_in_threshold(spark) >= n:
         # the session would ADMIT this >PARQUET_IN_MAX In to parquet as
         # the SOE Or-chain; spans-only keeps the scan safe and pruned,
-        # the caller's semi-join keeps membership exact (ADVICE r13)
-        return index_df.filter(spans)
+        # the semi-join keeps membership exact (ADVICE r13)
+        return exact(index_df.filter(spans))
     # InSet first: a hash-set miss short-circuits the span evaluation
-    return index_df.filter(key.isin(keys) & spans)
+    return index_df.filter(in_keys & spans)
 
 
 def range_cluster(

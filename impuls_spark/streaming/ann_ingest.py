@@ -193,18 +193,21 @@ def dedup_against_index(
     (:func:`impuls_spark.llm.probe.pushdown_key_filter`): on the
     id-clustered artifact layout (``AnnIndex.save``/``compact``) the
     scan skips every row group the batch can't touch, so the per-epoch
-    probe stops costing O(index). Only for trigger-bounded batches —
-    the flag costs one driver collect of the batch's distinct ids."""
+    probe stops costing O(index). The probe returns exactly the
+    batch's matches, so it replaces the semi-join. Only for
+    trigger-bounded batches — the flag costs one job collecting the
+    batch's distinct ids into the JVM."""
     uniq = batch.dropDuplicates([id_col])
     if existing_ids is not None:
         view = existing_ids.select(id_col)
         if pushdown_probe:
             from ..llm.probe import pushdown_key_filter
 
-            view = pushdown_key_filter(view, id_col, uniq)
-        matched = view.join(
-            F.broadcast(uniq.select(id_col)), id_col, "left_semi"
-        )
+            matched = pushdown_key_filter(view, id_col, uniq)
+        else:
+            matched = view.join(
+                F.broadcast(uniq.select(id_col)), id_col, "left_semi"
+            )
         uniq = uniq.join(F.broadcast(matched), id_col, "left_anti")
     return uniq
 

@@ -80,6 +80,43 @@ def test_ingest_frees_intermediates_deterministically(spark, tmp_path):
         assert _n_persistent(spark) == base, mode
 
 
+@pytest.mark.parametrize("mode", [False, True])
+@pytest.mark.parametrize("failure", ["live_marker", "append_fails"])
+def test_failed_ingest_pins_nothing(spark, tmp_path, monkeypatch,
+                                    spark_jobs, mode, failure):
+    """ingest() refuses on a live ``_COMPACTING`` marker on ``bands/``
+    before running a single job, and a failing append frees the
+    classification's checkpoints (the status included) before the
+    error propagates — in both join modes no RDD stays pinned."""
+    import os
+
+    from impuls_spark.llm import dedup
+    from impuls_spark.llm.dedup import DedupIndex
+    from impuls_spark.streaming.compact import compact_marker_path
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 30), path)
+    idx = DedupIndex.load(spark, path)
+    batch = _docs(spark, 25, 35)
+    if failure == "live_marker":
+        marker = compact_marker_path(f"{path}/bands")
+        open(marker, "w").close()  # fresh heartbeat: the holder is alive
+        match = "_COMPACTING"
+    else:
+        def fail(*jobs):
+            raise OSError("append failed")
+
+        monkeypatch.setattr(dedup, "parallel_writes", fail)
+        match = "append failed"
+    base, jobs = _n_persistent(spark), spark_jobs()
+    with pytest.raises((RuntimeError, OSError), match=match):
+        idx.ingest(batch, broadcast_new=mode)
+    assert _n_persistent(spark) == base
+    if failure == "live_marker":
+        assert spark_jobs() == jobs  # refused before any work
+        assert os.path.exists(marker)  # another run's marker: untouched
+
+
 def test_rid_frame_list_path_is_jvm_side(spark):
     from impuls_spark.streaming.compact import _rid_frame
 
