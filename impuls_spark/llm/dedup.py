@@ -933,6 +933,30 @@ def _classify_against_index(
     return status, new_hash, rest_bands, tuple(temps)
 
 
+def _accepted_rows(
+    status: DataFrame,
+    new_hash: DataFrame,
+    rest_bands: DataFrame,
+    id_col: str,
+    accept: "tuple[str, ...]" = ("novel",),
+    tracked: bool = False,
+) -> "tuple[DataFrame, DataFrame]":
+    """(hash rows, band rows) that an ingest appends for one
+    classification: the kernel's ``new_hash`` and ``rest_bands`` of the
+    docs whose status is in ``accept``, distinct, with the doc id as a
+    string ``__id`` column when ``tracked``. Shared by
+    :meth:`DedupIndex.ingest` and the streaming ingest sink, so neither
+    recomputes md5 or MinHash over the accepted docs."""
+    accepted = status.filter(F.col("status").isin(*accept)).select(id_col)
+    id_str = [F.col(id_col).cast("string").alias("__id")] if tracked else []
+    return (
+        new_hash.join(accepted, id_col, "left_semi")
+        .select("__h", *id_str).distinct(),
+        rest_bands.join(accepted, id_col, "left_semi")
+        .select("band", "key", *id_str).distinct(),
+    )
+
+
 def block_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1171,6 +1195,12 @@ BAND_SCHEMA = "band int, key string"
 ID_COL_SUFFIX = ", __id string"
 
 
+#: the banding of a streaming corpus whose ingest started before the
+#: sidecar manifest existed: ``ingest_with_dedup``'s own defaults
+STREAM_BANDING_DEFAULTS = {"text_col": "text", "id_col": "doc_id",
+                           "n_hashes": 6, "band_size": 2, "shingle_n": 3}
+
+
 class DedupIndex:
     """The at-rest form of :func:`incremental_dedup`'s corpus state
     (VERDICT r8 item 1): the distinct content-hash set and the distinct
@@ -1247,8 +1277,6 @@ class DedupIndex:
         ``target_shards`` pins the artifact file count (the
         ``compact`` contract); the default lets AQE size the shards
         (``probe.range_cluster``)."""
-        import json
-
         if n_hashes % band_size:
             raise ValueError("n_hashes must be a multiple of band_size")
         spark = corpus_df.sparkSession
@@ -1270,37 +1298,26 @@ class DedupIndex:
         # keys land in hash order and min/max stats can never prune.
         # One extra narrow shuffle at build time buys every future
         # epoch's probe scan; the bloom additionally skips absent keys
-        # (the common ingest case). ``target_shards`` pins the artifact
-        # file count; the default lets AQE size the shards
-        # (probe.range_cluster).
-        from .probe import key_bloom, range_cluster
+        # (the common ingest case).
+        from ..tools.rows import write_manifest
+        from .probe import write_keyed
 
         # the two artifact derivations are independent lineages over
         # corpus_df; overlapped, the build pays the slower of the two
         # writes instead of their sum (guide §2.6) — the manifest
         # (completeness marker) still lands strictly last
         parallel_writes(
-            lambda: key_bloom(
-                range_cluster(hashes, ["__h"], target_shards)
-                .write.mode("overwrite"), "__h",
-            ).parquet(f"{path}/hashes"),
-            lambda: key_bloom(
-                range_cluster(bands, ["key"], target_shards)
-                .write.mode("overwrite"), "key",
-            ).parquet(f"{path}/bands"),
+            lambda: write_keyed(hashes, f"{path}/hashes", "__h",
+                                target_shards=target_shards),
+            lambda: write_keyed(bands, f"{path}/bands", "key",
+                                target_shards=target_shards),
         )
         meta = {
             "text_col": text_col, "id_col": id_col, "n_hashes": n_hashes,
             "band_size": band_size, "shingle_n": shingle_n,
             "track_ids": bool(track_ids),
         }
-        from ..tools.rows import single_row_df
-
-        # JVM-built single row: createDataFrame+coalesce(1) paid ~5 s
-        # of sequential Python-worker round-trips per manifest (r14)
-        single_row_df(
-            spark, "manifest string", json.dumps(meta)
-        ).write.mode("overwrite").parquet(f"{path}/manifest")
+        write_manifest(spark, f"{path}/manifest", meta)
         return cls(spark, path, meta)
 
     @classmethod
@@ -1316,15 +1333,12 @@ class DedupIndex:
         here instead of resuming silently. ``force=True`` is the
         recovery path: load SOLELY to re-run ``remove(..., force=True)``
         / ``compact(force=True)`` to convergence, never to classify."""
-        import json
-
         from ..streaming.compact import check_not_compacting
+        from ..tools.rows import read_manifest
 
         if not force:
             check_not_compacting(spark, path, "load")  # remove in flight
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = read_manifest(spark, f"{path}/manifest", required=True)
         for key in ("text_col", "id_col", "n_hashes", "band_size",
                     "shingle_n"):
             if key not in meta:
@@ -1384,39 +1398,17 @@ class DedupIndex:
         epoch's rows will be committed with the same content (a replay
         rewrites its directory wholesale), so at worst a candidate is
         marked duplicate slightly early, never novel wrongly."""
-        from ..streaming.ingest import _read_manifest
+        from ..tools.rows import manifest_params, read_manifest
 
-        passed = {
-            "text_col": text_col, "id_col": id_col, "n_hashes": n_hashes,
-            "band_size": band_size, "shingle_n": shingle_n,
-        }
-        manifest = _read_manifest(spark, f"{corpus_path}/_index/manifest")
-        if manifest is not None:
-            clash = {
-                k: (v, manifest[k]) for k, v in passed.items()
-                if v is not None and k in manifest and v != manifest[k]
-            }
-            if clash:
-                raise ValueError(
-                    f"banding parameters disagree with the stream's "
-                    f"manifest at {corpus_path}/_index/manifest: "
-                    f"{ {k: f'passed {a!r} != manifest {b!r}' for k, (a, b) in clash.items()} } "
-                    "— a mismatched view would silently miss near-"
-                    "duplicates; drop the kwargs (the manifest is "
-                    "authoritative)"
-                )
-            meta = dict(manifest)
-        else:
-            # pre-manifest corpus: trust the caller, defaulting to
-            # ingest_with_dedup's own defaults
-            defaults = {
-                "text_col": "text", "id_col": "doc_id", "n_hashes": 6,
-                "band_size": 2, "shingle_n": 3,
-            }
-            meta = {
-                k: (v if v is not None else defaults[k])
-                for k, v in passed.items()
-            }
+        manifest = read_manifest(spark, f"{corpus_path}/_index/manifest")
+        meta = manifest_params(
+            manifest,
+            {"text_col": text_col, "id_col": id_col, "n_hashes": n_hashes,
+             "band_size": band_size, "shingle_n": shingle_n},
+            STREAM_BANDING_DEFAULTS,
+            f"{corpus_path}/_index/manifest",
+            "a mismatched view would silently miss near-duplicates",
+        )
         idx = cls(spark, f"{corpus_path}/_index", meta)
         # a "track_ids" manifest key marks a FLAT batch layout
         # (DedupIndex.build wrote it — takedown_stream_corpus rebuilds
@@ -1562,41 +1554,29 @@ class DedupIndex:
             m["n_hashes"], m["band_size"], m["shingle_n"],
             broadcast_new=broadcast_new, cut=True,
         )
-        tracked = self.meta.get("track_ids", False)
-        id_str = F.col(id_col).cast("string").alias("__id")
         # appended batch files carry the same within-file key order and
         # bloom as the built artifact (local sort only — no extra
         # shuffle), so probes prune appended files too until the next
         # compact folds them into the range-partitioned layout
-        from .probe import key_bloom
+        from .probe import write_keyed
 
         try:
             # a compaction that started during classification
             check_markers()
-            accepted = status.filter(
-                F.col("status").isin(*accept)
-            ).select(id_col)
+            hashes, bands = _accepted_rows(
+                status, new_hash, rest_bands, id_col, accept,
+                tracked=self.meta.get("track_ids", False),
+            )
             # both append inputs derive from checkpointed frames or
             # index-independent scans (new_hash is md5 over the batch),
             # so neither re-reads the store and append order is free —
             # overlap the two appends so the ingest pays the slower one
             # (guide §2.6)
             parallel_writes(
-                lambda: key_bloom(
-                    rest_bands.join(accepted, id_col, "left_semi")
-                    .select("band", "key",
-                            *([id_str] if tracked else []))
-                    .distinct()
-                    .sortWithinPartitions("key")
-                    .write.mode("append"), "key",
-                ).parquet(f"{self.path}/bands"),
-                lambda: key_bloom(
-                    new_hash.join(accepted, id_col, "left_semi")
-                    .select("__h", *([id_str] if tracked else []))
-                    .distinct()
-                    .sortWithinPartitions("__h")
-                    .write.mode("append"), "__h",
-                ).parquet(f"{self.path}/hashes"),
+                lambda: write_keyed(bands, f"{self.path}/bands", "key",
+                                    append=True),
+                lambda: write_keyed(hashes, f"{self.path}/hashes", "__h",
+                                    append=True),
             )
         except BaseException:
             free_local_checkpoint(status)

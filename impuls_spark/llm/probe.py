@@ -10,12 +10,13 @@ reads the index's whole key column (~800 GB per micro-batch at a
 
 The fix is two-sided:
 
-- **Layout**: the index artifacts are written range-partitioned and
-  sorted on their probe key (``DedupIndex.build``/``ingest``/
-  ``compact``, ``AnnIndex.save``/``append``/``compact``,
-  ``absorb_stream`` — all via ``compact_flat_dir(cluster_by=...)`` or
-  inline), so every file owns a disjoint key range and every row
-  group a tight span.
+- **Layout**: every index artifact file is sorted on its probe key
+  and carries a parquet bloom filter on it, written by the one writer
+  :func:`write_keyed` (``DedupIndex.build``/``ingest``/``compact``,
+  ``AnnIndex.save``/``append``/``retrain``/``compact``,
+  ``absorb_stream`` and the two stream sinks). Built and compacted
+  artifacts are also range-partitioned on the key, so every file owns
+  a disjoint key range and every row group a tight span.
 - **Probe**: :func:`pushdown_key_filter` compiles the batch's key set
   into a parquet-pushable predicate, in one of three regimes by
   distinct key count (measured crossovers, ``scripts/probe_cap.py``,
@@ -530,3 +531,43 @@ def range_cluster(
             )
             out = df.repartitionByRange(n, *cols)
     return out.sortWithinPartitions(*key_cols)
+
+
+def write_keyed(
+    df: DataFrame,
+    path: str,
+    *keys: str,
+    append: bool = False,
+    epoch_col: "str | None" = None,
+    target_shards: "int | None" = None,
+    observe=None,
+) -> None:
+    """Write an index artifact in the probe layout: every file sorted
+    on ``keys`` with a parquet bloom filter on them (:func:`key_bloom`).
+    The one writer of the dedup, ANN and stream-sidecar artifacts, in
+    three layouts:
+
+    - default: RANGE-CLUSTERED overwrite (:func:`range_cluster`, which
+      takes ``target_shards``) — build, save, retrain and compact;
+    - ``append=True``: KEY-SORTED append — batch ingests and appends;
+      a local sort only, and the next compact re-clusters the files;
+    - ``epoch_col``: KEY-SORTED dynamic overwrite of the ``epoch_col``
+      partition — the stream sinks (a replayed epoch rewrites only its
+      own directory; the partition value is constant per write, so the
+      local sort survives the writer's partition re-sort).
+
+    ``observe`` (an ``Observation``) counts the written rows as
+    ``rows``, above the range exchange so its bounds-sampling pass is
+    not counted."""
+    if append or epoch_col:
+        out = df.sortWithinPartitions(*keys)
+    else:
+        out = range_cluster(df, keys, target_shards)
+    if observe is not None:
+        out = out.observe(observe, F.count(F.lit(1)).alias("rows"))
+    writer = key_bloom(out.write.mode("append" if append else "overwrite"),
+                       *keys)
+    if epoch_col:
+        writer = writer.option("partitionOverwriteMode", "dynamic") \
+            .partitionBy(epoch_col)
+    writer.parquet(path)

@@ -1301,11 +1301,9 @@ def _saved_artifacts(spark, path: str) -> "tuple[dict, dict[str, str]]":
     r11); pre-r11 layouts fall back to footer inference, safe because
     build guarantees non-empty artifact dirs (unlike the maybe-empty
     dedup sidecars)."""
-    import json
+    from ..tools.rows import read_manifest
 
-    meta = json.loads(
-        spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-    )
+    meta = read_manifest(spark, f"{path}/manifest", required=True)
     names = ["cells"] + (["pq_codes"] if meta["with_pq"] else [])
     return meta, {
         name: meta.get("cells_ddl" if name == "cells" else "codes_ddl")
@@ -1635,7 +1633,7 @@ class AnnIndex:
         from ..streaming.ann_ingest import check_no_stream_epochs
         from ..streaming.compact import check_not_compacting, maintenance
 
-        from .probe import key_bloom
+        from .probe import write_keyed
 
         spark = new_vectors.sparkSession
         # Root marker FIRST, fences under it (ADVICE r11): holding the
@@ -1662,15 +1660,12 @@ class AnnIndex:
             # The two appends target disjoint artifact dirs under the
             # one held root marker — overlap them (guide §2.6); the
             # fresh-listing reads happen after both land.
-            jobs = [lambda: key_bloom(
-                new_cells.sortWithinPartitions(self.id_col)
-                .write.mode("append"), self.id_col,
-            ).parquet(f"{path}/cells")]
+            jobs = [lambda: write_keyed(new_cells, f"{path}/cells",
+                                        self.id_col, append=True)]
             if new_codes is not None:
-                jobs.append(lambda: key_bloom(
-                    new_codes.sortWithinPartitions(self.id_col)
-                    .write.mode("append"), self.id_col,
-                ).parquet(f"{path}/pq_codes"))
+                jobs.append(lambda: write_keyed(
+                    new_codes, f"{path}/pq_codes", self.id_col, append=True
+                ))
             parallel_writes(*jobs)
             cells = spark.read.parquet(f"{path}/cells")
             model = None
@@ -1802,13 +1797,8 @@ class AnnIndex:
                 self.id_col, self.vec_col, capacity=carried_cap,
             )
 
-        import json
-        from contextlib import ExitStack
-
         from ..streaming.ann_ingest import check_no_stream_epochs
         from ..streaming.compact import maintenance
-
-        from .probe import key_bloom, range_cluster
 
         spark = self.vectors.sparkSession
         # marker FIRST, fence under it (ADVICE r11): with the root
@@ -1818,67 +1808,11 @@ class AnnIndex:
         # set and would absorb into a corrupted index — absorb first.
         with maintenance(spark, path, stale_after_sec, force) as run:
             run.guard(check_no_stream_epochs, spark, path, "retrain")
-            # pin around the range writes: the boundary-sampling job
-            # would otherwise re-run the whole re-assignment /
-            # re-encode lineage (no exchange to shuffle-reuse).
-            # The rewritten artifacts are independent frames under ONE
-            # held root marker, so write order is free: overlap them
-            # (guide §2.6) and land the manifest strictly last.
-            with ExitStack() as stack:
-                cells_p = stack.enter_context(_pinned_for_write(cells))
-                jobs = [
-                    lambda: anchors.write.mode("overwrite").parquet(
-                        f"{path}/anchors"),
-                    lambda: key_bloom(
-                        range_cluster(cells_p, [self.id_col],
-                                      target_shards)
-                        .write.mode("overwrite"), self.id_col,
-                    ).parquet(f"{path}/cells"),
-                ]
-                if model is not None:
-                    new_codes, new_books = model
-                    codes_p = stack.enter_context(
-                        _pinned_for_write(new_codes))
-                    jobs.append(lambda: new_books.write.mode("overwrite")
-                                .parquet(f"{path}/pq_codebooks"))
-                    jobs.append(lambda: key_bloom(
-                        range_cluster(codes_p, [self.id_col],
-                                      target_shards)
-                        .write.mode("overwrite"), self.id_col,
-                    ).parquet(f"{path}/pq_codes"))
-                parallel_writes(*jobs)
-            retrain_meta = {
-                "dim": self.dim, "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "with_pq": self.model is not None,
-                "anchors_stored": True,
-                "cells_ddl": _ddl_of(cells),
-            }
-            if carried_cap is not None:
-                retrain_meta["capacity"] = dict(carried_cap._asdict())
-            if model is not None:
-                retrain_meta["codes_ddl"] = _ddl_of(new_codes)
-            from ..tools.rows import single_row_df
-
-            # JVM-built single row (r14: createDataFrame+coalesce(1)
-            # paid ~5 s of Python-worker round-trips per manifest)
-            single_row_df(
-                spark, "manifest string", json.dumps(retrain_meta)
-            ).write.mode("overwrite").parquet(f"{path}/manifest")
+            self._write(path, anchors, cells, model, carried_cap,
+                        target_shards)
         # fresh-read handle, same discipline as append(path=): frozen
         # listing over exactly the rewritten artifacts
-        stored_anchors = spark.read.parquet(f"{path}/anchors")
-        stored_model = None
-        if model is not None:
-            stored_model = (
-                spark.read.parquet(f"{path}/pq_codes"),
-                spark.read.parquet(f"{path}/pq_codebooks"),
-            )
-        return AnnIndex(
-            self.vectors, stored_anchors,
-            spark.read.parquet(f"{path}/cells"), stored_model,
-            self.dim, self.id_col, self.vec_col, capacity=carried_cap,
-        )
+        return AnnIndex.load(spark, path, self.vectors)
 
     @staticmethod
     def compact(spark, path: str, target_shards: int = 1,
@@ -2001,68 +1935,72 @@ class AnnIndex:
         saved layout alone. ``target_shards`` pins the artifact file
         count (``compact``-style); the default lets AQE size the
         shards (see ``probe.range_cluster``)."""
-        import json
+        self._write(
+            path, self.anchors.select(F.col(self.id_col), F.col(self.vec_col)),
+            self.cells, self.model, self.capacity, target_shards,
+        )
+        return self
 
-        # id-clustered layout: files own disjoint id ranges, row
-        # groups tight id spans (+ bloom), so the streaming ingest's
-        # per-epoch id-dedup probe (dedup_against_index +
-        # pushdown_key_filter) skips the row groups a batch can't
-        # touch; the pin keeps the k x dim assignment kernel from
-        # running twice per save (range boundary sampling)
+    def _write(self, path: str, anchors: DataFrame, cells: DataFrame,
+               model, capacity, target_shards: "int | None") -> None:
+        """Write a full saved layout under ``path`` — anchors, cells
+        and, with ``model``, pq_codes and pq_codebooks — then its
+        manifest, strictly last (the completeness marker). The shared
+        body of :meth:`save` and :meth:`retrain`.
+
+        cells and codes are id-clustered (``probe.write_keyed``): files
+        own disjoint id ranges, row groups tight id spans (+ bloom), so
+        the streaming ingest's per-epoch id-dedup probe
+        (``dedup_against_index``) skips the row groups a batch can't
+        touch. Each is pinned around its range write, entered BEFORE
+        the pool: the boundary-sampling job would otherwise re-run the
+        whole assignment / encode lineage (no exchange to shuffle-
+        reuse). The artifacts are independent frames, so their writes
+        overlap (guide §2.6: the write pays the slowest artifact, not
+        the sum)."""
         from contextlib import ExitStack
 
-        from .probe import key_bloom, range_cluster
+        from ..tools.rows import write_manifest
 
-        # the artifacts are independent frames — overlap their writes
-        # (guide §2.6: the save pays the slowest artifact, not the
-        # sum); the pins are entered BEFORE the pool so the range
-        # writes' boundary-sampling jobs hit the cache, and the
-        # manifest (completeness marker) still lands strictly last
+        from .probe import write_keyed
+
         meta = {
             "dim": self.dim, "id_col": self.id_col,
             "vec_col": self.vec_col,
-            "with_pq": self.model is not None,
+            "with_pq": model is not None,
             "anchors_stored": True,
             # artifact schemas as data (r10 adjudicated-minor closed):
             # maintenance rewrites (compact/remove) read with these
             # instead of inferring DDL from whatever footers are live
-            "cells_ddl": _ddl_of(self.cells),
+            "cells_ddl": _ddl_of(cells),
         }
-        if self.capacity is not None:
-            meta["capacity"] = dict(self.capacity._asdict())
+        if capacity is not None:
+            meta["capacity"] = dict(capacity._asdict())
         with ExitStack() as stack:
-            cells_p = stack.enter_context(_pinned_for_write(self.cells))
+            def keyed(df: DataFrame, name: str):
+                pinned = stack.enter_context(_pinned_for_write(df))
+                return lambda: write_keyed(
+                    pinned, f"{path}/{name}", self.id_col,
+                    target_shards=target_shards,
+                )
+
             jobs = [
-                lambda: key_bloom(
-                    range_cluster(cells_p, [self.id_col], target_shards)
-                    .write.mode("overwrite"), self.id_col,
-                ).parquet(f"{path}/cells"),
-                lambda: self.anchors.select(
-                    F.col(self.id_col), F.col(self.vec_col)
-                ).write.mode("overwrite").parquet(f"{path}/anchors"),
+                keyed(cells, "cells"),
+                lambda: anchors.write.mode("overwrite").parquet(
+                    f"{path}/anchors"),
             ]
-            if self.model is not None:
-                codes, books = self.model
-                codes_p = stack.enter_context(_pinned_for_write(codes))
-                jobs.append(lambda: key_bloom(
-                    range_cluster(codes_p, [self.id_col], target_shards)
-                    .write.mode("overwrite"), self.id_col,
-                ).parquet(f"{path}/pq_codes"))
-                jobs.append(lambda: books.write.mode("overwrite")
-                            .parquet(f"{path}/pq_codebooks"))
+            if model is not None:
+                codes, books = model
+                jobs += [
+                    keyed(codes, "pq_codes"),
+                    lambda: books.write.mode("overwrite").parquet(
+                        f"{path}/pq_codebooks"),
+                ]
                 meta["codes_ddl"] = _ddl_of(codes)
             parallel_writes(*jobs)
-        from ..tools.rows import single_row_df
-
         # the manifest rides parquet too, so the layout is pure-Spark
-        # readable on any storage the session can reach. JVM-built
-        # single row (r14: createDataFrame+coalesce(1) paid ~5 s of
-        # Python-worker round-trips per manifest)
-        single_row_df(
-            self.vectors.sparkSession, "manifest string",
-            json.dumps(meta),
-        ).write.mode("overwrite").parquet(f"{path}/manifest")
-        return self
+        # readable on any storage the session can reach
+        write_manifest(self.vectors.sparkSession, f"{path}/manifest", meta)
 
     @classmethod
     def load(
@@ -2093,15 +2031,12 @@ class AnnIndex:
         ``retrain(force=True)`` / a ``remove``/``compact`` re-run,
         never to serve queries (the artifacts are untrustworthy until
         maintenance converges)."""
-        import json
-
         from ..streaming.compact import check_not_compacting
+        from ..tools.rows import read_manifest
 
         if not force:
             check_not_compacting(spark, path, "load")  # retrain/remove
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = read_manifest(spark, f"{path}/manifest", required=True)
         if not force:
             check_not_compacting(spark, f"{path}/cells", "load")
             if meta["with_pq"]:
@@ -2155,22 +2090,19 @@ class AnnIndex:
         content maintenance (``append(path=)``/``remove``/``retrain
         (path=)``) is refused while stream epochs exist, so this
         handle is for serving — absorb to get a maintainable index."""
-        import json
-
         from ..streaming.ann_ingest import (
             _read_stream_rows,
             check_stream_parity,
         )
         from ..streaming.compact import check_not_compacting
+        from ..tools.rows import read_manifest
 
         check_not_compacting(spark, path, "read the stream view of")
         # a crashed epoch that wrote cells but not codes must repair
         # (restart the ingest) before serving, not silently drop the
         # vector from the ADC rerank
         check_stream_parity(spark, path, upto_epoch)
-        meta = json.loads(
-            spark.read.parquet(f"{path}/manifest").collect()[0]["manifest"]
-        )
+        meta = read_manifest(spark, f"{path}/manifest", required=True)
         if not meta.get("anchors_stored"):
             raise ValueError(
                 f"index at {path} stores no anchors — only saved "

@@ -323,11 +323,9 @@ def s10_ann_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 40))
     )
     anchors = emb.filter(F.col("vec_id") < 4)
-    # pushdown_probe: the sink's production flag — batch ids compile
-    # into a parquet In predicate so the id-clustered index scan skips
-    # untouched row groups (semantics identical; the oracle proves it)
-    uniq = dedup_against_index(stream, day0_ids, "vec_id",
-                               pushdown_probe=True)
+    # batch ids compile into a parquet In predicate, as in the sink, so
+    # the id-clustered index scan skips untouched row groups
+    uniq = dedup_against_index(stream, day0_ids, "vec_id")
     return ivf_assign(uniq, anchors)
 
 

@@ -216,12 +216,12 @@ def write_training_shards(
     # no-op takedown — must be able to validate instead of trusting
     # repeated kwargs. Appends validate against it; a mismatch would
     # interleave two incompatible shard laws in one layout.
-    import json
+    from ..tools.rows import read_manifest, write_manifest
 
     meta = {"n_shards": int(n_shards), "key_col": key_col, "salt": salt,
             "files_per_shard": int(max(files_per_shard, 1))}
     spark = df.sparkSession
-    existing = _read_shards_manifest(spark, path)
+    existing = read_manifest(spark, f"{path}/_shards_manifest")
     if existing is not None and mode == "append" and existing != meta:
         raise ValueError(
             f"shard layout at {path} was written with {existing}; "
@@ -241,32 +241,7 @@ def write_training_shards(
     # overwrite truncates the tree (manifest included) — always re-pin;
     # append pins only a pre-manifest layout's first post-upgrade write
     if mode != "append" or existing is None:
-        from ..tools.rows import single_row_df
-
-        # JVM-built single row (r14: createDataFrame+coalesce(1) paid
-        # ~5 s of Python-worker round-trips per manifest)
-        single_row_df(
-            spark, "manifest string", json.dumps(meta)
-        ).write.mode("overwrite").parquet(f"{path}/_shards_manifest")
-
-
-def _read_shards_manifest(spark: SparkSession, path: str) -> "dict | None":
-    """The layout-law manifest under a shard tree, or None for layouts
-    written before the manifest existed."""
-    import json
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.schema("manifest string").parquet(
-            f"{path}/_shards_manifest"
-        ).collect()
-    except AnalysisException as exc:
-        if ("PATH_NOT_FOUND" in str(exc)
-                or "Path does not exist" in str(exc)):
-            return None
-        raise
-    return json.loads(rows[0]["manifest"]) if rows else None
+        write_manifest(spark, f"{path}/_shards_manifest", meta)
 
 
 def read_training_shards(
@@ -329,8 +304,9 @@ def compact_shards(
     dropped, in-flight ones finish or crash under their own markers,
     and the abandoned root marker fail-fasts loaders either way."""
     from ..streaming.compact import _HadoopFS, compact_flat_dir, maintenance
+    from ..tools.rows import read_manifest
 
-    manifest = _read_shards_manifest(spark, path)
+    manifest = read_manifest(spark, f"{path}/_shards_manifest")
     if manifest is None:
         raise ValueError(
             f"{path} has no _shards_manifest (pre-manifest layout): "
@@ -436,31 +412,20 @@ def remove_from_shards(
     counts over the affected shards only)."""
     from ..llm.sampling import _SHARD_DIGITS
     from ..streaming.compact import _HadoopFS, _rid_frame, maintenance
+    from ..tools.rows import manifest_params, read_manifest
 
-    manifest = _read_shards_manifest(spark, path)
-    passed = {"key_col": key_col, "salt": salt,
-              "files_per_shard": files_per_shard}
-    if manifest is not None:
-        clash = {
-            k: (v, manifest[k]) for k, v in passed.items()
-            if v is not None and k in manifest and v != manifest[k]
-        }
-        if clash:
-            raise ValueError(
-                f"layout parameters disagree with the shard manifest at "
-                f"{path}/_shards_manifest: "
-                f"{ {k: f'passed {a!r} != manifest {b!r}' for k, (a, b) in clash.items()} } "
-                "— a mismatched salt/key would locate the wrong shard "
-                "directories and silently remove nothing; drop the "
-                "kwargs (the manifest is authoritative)"
-            )
-        key_col = manifest["key_col"]
-        salt = manifest["salt"]
-        files_per_shard = manifest["files_per_shard"]
-    else:  # pre-manifest layout: trust the caller / writer defaults
-        key_col = key_col if key_col is not None else "doc_id"
-        salt = salt if salt is not None else "shard"
-        files_per_shard = files_per_shard if files_per_shard else 1
+    law = manifest_params(
+        read_manifest(spark, f"{path}/_shards_manifest"),
+        {"key_col": key_col, "salt": salt,
+         "files_per_shard": files_per_shard},
+        # pre-manifest layout: the writer's defaults
+        {"key_col": "doc_id", "salt": "shard", "files_per_shard": 1},
+        f"{path}/_shards_manifest",
+        "a mismatched salt/key would locate the wrong shard directories "
+        "and silently remove nothing",
+    )
+    key_col, salt = law["key_col"], law["salt"]
+    files_per_shard = law["files_per_shard"]
 
     fs = _HadoopFS(spark, path)
     shard_dirs = {

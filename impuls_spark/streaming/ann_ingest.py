@@ -35,13 +35,12 @@ infrastructure, mirroring its own dedup-streaming design
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..llm.probe import write_keyed
 from ..tools.concurrency import parallel_writes
-from ..tools.rows import empty_df
+from ..tools.rows import read_manifest, read_or_empty
 from .compact import EPOCH_COL, _epoch_dirs, _HadoopFS, check_not_compacting
 from .ingest import _read_or_empty
 
@@ -86,13 +85,6 @@ def check_no_stream_epochs(
         )
 
 
-def _index_meta(spark: SparkSession, index_path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(f"{index_path}/manifest")
-        .collect()[0]["manifest"]
-    )
-
-
 def _m_of(codes_ddl: str) -> int:
     return sum(
         1 for part in codes_ddl.split(",")
@@ -122,7 +114,7 @@ def check_stream_parity(
     finish the codes fold. A crashed ingest can never produce
     codes-only (write order), so the direction disambiguates the two
     crash kinds. No-op for cells-only indexes."""
-    meta = _index_meta(spark, index_path)
+    meta = read_manifest(spark, f"{index_path}/manifest", required=True)
     if not meta["with_pq"]:
         return
     fs = _HadoopFS(spark, index_path)
@@ -154,15 +146,9 @@ def _read_stream_rows(
     bounded to ``__epoch <= upto_epoch`` when given; an absent sidecar
     reads as an empty frame (explicit schema — same r8 lesson as
     ``ingest._read_or_empty``: inference throws on empty trees)."""
-    from pyspark.errors import AnalysisException
-
-    sdir = _stream_dir(index_path, name)
-    try:
-        full = spark.read.schema(f"{ddl}, {EPOCH_COL} int").parquet(sdir)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return empty_df(spark, ddl)
-        raise
+    full = read_or_empty(
+        spark, _stream_dir(index_path, name), f"{ddl}, {EPOCH_COL} int"
+    )
     if upto_epoch is not None:
         full = full.filter(F.col(EPOCH_COL) <= int(upto_epoch))
     return full.drop(EPOCH_COL)
@@ -172,7 +158,6 @@ def dedup_against_index(
     batch: DataFrame,
     existing_ids: "DataFrame | None",
     id_col: str,
-    pushdown_probe: bool = False,
 ) -> DataFrame:
     """One ingest epoch's id-dedup — in-batch first (at-least-once
     delivery can repeat a row INSIDE a micro-batch), then against the
@@ -183,31 +168,22 @@ def dedup_against_index(
     ``batch LEFT ANTI existing`` can't broadcast its (index-sized)
     right side, so Spark would shuffle BOTH sides every epoch — at a
     billion vectors that's the whole id column through the wire per
-    micro-batch. Instead the bounded batch broadcasts into a semi-join
-    against the index scan (map-side, one column read, no exchange on
-    the index), and the matched set — at most batch-sized — broadcasts
-    back into the anti-join.
-
-    ``pushdown_probe=True`` additionally compiles the batch's ids into
-    a parquet ``In`` predicate on the index scan
+    micro-batch. Instead the batch's ids compile into a parquet ``In``
+    predicate on the index scan
     (:func:`impuls_spark.llm.probe.pushdown_key_filter`): on the
     id-clustered artifact layout (``AnnIndex.save``/``compact``) the
     scan skips every row group the batch can't touch, so the per-epoch
     probe stops costing O(index). The probe returns exactly the
-    batch's matches, so it replaces the semi-join. Only for
-    trigger-bounded batches — the flag costs one job collecting the
-    batch's distinct ids into the JVM."""
+    batch's matches — at most batch-sized — which broadcast back into
+    the anti-join. Only for trigger-bounded batches: the probe costs
+    one job collecting the batch's distinct ids into the JVM."""
     uniq = batch.dropDuplicates([id_col])
     if existing_ids is not None:
-        view = existing_ids.select(id_col)
-        if pushdown_probe:
-            from ..llm.probe import pushdown_key_filter
+        from ..llm.probe import pushdown_key_filter
 
-            matched = pushdown_key_filter(view, id_col, uniq)
-        else:
-            matched = view.join(
-                F.broadcast(uniq.select(id_col)), id_col, "left_semi"
-            )
+        matched = pushdown_key_filter(
+            existing_ids.select(id_col), id_col, uniq
+        )
         uniq = uniq.join(F.broadcast(matched), id_col, "left_anti")
     return uniq
 
@@ -252,7 +228,7 @@ def ingest_vectors(
     ``retrain(path=)`` refuses while un-absorbed stream epochs exist.
     """
     spark = stream.sparkSession
-    meta = _index_meta(spark, index_path)
+    meta = read_manifest(spark, f"{index_path}/manifest", required=True)
     if not meta.get("anchors_stored"):
         raise ValueError(
             f"index at {index_path} stores no anchors (a "
@@ -289,30 +265,21 @@ def ingest_vectors(
         # one routing input feeds two writes (cells + codes) — freeze
         # it so the source scan and anti-join run once
         uniq = dedup_against_index(
-            batch, existing, id_col, pushdown_probe=True
+            batch, existing, id_col
         ).localCheckpoint(eager=True)
         new_cells = ivf_assign(uniq, anchors, id_col, vec_col) \
             .withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-        # epoch files id-sorted + bloomed (constant partition value, so
-        # the local sort survives the writer's partition re-sort): the
-        # NEXT batch's sidecar probe prunes them too
-        from ..llm.probe import key_bloom
-
-        jobs = [lambda: key_bloom(
-            new_cells.sortWithinPartitions(id_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic"), id_col,
-        ).partitionBy(EPOCH_COL).parquet(cells_stream)]
+        # epoch files id-sorted + bloomed: the NEXT batch's sidecar
+        # probe prunes them too
+        jobs = [lambda: write_keyed(new_cells, cells_stream, id_col,
+                                    epoch_col=EPOCH_COL)]
         if with_pq:
             books = spark.read.parquet(f"{index_path}/pq_codebooks")
             new_codes = pq_encode(
                 uniq, books, dim, _m_of(codes_ddl), id_col, vec_col
             ).withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-            jobs.append(lambda: key_bloom(
-                new_codes.sortWithinPartitions(id_col)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic"), id_col,
-            ).partitionBy(EPOCH_COL).parquet(codes_stream))
+            jobs.append(lambda: write_keyed(new_codes, codes_stream, id_col,
+                                            epoch_col=EPOCH_COL))
         # both epoch writes derive from the checkpointed `uniq` and
         # target disjoint sidecar dirs — overlap them (guide §2.6)
         parallel_writes(*jobs)

@@ -823,7 +823,9 @@ def compact_flat_dir(
 ) -> "dict[str, int]":
     """Fold a FLAT parquet directory that accretes one small file per
     append (the ``DedupIndex.ingest`` shape — no epoch partitions to
-    swap) into ``target_shards`` files.
+    swap) into ``target_shards`` files. ``cluster_by`` writes the fold
+    in the probe layout (``probe.write_keyed``); without it the fold is
+    a plain repartition whose files ``sort_within`` sorts.
 
     ONLY valid when a transient extra copy of a row is harmless:
     membership SETS consumed through semi-joins (index hashes/band
@@ -904,28 +906,23 @@ def compact_flat_dir(
             # a pushed-down In predicate over a bounded batch's keys
             # reads O(batch) row groups instead of the whole artifact —
             # measured ~flat probe cost when the artifact grows 10x
-            folded = folded.repartitionByRange(
-                max(target_shards, 1), *[F.col(c) for c in cluster_by]
-            )
-            local_sort = list(cluster_by) + [
-                c for c in (sort_within or []) if c not in cluster_by
-            ]
+            from ..llm.probe import write_keyed
+
+            write_keyed(folded, staging, *cluster_by,
+                        target_shards=max(target_shards, 1),
+                        observe=obs_out)
         else:
             folded = folded.repartition(max(target_shards, 1))
-            # layouts whose files are sorted runs (training shards:
-            # shuffle_key order) must come out of the fold still sorted
-            local_sort = list(sort_within or [])
-        if local_sort:
-            folded = folded.sortWithinPartitions(
-                *[F.col(c) for c in local_sort]
-            )
-        folded = folded.observe(obs_out, F.count(F.lit(1)).alias("rows"))
-        writer = folded.write.mode("overwrite")
-        if cluster_by:
-            from ..llm.probe import key_bloom
-
-            writer = key_bloom(writer, *cluster_by)
-        writer.parquet(staging)
+            if sort_within:
+                # layouts whose files are sorted runs (training shards:
+                # shuffle_key order) must come out of the fold still
+                # sorted
+                folded = folded.sortWithinPartitions(
+                    *[F.col(c) for c in sort_within]
+                )
+            folded.observe(
+                obs_out, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite").parquet(staging)
 
         old = [n for n in fs.list_names(path)
                if n.endswith(".parquet") and not n.startswith((".", "_"))]

@@ -27,20 +27,26 @@ no stream-stream joins, no unbounded streaming state.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm.dedup import (
     BAND_SCHEMA,
     HASH_SCHEMA,
-    _band_keys,
-    incremental_dedup,
-    minhash_signatures,
+    STREAM_BANDING_DEFAULTS,
+    _accepted_rows,
+    _classify_against_index,
 )
+from ..llm.probe import write_keyed
 from ..sources.corpus import write_corpus
+from ..tools.checkpoints import free_local_checkpoint
 from ..tools.concurrency import parallel_writes
-from ..tools.rows import empty_df
+from ..tools.rows import (
+    manifest_params,
+    read_manifest,
+    read_or_empty,
+    write_manifest,
+)
 from .compact import _HadoopFS
 from .sinks import EPOCH_COL
 
@@ -54,51 +60,14 @@ def _read_or_empty(
     its documents 'exact' and shrink the epoch's output — the replay
     must see exactly the pre-epoch index state.
 
-    Only missing-or-empty index state maps to an empty frame. Any
-    OTHER read failure — corrupt files, permissions, filesystem
-    errors — fails the batch loudly: silently classifying against an
-    empty index would mark everything 'novel' and permanently land
-    duplicates in the corpus (ADVICE r6).
-
-    The read passes an EXPLICIT schema (r8 flake root-cause): an index
-    tree whose only landed epoch is EMPTY — a crawl lull, or an
-    all-duplicate first micro-batch, which dynamic overwrite records
-    as a directory with no parquet files — makes schema INFERENCE
-    throw UNABLE_TO_INFER_SCHEMA on every subsequent batch, wedging
-    ingest permanently. With the schema supplied, empty trees read as
-    empty frames, and genuinely corrupt files still fail the batch
-    loudly when the scan executes."""
-    full = f"{schema}, {EPOCH_COL} int"
-    try:
-        df = spark.read.schema(full).parquet(path)
-    except AnalysisException as exc:
-        cond = ""
-        for attr in ("getCondition", "getErrorClass"):
-            try:
-                cond = getattr(exc, attr)() or ""
-                break
-            except Exception:
-                continue
-        if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(exc):
-            return empty_df(spark, schema)
-        raise
+    A missing or empty sidecar reads as zero rows
+    (``tools.rows.read_or_empty``, explicit schema: the r8 flake was an
+    all-duplicate first epoch wedging inference). Any other read
+    failure fails the batch loudly: classifying against an empty index
+    would mark everything 'novel' and permanently land duplicates in
+    the corpus (ADVICE r6)."""
+    df = read_or_empty(spark, path, f"{schema}, {EPOCH_COL} int")
     return df.filter(F.col(EPOCH_COL) != current_epoch).drop(EPOCH_COL)
-
-
-def _read_manifest(spark: SparkSession, path: str) -> "dict | None":
-    """The banding-parameter manifest row at ``path``, or None when no
-    manifest has been written (pre-r10 corpora; first start)."""
-    import json
-
-    try:
-        rows = spark.read.schema("manifest string").parquet(path).collect()
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
-    if not rows:
-        return None
-    return json.loads(rows[0]["manifest"])
 
 
 def ingest_with_dedup(
@@ -147,7 +116,7 @@ def ingest_with_dedup(
     }
     spark = stream.sparkSession
     manifest_path = f"{path}/_index/manifest"
-    existing = _read_manifest(spark, manifest_path)
+    existing = read_manifest(spark, manifest_path)
     if existing is not None and "track_ids" in existing:
         # a flat batch-layout manifest (DedupIndex.build writes it —
         # takedown_stream_corpus rebuilds the sidecars that way): its
@@ -178,15 +147,7 @@ def ingest_with_dedup(
                 "original parameters, or rebuild the corpus index"
             )
     if existing is None:
-        import json
-
-        from ..tools.rows import single_row_df
-
-        # JVM-built single row (r14: createDataFrame+coalesce(1) paid
-        # ~5 s of Python-worker round-trips per manifest)
-        single_row_df(
-            spark, "manifest string", json.dumps(meta)
-        ).write.mode("overwrite").parquet(manifest_path)
+        write_manifest(spark, manifest_path, meta)
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -206,70 +167,59 @@ def ingest_with_dedup(
         # dropDuplicates collapses replayed rows sharing an id (at-
         # least-once delivery can repeat a row INSIDE one micro-batch,
         # and both copies would otherwise pass the semi-join; ADVICE r6)
+        # checkpointed: the classification and the corpus write read
+        # ONE evaluation of the batch, so the corpus rows and the index
+        # rows always describe the same documents
         uniq = batch.join(
             w_first.select(id_col), id_col, "left_semi"
-        ).dropDuplicates([id_col])
-        corpus_hashes = _read_or_empty(
-            spark, hashes_path, HASH_SCHEMA, int(epoch_id))
-        corpus_bands = _read_or_empty(
-            spark, bands_path, BAND_SCHEMA, int(epoch_id))
-        status = incremental_dedup(
-            uniq, corpus_df=None, text_col=text_col, id_col=id_col,
-            n_hashes=n_hashes, band_size=band_size, shingle_n=shingle_n,
-            corpus_hashes=corpus_hashes, corpus_bands=corpus_bands,
+        ).dropDuplicates([id_col]).localCheckpoint(eager=True)
+        status, temps = None, ()
+        try:
             # micro-batches are trigger-bounded: broadcast the batch
-            # keys instead of exchanging the index tables every epoch
-            broadcast_new=True,
-        )
-        novel = uniq.join(
-            status.filter(F.col("status") == "novel").select(id_col),
-            id_col, "left_semi",
-        ).localCheckpoint(eager=True)  # classify ONCE; feeds 3 writes
-
-        new_hashes = novel.select(
-            F.md5(F.col(text_col)).alias("__h")
-        ).distinct().withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-        new_bands = (
-            _band_keys(
-                minhash_signatures(novel, text_col, id_col, n_hashes,
-                                   shingle_n),
-                id_col, n_hashes, band_size,
+            # keys instead of exchanging the index tables every epoch.
+            # The kernel's md5 and band frames are the epoch's index
+            # rows, so nothing re-hashes the accepted docs.
+            status, new_hash, rest_bands, temps = _classify_against_index(
+                uniq,
+                _read_or_empty(spark, hashes_path, HASH_SCHEMA,
+                               int(epoch_id)),
+                _read_or_empty(spark, bands_path, BAND_SCHEMA,
+                               int(epoch_id)),
+                text_col, id_col, n_hashes, band_size, shingle_n,
+                broadcast_new=True,
             )
-            .select("band", "key").distinct()
-            .withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-        )
-        # epoch files key-sorted + bloomed (constant partition value,
-        # so the local sort survives the writer's partition re-sort):
-        # later batches' pushed-down probe keys prune these files too.
-        # All three writes derive from the checkpointed `novel` and
-        # target disjoint dirs — overlap them (guide §2.6) so the
-        # epoch pays the slowest write, not the sum
-        from ..llm.probe import key_bloom
-
-        def _epoch_write(df, p, key):
-            return lambda: key_bloom(
-                df.sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic"), key,
-            ).partitionBy(EPOCH_COL).parquet(p)
-
-        parallel_writes(
-            lambda: write_corpus(
-                novel.withColumn(EPOCH_COL, F.lit(int(epoch_id))), path,
-                partition_by=(EPOCH_COL, *partition_by),
-                sort_by=(id_col,),
-                mode="overwrite", dynamic_overwrite=True,
-            ),
-            _epoch_write(new_hashes, hashes_path, "__h"),
-            _epoch_write(new_bands, bands_path, "key"),
-        )
-        # epoch over: free this batch's checkpoint blocks NOW instead
-        # of pinning ~2 batch-sized RDDs per epoch until Python GC
-        # (guide §5; the d74-class churn VERDICT r14 flagged). Every
-        # consumer above has fully evaluated.
-        from ..tools.checkpoints import free_local_checkpoint
-
-        free_local_checkpoint(novel, status)
+            new_hashes, new_bands = (
+                df.withColumn(EPOCH_COL, F.lit(int(epoch_id)))
+                for df in _accepted_rows(status, new_hash, rest_bands,
+                                         id_col)
+            )
+            novel = uniq.join(
+                status.filter(F.col("status") == "novel").select(id_col),
+                id_col, "left_semi",
+            )
+            # epoch files key-sorted + bloomed, so later batches'
+            # pushed-down probe keys prune them too. The three writes
+            # read checkpointed frames and target disjoint dirs —
+            # overlap them (guide §2.6) so the epoch pays the slowest
+            # write, not the sum
+            parallel_writes(
+                lambda: write_corpus(
+                    novel.withColumn(EPOCH_COL, F.lit(int(epoch_id))),
+                    path, partition_by=(EPOCH_COL, *partition_by),
+                    sort_by=(id_col,),
+                    mode="overwrite", dynamic_overwrite=True,
+                ),
+                lambda: write_keyed(new_hashes, hashes_path, "__h",
+                                    epoch_col=EPOCH_COL),
+                lambda: write_keyed(new_bands, bands_path, "key",
+                                    epoch_col=EPOCH_COL),
+            )
+        finally:
+            # epoch over: free this batch's checkpoint blocks NOW
+            # instead of pinning batch-sized RDDs per epoch until
+            # Python GC (guide §5; the d74-class churn VERDICT r14
+            # flagged), on a failed write too
+            free_local_checkpoint(uniq, status, *temps)
 
         if (
             compact_every
@@ -336,7 +286,8 @@ def takedown_stream_corpus(
        moving the flat index aside or re-ingesting.
 
     Banding parameters come from the sidecar manifest; the kwargs are
-    only the pre-manifest fallback, as in ``from_stream_index``.
+    only the pre-manifest fallback, and one that disagrees with the
+    manifest raises, as in ``from_stream_index``.
 
     Crash safety: heartbeated ``_COMPACTING`` markers are held at the
     corpus root AND the ``_index`` root for the whole run, so corpus
@@ -377,22 +328,14 @@ def takedown_stream_corpus(
         )
 
     # -- banding parameters: manifest-authoritative ---------------------
-    manifest = _read_manifest(spark, f"{corpus_path}/_index/manifest")
-    passed = {
-        "text_col": text_col, "id_col": id_col, "n_hashes": n_hashes,
-        "band_size": band_size, "shingle_n": shingle_n,
-    }
-    if manifest is not None:
-        meta = {k: manifest[k] for k in passed if k in manifest}
-    else:
-        defaults = {
-            "text_col": "text", "id_col": "doc_id", "n_hashes": 6,
-            "band_size": 2, "shingle_n": 3,
-        }
-        meta = {
-            k: (v if v is not None else defaults[k])
-            for k, v in passed.items()
-        }
+    meta = manifest_params(
+        read_manifest(spark, f"{corpus_path}/_index/manifest"),
+        {"text_col": text_col, "id_col": id_col, "n_hashes": n_hashes,
+         "band_size": band_size, "shingle_n": shingle_n},
+        STREAM_BANDING_DEFAULTS, f"{corpus_path}/_index/manifest",
+        "the rebuilt index would band differently from the corpus's "
+        "stream",
+    )
     key = meta["id_col"]
     with maintenance(spark, corpus_path, stale_after_sec, force) as m, \
             ExitStack() as index_scope:
@@ -489,12 +432,10 @@ def restore_stream_index_layout(
     is dead) to sweep its marker inside the ``stale_after_sec`` grace
     window, the same recovery contract as every other maintenance
     entry point. Returns ``{hashes, bands}`` restored row counts."""
-    import json
-
     from .compact import maintenance
 
     index_path = f"{corpus_path}/_index"
-    manifest = _read_manifest(spark, f"{index_path}/manifest")
+    manifest = read_manifest(spark, f"{index_path}/manifest")
     if manifest is None or "track_ids" not in manifest:
         raise ValueError(
             f"the index at {index_path} is not a flat batch layout "
@@ -538,9 +479,5 @@ def restore_stream_index_layout(
             for k in ("text_col", "id_col", "n_hashes", "band_size",
                       "shingle_n")
         }
-        from ..tools.rows import single_row_df
-
-        single_row_df(
-            spark, "manifest string", json.dumps(stream_meta)
-        ).write.mode("overwrite").parquet(f"{index_path}/manifest")
+        write_manifest(spark, f"{index_path}/manifest", stream_meta)
     return counts

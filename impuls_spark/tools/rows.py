@@ -1,11 +1,18 @@
 """Driver-side constant rows, built JVM-side (optimization guide §5:
 the driver should do almost no data work — and neither should the
-Python workers for a constant)."""
+Python workers for a constant), and the artifact-dir reads built on
+them: a missing parquet path as an empty frame, and the one-row JSON
+manifest every index and shard layout carries."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+#: schema of the one-row JSON manifest of an artifact layout
+_MANIFEST_DDL = "manifest string"
 
 
 def empty_df(spark, schema: "StructType | str") -> DataFrame:
@@ -71,3 +78,70 @@ def single_row_df(spark, ddl: str, *values) -> DataFrame:
         F.lit(v).cast(f.dataType).alias(f.name)
         for f, v in zip(fields, values)
     ])
+
+
+def read_or_empty(spark, path: str, ddl: str) -> DataFrame:
+    """``path`` read as parquet with the explicit schema ``ddl``, or an
+    empty frame of ``ddl`` when the path does not exist (a sidecar
+    before its first epoch, a layout before its first manifest).
+
+    Only a missing path maps to empty: corrupt files, permissions and
+    filesystem errors still fail, so a caller never silently reads a
+    broken index as an empty one. The schema is explicit because a
+    tree whose only files are empty partition directories (a dynamic
+    overwrite of zero rows) makes inference throw
+    UNABLE_TO_INFER_SCHEMA, while an explicit schema reads it as zero
+    rows."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(ddl).parquet(path)
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc):
+            raise
+        return empty_df(spark, ddl)
+
+
+def write_manifest(spark, path: str, meta: dict) -> None:
+    """Overwrite the one-row JSON manifest at ``path``. Writers land it
+    after their artifacts, so its presence marks a complete layout."""
+    single_row_df(spark, _MANIFEST_DDL, json.dumps(meta)).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def read_manifest(spark, path: str, required: bool = False) -> "dict | None":
+    """The manifest dict at ``path``; ``None`` when none was written
+    (a layout from before its manifest existed), or
+    ``FileNotFoundError`` with ``required``. Reads with an explicit
+    schema, so no schema-inference job runs."""
+    rows = read_or_empty(spark, path, _MANIFEST_DDL).collect()
+    if rows:
+        return json.loads(rows[0]["manifest"])
+    if required:
+        raise FileNotFoundError(f"no manifest at {path}")
+    return None
+
+
+def manifest_params(manifest: "dict | None", passed: dict, defaults: dict,
+                    where: str, why: str) -> dict:
+    """Layout parameters with the ``manifest`` authoritative: its
+    values when one exists, where any explicitly ``passed`` value that
+    differs raises ``ValueError`` (``where`` names the manifest,
+    ``why`` says what the mismatch would silently break); without one
+    (a layout written before its manifest existed), the ``passed``
+    values with ``defaults`` for those left ``None``."""
+    if manifest is None:
+        return {k: defaults[k] if v is None else v
+                for k, v in passed.items()}
+    clash = {
+        k: f"passed {v!r} != manifest {manifest[k]!r}"
+        for k, v in passed.items()
+        if v is not None and k in manifest and v != manifest[k]
+    }
+    if clash:
+        raise ValueError(
+            f"parameters disagree with the manifest at {where}: {clash} "
+            f"— {why}; drop the kwargs (the manifest is authoritative)"
+        )
+    return dict(manifest)

@@ -1,8 +1,9 @@
-"""Dump full ``explain("formatted")`` output for the r14-touched
-queries into plans/r14/<query>_<tag>.txt (the optimization round's
-before/after evidence).
+"""Dump full ``explain("formatted")`` output for the queries an
+optimization round touched into plans/<round>/<query>_<tag>.txt (the
+round's before/after evidence).
 
-Usage: python scripts/dump_r14_plans.py <before|after> q1 [q2 ...]
+Usage: python scripts/dump_round_plans.py <round> <before|after> q1 [q2 ...]
+e.g.   python scripts/dump_round_plans.py r15 after d69 d74
 """
 from __future__ import annotations
 
@@ -15,11 +16,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    round_name, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
+        os.path.abspath(__file__))), "plans", round_name)
     os.makedirs(out_dir, exist_ok=True)
 
     from pyspark.sql import SparkSession
@@ -27,7 +31,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master(
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("dump_r14_plans")
+        .appName(f"dump_{round_name}_plans")
         .config("spark.sql.shuffle.partitions",
                 os.environ.get("SPARK_GRAFT_CPUS", "32"))
         .config("spark.sql.adaptive.enabled", "true")

@@ -140,16 +140,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from impuls_spark.llm import probe
-    from impuls_spark.llm.probe import key_bloom, range_cluster
+    from impuls_spark.llm.probe import write_keyed
 
     path = f"/tmp/spark_graft_probe_cap_{args.rows}"
     if not (args.keep and os.path.exists(path)):
         shutil.rmtree(path, ignore_errors=True)
         t0 = time.time()
-        key_bloom(
-            range_cluster(keys_of(spark, spark.range(args.rows)), ["__h"])
-            .write.mode("overwrite"), "__h",
-        ).parquet(path)
+        write_keyed(keys_of(spark, spark.range(args.rows)), path, "__h")
         print(f"# built {args.rows}-row artifact in {time.time()-t0:.1f}s",
               file=sys.stderr)
     files = len(glob.glob(f"{path}/*.parquet"))

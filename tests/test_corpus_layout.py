@@ -302,16 +302,16 @@ def test_shards_manifest_pins_layout_law(spark, tmp_path):
     import pytest
 
     from impuls_spark.sources.corpus import (
-        _read_shards_manifest,
         remove_from_shards,
         write_training_shards,
     )
+    from impuls_spark.tools.rows import read_manifest
 
     rows = [(i, f"document body {i}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "shards")
     write_training_shards(df, out, n_shards=16, salt="epoch3")
-    assert _read_shards_manifest(spark, out) == {
+    assert read_manifest(spark, f"{out}/_shards_manifest") == {
         "n_shards": 16, "key_col": "doc_id", "salt": "epoch3",
         "files_per_shard": 1,
     }
