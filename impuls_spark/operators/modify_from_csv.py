@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..errors import DataError
 from ..feed import FeedDataset
+from ..sources.gtfs_read import _peek_header, _read_csv
 from ..task import BaseTask, TaskRuntime
 
 logger = logging.getLogger(__name__)
@@ -57,8 +58,8 @@ class ModifyFromCSV(BaseTask):
         # ModifyStopsFromCSV("soap_stops.csv")) or a literal path
         res = runtime.resources.get(self.csv_path)
         path = res.path if res is not None else self.csv_path
-        patch = spark.read.csv(path, header=True, inferSchema=False,
-                               quote='"', escape='"')
+        # read like load_gtfs (a local file): no header-inference job
+        patch = _read_csv(spark, path, _peek_header(path))
         if self.key_csv not in patch.columns:
             raise DataError(f"{self.csv_path}: missing key column {self.key_csv}")
 

@@ -42,9 +42,10 @@ class MissingGtfsFile(ValueError):
 
 
 def _peek_header(path: str) -> list[str]:
-    """Read the CSV header row driver-side (one line, any file size)."""
+    """Read the CSV header row driver-side (one line, any file size);
+    an empty file has no columns."""
     with open(path, newline="", encoding="utf-8-sig") as fh:
-        return next(csv.reader(fh))
+        return next(csv.reader(fh), [])
 
 
 def _read_csv(spark: SparkSession, path: str, header: list[str]) -> DataFrame:

@@ -6,13 +6,25 @@ per-file header list, exactly like the reference; values are produced by
 the reverse column mapping (gtfs_schema.py), extra columns come from the
 ``extra_fields`` map via ``element_at``.
 
-Execution shape: one Spark CSV write job per table — naturally parallel
+Execution shape: one Spark CSV write job per table, run in parallel
 (the reference spawns one OS thread per table, save.rs:174-209; Spark
 schedules the same thing across executors). Each table is written
-headerless to a directory of part files; the driver then streams the
-parts (name order == global sort order after ``orderBy``) into the zip
-entry behind a single header line. No table ever materializes in driver
+headerless to a directory of part files. The driver then stitches the
+files one after another, in the caller's header order: a header line,
+then the parts (name order == global sort order after ``orderBy``),
+into a zip entry or a plain file. No table ever materializes in driver
 memory.
+
+The stitch is sequential because deflating entries in parallel does
+not pay: a feed's bytes are ~95% stop_times, and one entry's deflate
+stream cannot be split without changing the archive's bytes. Against
+a writer that deflated the other entries in a thread pool (4 cores):
+at 2.67M stop_times rows (106 MB of CSV) it took 8.15 s vs 9.08-9.31 s
+serial, inside that host's ±1.2 s spread
+(``plans/r15/measurements/ab_zip_assembly.txt``); on the perfbench
+``gtfs_bulk`` feed (seed 7) the median save took 1.10 s sequential vs
+1.14 s pooled over 10 pairs, and at 10× that feed 3.63 s vs 4.00 s
+over 6 pairs, with identical archives.
 """
 
 from __future__ import annotations
@@ -23,17 +35,17 @@ import shutil
 import tempfile
 import zipfile
 from collections.abc import Mapping, Sequence
+from functools import partial
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
 from ..feed import FeedDataset
-from .gtfs_schema import SPEC_BY_TABLE
+from ..tools.concurrency import parallel_writes
+from .gtfs_schema import FILE_BY_NAME, GtfsFileSpec
 
 
-def _gtfs_exprs(table: str, header: Sequence[str]):
-    spec = SPEC_BY_TABLE[table]
+def _gtfs_exprs(spec: GtfsFileSpec, header: Sequence[str]):
     by_gtfs = {c.gtfs: c for c in spec.columns}
     exprs = []
     for name in header:
@@ -57,26 +69,6 @@ def _csv_quote(s: str) -> str:
     return s
 
 
-def _write_table_csv(
-    df: DataFrame,
-    header: Sequence[str],
-    out_dir: str,
-) -> list[str]:
-    """Write ``df`` (already projected to GTFS string columns) headerless;
-    return part-file paths in global order."""
-    (
-        df.write.mode("overwrite").csv(
-            out_dir,
-            header=False,
-            quote='"',
-            escape='"',
-            emptyValue="",
-            lineSep="\n",
-        )
-    )
-    return sorted(glob.glob(os.path.join(out_dir, "part-*")))
-
-
 def save_gtfs(
     feed: FeedDataset,
     headers: Mapping[str, Sequence[str]],
@@ -92,17 +84,27 @@ def save_gtfs(
     keeps calendars with no active weekday (otherwise filtered, matching
     the reference's ``WHERE monday OR tuesday OR ...`` — schema.rs:79-80).
     """
-    as_zip = target.endswith(".zip")
+    # file name -> header; a key may omit ".txt". Dict order is the
+    # caller's order, which is the zip entry order.
+    headers = {
+        fn if fn.endswith(".txt") else fn + ".txt": header
+        for fn, header in headers.items()
+    }
+    for fname in headers:
+        if fname not in FILE_BY_NAME:
+            raise KeyError(f"unknown GTFS file: {fname}")
+    head = {
+        fn: (",".join(_csv_quote(h) for h in header) + "\n").encode()
+        for fn, header in headers.items()
+    }
     stage = tempfile.mkdtemp(prefix="gtfs_out_")
     try:
         parts_per_file: dict[str, list[str]] = {}
 
-        def _stage_one(file_name: str, header: Sequence[str]) -> None:
-            fname = file_name if file_name.endswith(".txt") else file_name + ".txt"
-            table = _table_for_file(fname)
-            spec = SPEC_BY_TABLE[table]
-            df = feed[table]
-            if table == "calendars" and not emit_empty_calendars:
+        def _stage_one(fname: str) -> None:
+            spec = FILE_BY_NAME[fname]
+            df = feed[spec.table]
+            if spec.table == "calendars" and not emit_empty_calendars:
                 active = (
                     F.col("monday") | F.col("tuesday") | F.col("wednesday")
                     | F.col("thursday") | F.col("friday") | F.col("saturday")
@@ -110,175 +112,53 @@ def save_gtfs(
                 )
                 df = df.filter(active)
             if ensure_order:
-                df = df.orderBy(*[F.col(c) for c in spec.order_by or S.TABLES[table].pk])
-            out = df.select(*_gtfs_exprs(table, header))
+                df = df.orderBy(*[F.col(c) for c in spec.order_by or S.TABLES[spec.table].pk])
             part_dir = os.path.join(stage, fname + ".d")
-            parts_per_file[fname] = _write_table_csv(out, header, part_dir)
+            df.select(*_gtfs_exprs(spec, headers[fname])).write.csv(
+                part_dir,
+                mode="overwrite",
+                header=False,
+                quote='"',
+                escape='"',
+                emptyValue="",
+                lineSep="\n",
+            )
+            # part-file name order == global order after ``orderBy``
+            parts_per_file[fname] = sorted(
+                glob.glob(os.path.join(part_dir, "part-*"))
+            )
 
         # one CSV write job per table, tables independent: overlap them
         # (optimization guide §2.6) so the feed save pays the slowest
-        # table, not the sum of 15+ job tails; the zip/concat assembly
-        # below still reads the staged parts after all writes land
-        from ..tools.concurrency import parallel_writes
+        # table, not the sum of 15+ job tails; the stitch below reads
+        # the staged parts after all writes land
+        parallel_writes(*[partial(_stage_one, fn) for fn in headers])
 
-        parallel_writes(*[
-            lambda fn=file_name, hd=header: _stage_one(fn, hd)
-            for file_name, header in headers.items()
-        ])
+        def _emit(dest, fname: str) -> None:
+            dest.write(head[fname])
+            for p in parts_per_file[fname]:
+                with open(p, "rb") as src:
+                    shutil.copyfileobj(src, dest)
 
-        # assembly iterates the CALLER's header order, not the staged
-        # dict (whose insertion order is now write-completion order):
-        # zip entry order stays deterministic and caller-controlled
-        ordered = [
-            fn if fn.endswith(".txt") else fn + ".txt" for fn in headers
-        ]
-        if as_zip:
-            # r15 (VERDICT r14 what's-wrong #4, guide §2.6/§6): the
-            # zip stitch was one driver thread DEFLATE-ing the whole
-            # feed in entry order — the data-proportional serial tail
-            # of the export now that the CSV writes overlap. Deflate
-            # is per-ENTRY independent, so the non-dominant tables
-            # compress in a small pool (zlib releases the GIL) into
-            # spooled raw-deflate streams stitched in at their ordinal
-            # position. The LARGEST entry — in a real feed stop_times,
-            # ~95% of the bytes — bounds per-entry parallelism either
-            # way (a byte-identical single deflate stream cannot be
-            # parallelized), so it is NOT spooled: it streams straight
-            # into the archive exactly like the sequential writer,
-            # overlapped with the pool compressing the other entries —
-            # no extra write+read of the dominant compressed bytes
-            # (the first r15 cut spooled everything and measured
-            # ~neutral-to-slower on a stop_times-dominated feed).
-            # Entry bytes are identical in both paths (same level,
-            # same wbits; deflate output is chunk-boundary
-            # independent), so the zip is byte-for-byte the sequential
-            # one — pinned by
-            # test_gtfs_zip_parallel_assembly_is_byte_identical.
-            comp_dir = os.path.join(stage, "_zip_comp")
-            os.makedirs(comp_dir)
-            compressed: dict[str, tuple[str, int, int, int]] = {}
-
-            def _compress_one(fname: str) -> None:
-                import zlib
-
-                header = (headers.get(fname)
-                          or headers[fname.removesuffix(".txt")])
-                head = (",".join(_csv_quote(h) for h in header)
-                        + "\n").encode()
-                c = zlib.compressobj(-1, zlib.DEFLATED, -15)
-                crc = zlib.crc32(head)
-                size = len(head)
-                cpath = os.path.join(comp_dir, fname + ".deflate")
-                with open(cpath, "wb") as out:
-                    out.write(c.compress(head))
-                    for p in parts_per_file[fname]:
-                        with open(p, "rb") as src:
-                            while chunk := src.read(1 << 20):
-                                crc = zlib.crc32(chunk, crc)
-                                size += len(chunk)
-                                out.write(c.compress(chunk))
-                    out.write(c.flush())
-                compressed[fname] = (
-                    cpath, crc & 0xFFFFFFFF, size, os.path.getsize(cpath)
-                )
-
-            staged_bytes = {
-                fn: sum(os.path.getsize(p) for p in parts_per_file[fn])
-                for fn in ordered
-            }
-            biggest = max(ordered, key=staged_bytes.__getitem__,
-                          default=None)
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            spooled = [fn for fn in ordered if fn != biggest]
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futures = {
-                    fn: pool.submit(_compress_one, fn) for fn in spooled
-                }
-                with zipfile.ZipFile(
-                    target, "w", zipfile.ZIP_DEFLATED
-                ) as zf:
-                    for fname in ordered:
-                        if fname == biggest:
-                            header = (headers.get(fname) or
-                                      headers[fname.removesuffix(".txt")])
-                            head = (",".join(_csv_quote(h)
-                                             for h in header)
-                                    + "\n").encode()
-                            # the entry is the header line PLUS the
-                            # staged parts: an entry crossing the limit
-                            # by less than the header must still get a
-                            # zip64 header, or zipfile raises at close
-                            with zf.open(
-                                fname, "w",
-                                force_zip64=staged_bytes[fname] + len(head)
-                                > zipfile.ZIP64_LIMIT,
-                            ) as dest:
-                                dest.write(head)
-                                for p in parts_per_file[fname]:
-                                    with open(p, "rb") as src:
-                                        shutil.copyfileobj(src, dest)
-                        else:
-                            futures[fname].result()
-                            _append_precompressed(
-                                zf, fname, *compressed[fname]
-                            )
+        if target.endswith(".zip"):
+            with zipfile.ZipFile(target, "w", zipfile.ZIP_DEFLATED) as zf:
+                for fname in headers:
+                    # the entry is the header line PLUS the staged
+                    # parts: an entry crossing the limit by less than
+                    # the header must still get a zip64 header, or
+                    # zipfile raises at close
+                    size = len(head[fname]) + sum(
+                        os.path.getsize(p) for p in parts_per_file[fname]
+                    )
+                    with zf.open(
+                        fname, "w", force_zip64=size > zipfile.ZIP64_LIMIT
+                    ) as dest:
+                        _emit(dest, fname)
         else:
             os.makedirs(target, exist_ok=True)
-            for fname in ordered:
-                parts = parts_per_file[fname]
-                header = headers.get(fname) or headers[fname.removesuffix(".txt")]
+            for fname in headers:
                 with open(os.path.join(target, fname), "wb") as dest:
-                    dest.write(
-                        (",".join(_csv_quote(h) for h in header) + "\n").encode()
-                    )
-                    for p in parts:
-                        with open(p, "rb") as src:
-                            shutil.copyfileobj(src, dest)
+                    _emit(dest, fname)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
-
-def _append_precompressed(
-    zf: "zipfile.ZipFile", fname: str, comp_path: str,
-    crc: int, file_size: int, comp_size: int,
-) -> None:
-    """Append an entry whose DEFLATE stream was produced out-of-band
-    (same level/wbits as zipfile's own compressor, so the bytes match
-    the sequential writer exactly). stdlib zipfile has no public
-    precompressed-write API; this replicates the seekable-output write
-    path of ``ZipFile.open(name, "w")`` — same header fields, same
-    layout — with one improvement: sizes are known up front, so >4 GiB
-    entries get a correct zip64 header where the streaming writer
-    raised after the fact."""
-    import shutil as _shutil
-
-    zinfo = zipfile.ZipInfo(fname)  # deterministic 1980-01-01 stamp
-    zinfo.compress_type = zipfile.ZIP_DEFLATED
-    zinfo.external_attr = 0o600 << 16  # matches _open_to_write
-    zinfo.CRC = crc
-    zinfo.file_size = file_size
-    zinfo.compress_size = comp_size
-    zip64 = (file_size > zipfile.ZIP64_LIMIT
-             or comp_size > zipfile.ZIP64_LIMIT)
-    with zf._lock:
-        zf._writecheck(zinfo)
-        zf.fp.seek(zf.start_dir)
-        zinfo.header_offset = zf.fp.tell()
-        zf.fp.write(zinfo.FileHeader(zip64))
-        with open(comp_path, "rb") as src:
-            _shutil.copyfileobj(src, zf.fp, 1 << 20)
-        zf.start_dir = zf.fp.tell()
-        zf.filelist.append(zinfo)
-        zf.NameToInfo[zinfo.filename] = zinfo
-        zf._didModify = True
-
-
-def _table_for_file(fname: str) -> str:
-    from .gtfs_schema import FILE_BY_NAME
-
-    spec = FILE_BY_NAME.get(fname)
-    if spec is None:
-        raise KeyError(f"unknown GTFS file: {fname}")
-    return spec.table

@@ -91,15 +91,13 @@ def read_or_empty(spark, path: str, ddl: str) -> DataFrame:
     tree whose only files are empty partition directories (a dynamic
     overwrite of zero rows) makes inference throw
     UNABLE_TO_INFER_SCHEMA, while an explicit schema reads it as zero
-    rows."""
-    from pyspark.errors import AnalysisException
+    rows. A missing path is found by asking the filesystem, not by
+    failing a read, which Spark would log with a stack trace."""
+    from ..streaming.compact import _HadoopFS
 
-    try:
-        return spark.read.schema(ddl).parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
+    if not _HadoopFS(spark, path).exists(path):
         return empty_df(spark, ddl)
+    return spark.read.schema(ddl).parquet(path)
 
 
 def write_manifest(spark, path: str, meta: dict) -> None:

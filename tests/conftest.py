@@ -64,15 +64,14 @@ def feed(spark, gtfs_dir):
 # runs without `-m ""`. The end-to-end tests of the index-artifact
 # writers (stream ingest, takedown/restore, absorb, retrain, training
 # shards; 16-25 s each) run in the default lane, because those writers
-# are shared across modules.
+# are shared across modules. So do the four GTFS pipeline end-to-end
+# tests (radom_like, warsaw_like and its CLI, the example pipeline;
+# 23-36 s each): they export whole pipeline outputs through save_gtfs.
 _SLOW_TESTS = {
     "test_merge_geo_skew_at_generator_scale",
-    "test_warsaw_like_end_to_end",
-    "test_warsaw_like_cli",
     "test_refined_never_below_plain_ivfpq",
     "test_remove_unused_entities",
     "test_continuous_corpus_example_end_to_end",
-    "test_example_pipeline",
     "test_annindex_topk_matches_direct_ivfpq",
     "test_merge_lineage_cut_modes_identical",
     "test_daily_ingest_retrain_trigger",
@@ -90,7 +89,6 @@ _SLOW_TESTS = {
     "test_multi_file",
     "test_merge_preserves_active_service",
     "test_content_maintenance_refused_until_absorbed",
-    "test_radom_like_end_to_end",
     "test_takedown_stream_vectors_mid_stream",
     "test_merge_route_id_conflict_suffix",
     "test_incremental_dedup_near_recall_vs_exact",

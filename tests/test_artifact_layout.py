@@ -15,7 +15,7 @@ import pytest
 from impuls_spark.llm import AnnIndex
 from impuls_spark.llm.dedup import DedupIndex
 from impuls_spark.streaming import ingest_vectors, ingest_with_dedup
-from impuls_spark.tools.rows import read_manifest, write_manifest
+from impuls_spark.tools.rows import read_manifest, read_or_empty, write_manifest
 
 DIM = 8
 
@@ -192,3 +192,29 @@ def test_manifest_round_trip(spark, tmp_path):
         [(json.dumps(legacy),)], "manifest string"
     ).coalesce(1).write.mode("overwrite").parquet(path)
     assert read_manifest(spark, path) == legacy
+
+
+def test_read_or_empty_missing_path_runs_no_read(spark, tmp_path,
+                                                 monkeypatch):
+    """A missing path is found missing before any read: no parquet read
+    is planned, so Spark never fails one (and never logs its trace)."""
+    from pyspark.sql import DataFrameReader
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        calls.append(paths)
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    df = read_or_empty(spark, str(tmp_path / "nope"), "k string, n int")
+    assert calls == []
+    assert df.columns == ["k", "n"] and df.count() == 0
+
+    spark.range(3).selectExpr(
+        "cast(id as string) k", "cast(id as int) n"
+    ).write.parquet(str(tmp_path / "present"))
+    assert read_or_empty(spark, str(tmp_path / "present"),
+                         "k string, n int").count() == 3
+    assert len(calls) == 1

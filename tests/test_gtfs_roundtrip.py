@@ -97,10 +97,10 @@ def test_save_gtfs_roundtrip(spark, feed, tmp_path):
 
 
 def test_gtfs_zip_parallel_assembly_is_byte_identical(feed, tmp_path):
-    """r15: save_gtfs's zip assembly deflates entries in parallel and
-    stitches precompressed streams (guide §2.6/§6 — the serial driver
-    deflate was the export's data-proportional tail). The output must
-    be byte-for-byte what the sequential stdlib writer produces: same
+    """save_gtfs writes the tables' CSV parts in parallel, then one
+    writer streams each file (header line + parts) into the zip in the
+    caller's header order. The archive must be byte-for-byte what the
+    plain stdlib writer makes of the directory target's files: same
     entry order, same deterministic timestamps, same deflate bytes."""
     import glob
     import os
@@ -143,11 +143,11 @@ def test_gtfs_zip_parallel_assembly_is_byte_identical(feed, tmp_path):
 
 def test_gtfs_zip_streamed_entry_zip64_counts_header(feed, tmp_path,
                                                      monkeypatch):
-    """The streamed (largest) zip entry is the header line plus the
-    staged CSV parts; its zip64 decision must count both. With the
-    limit lowered so the staged parts fit under it but parts + header
-    do not, the save must still produce a readable archive instead of
-    zipfile's "File size too large" at entry close."""
+    """Each zip entry is streamed as the header line plus the staged
+    CSV parts; its zip64 decision must count both. With the limit
+    lowered so the largest entry's staged parts fit under it but parts
+    + header do not, the save must still produce a readable archive
+    instead of zipfile's "File size too large" at entry close."""
     import os
 
     headers = {

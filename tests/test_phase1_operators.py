@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from impuls_spark.errors import MultipleDataErrors
+from impuls_spark.errors import DataError, MultipleDataErrors
 from impuls_spark.operators import (
     AddEntity,
     AssignDirections,
@@ -166,6 +166,25 @@ def test_modify_from_csv_unknown_id_strict(feed, rt, tmp_path):
     p.write_text("route_id,route_short_name\nNOPE,Z\n")
     with pytest.raises(Exception):
         ModifyRoutesFromCSV(str(p), must_curate_all=True).transform(feed, rt)
+
+
+def test_modify_from_csv_empty_patch_is_a_data_error(feed, rt, tmp_path):
+    p = tmp_path / "patch.csv"
+    p.write_text("")
+    with pytest.raises(DataError, match="missing key column"):
+        ModifyStopsFromCSV(str(p)).transform(feed, rt)
+
+
+def test_modify_from_csv_reads_patch_without_a_job(feed, rt, tmp_path,
+                                                   spark_jobs):
+    """The patch header is peeked on the driver, as load_gtfs does, so
+    reading the patch runs no header-inference job. The transform's 4
+    jobs are its duplicate-key and unknown-id checks."""
+    p = tmp_path / "patch.csv"
+    p.write_text("stop_id,stop_name\nwkd00,Renamed Stop\n")
+    before = spark_jobs()
+    ModifyStopsFromCSV(str(p)).transform(feed, rt)
+    assert spark_jobs() == before + 4
 
 
 def test_assign_directions(feed, rt):
