@@ -39,18 +39,26 @@ def word_shingles(
     All of a document's shingles live in one array, so ``distinct``
     (per-document shingle sets) is ``array_distinct`` BEFORE the
     explode — a map-side dedup that makes the whole operator
-    shuffle-free; no global ``DISTINCT`` exchange ever runs."""
-    words = F.split(F.col(text_col), " ")
-    base = F.slice(words, 1, F.greatest(F.size(words) - (n - 1), F.lit(0)))
+    shuffle-free; no global ``DISTINCT`` exchange ever runs.
+
+    Cost is linear in words: shingle i joins element i of the n word
+    arrays shifted by 0..n-1, zipped, so each step of the ``transform``
+    reads only its own tuple. (Indexing the split text from inside the
+    lambda re-splits the whole text for every word — quadratic: one
+    20,000-word document took 62 s that way, against under 1 s.)"""
+    words = F.col("__w")
+    m = F.greatest(F.size(words) - (n - 1), F.lit(0))
+    grams = F.arrays_zip(*[
+        F.slice(words, 1 + k, m).alias(f"w{k}") for k in range(n)
+    ])
     shingle = F.transform(
-        base,
-        lambda w, i: F.concat_ws(
-            " ", w, *[F.element_at(words, i + k + 1) for k in range(1, n)]
-        ),
+        grams, lambda g: F.concat_ws(" ", *[g[f"w{k}"] for k in range(n)])
     )
     if distinct:
         shingle = F.array_distinct(shingle)
-    return df.select(F.col(id_col), F.explode(shingle).alias("shingle"))
+    return df.select(
+        F.col(id_col), F.split(F.col(text_col), " ").alias("__w")
+    ).select(F.col(id_col), F.explode(shingle).alias("shingle"))
 
 
 # ---------------------------------------------------------------------------
@@ -802,10 +810,14 @@ def incremental_dedup(
     epoch; instead the bounded batch keys push into the index scan as
     a parquet predicate (``probe.pushdown_key_filter``: exact
     membership, no exchange on the corpus tables) and the
-    at-most-batch-sized matched sets broadcast back. In that mode the
-    returned frame is MATERIALIZED (locally checkpointed) and every
-    intermediate checkpoint is freed before returning. Only set it
-    when the new side is trigger-bounded.
+    at-most-batch-sized matched sets broadcast back. In that mode
+    ``new_df`` is read exactly once, into a checkpointed sketch (id,
+    text, md5) that both membership tests read; the hash probe and the
+    MinHash band probe run concurrently; the returned frame selects
+    from a MATERIALIZED (locally checkpointed) verdict frame, which
+    ``free_local_checkpoint(result)`` frees, and every intermediate
+    checkpoint is freed before returning. Only set it when the new
+    side is trigger-bounded.
     """
     if corpus_hashes is None:
         corpus_hashes = corpus_df.select(
@@ -839,18 +851,39 @@ def _classify_against_index(
     cut: bool = False,
 ):
     """The one classify kernel, shared by :func:`incremental_dedup`,
-    :meth:`DedupIndex.classify` and :meth:`DedupIndex.ingest`. Returns
-    ``(status, new_hash, rest_bands, temps)``: the (id, status) frame,
-    the batch's (id, ``__h``) md5 frame and its (id, band, key) band
-    frame that an ingest appends, and the intermediate checkpoints the
-    caller frees once it is done with ``new_hash`` / ``rest_bands``
-    (guide §5: the r14 harness left 3 pinned batch RDDs per
-    classification to Python GC, measured as 4-6x rep-time spikes).
+    :meth:`DedupIndex.classify`, :meth:`DedupIndex.ingest` and the
+    streaming ingest sink. Returns ``(status, new_hash, rest_bands,
+    temps)``:
 
-    ``cut`` (always on in broadcast mode) materializes ``rest_bands``
-    and ``status`` with ``localCheckpoint``; without it (and without
-    ``broadcast_new``) every frame stays lazy. If the kernel raises,
-    it frees what it had already checkpointed."""
+    - ``status``: (id, status);
+    - ``new_hash``: (id, ``__h``, status), the batch's md5 rows;
+    - ``rest_bands``: (id, status, band, key), the band rows of the
+      docs that are not ``'exact'``;
+    - ``temps``: the intermediate checkpoints, which the caller frees
+      (guide §5: the r14 harness left 3 pinned batch RDDs per
+      classification to Python GC, measured as 4-6x rep-time spikes).
+
+    All three frames select from one verdict frame (id, ``__h``,
+    status, ``__b``: the doc's band keys), so an ingest's appends are
+    filters on it (:func:`_accepted_rows`), with no join of their own.
+
+    Everything derives from one SKETCH of the batch, (id, text,
+    ``__h``). Two independent branches read it: the hash branch probes
+    the md5s and cuts ``exact`` (the ids whose text the index holds);
+    the band branch runs MinHash over every doc (per-id ``groupBy``,
+    as :func:`minhash_signatures`), cuts the bands, probes their keys
+    and cuts ``near`` (per id: its band keys and whether one collides).
+    Verdicts join the sketch's (id, ``__h``) to both cuts. In broadcast
+    mode the sketch is a checkpoint, so the caller's batch is read
+    exactly once, and the two branches run concurrently
+    (:func:`~impuls_spark.tools.concurrency.parallel_writes`): the
+    call pays the slower branch, not their sum.
+
+    ``cut`` (always on in broadcast mode) materializes the bands and
+    the verdicts with ``localCheckpoint``; ``status`` then selects from
+    a checkpoint, and ``free_local_checkpoint(status)`` frees it.
+    Without it (and without ``broadcast_new``) every frame stays lazy.
+    If the kernel raises, it frees what it had already checkpointed."""
     cut = cut or broadcast_new
     temps: list = []
 
@@ -877,64 +910,85 @@ def _classify_against_index(
 
     # broadcast mode: every join operand besides the probed scans is
     # batch-bounded — hint them all so one classification plans ZERO
-    # sort-merge joins. Its lineage cuts: `exact` feeds both the
-    # rest_bands cut (via `rest`) and the status join, so uncut it
-    # re-runs the batch md5 pass ~4x and the PUSHED INDEX SCAN 2x per
-    # classification (r14 measurement); both frames are batch-sized
+    # sort-merge joins, and cut each branch's result so the verdict
+    # join reads blocks, not the branches' plans
     small = F.broadcast if broadcast_new else keep
     batch_cut = checkpoint if broadcast_new else keep
+    band_cut = checkpoint if cut else keep
+    got: dict = {}
     try:
-        new_hash = batch_cut(new_df.select(
-            F.col(id_col), F.md5(F.col(text_col)).alias("__h")
+        sketch = batch_cut(new_df.select(
+            F.col(id_col), F.col(text_col),
+            F.md5(F.col(text_col)).alias("__h"),
         ))
-        exact = small(batch_cut(new_hash.join(
-            probe(corpus_hashes, "__h", new_hash), "__h", "left_semi"
-        ).select(id_col)))
-        rest = new_df.join(exact, id_col, "left_anti")
-        rest_bands = _band_keys(
-            minhash_signatures(rest, text_col, id_col, n_hashes,
-                               shingle_n),
-            id_col, n_hashes, band_size,
-        )
-        if cut:
-            # the ONE MinHash pass: the bands probe, the status and an
-            # ingest's band append all read these blocks
-            rest_bands = checkpoint(rest_bands)
-        # the probe is on `key` alone (a composite (band, key) In is not
-        # pushable): its matches are exact on the key, and this
-        # (band, key) semi-join refines cross-band collisions
-        near = (
-            rest_bands.join(probe(corpus_bands, "key", rest_bands),
-                            ["band", "key"], "left_semi")
-            .select(id_col).distinct()
-        )
-        status = (
-            new_df.select(id_col)
-            .join(small(exact.withColumn("__e", F.lit(1))), id_col, "left")
-            .join(small(near.withColumn("__n", F.lit(1))), id_col, "left")
+        doc_hash = sketch.select(id_col, "__h")
+
+        def hash_branch() -> None:
+            got["exact"] = batch_cut(doc_hash.join(
+                probe(corpus_hashes, "__h", doc_hash), "__h", "left_semi"
+            ).select(id_col))
+
+        def band_branch() -> None:
+            # the ONE MinHash pass: the bands probe and `near` read it
+            bands = band_cut(_band_keys(
+                minhash_signatures(sketch, text_col, id_col, n_hashes,
+                                   shingle_n),
+                id_col, n_hashes, band_size,
+            ))
+            # the probe is on `key` alone (a composite (band, key) In is
+            # not pushable): its matches are exact on the key, and this
+            # (band, key) semi-join refines cross-band collisions
+            hits = bands.join(probe(corpus_bands, "key", bands),
+                              ["band", "key"], "left_semi")
+            # one aggregate gathers each doc's band keys (what an
+            # ingest appends) and whether any collided; a semi-join
+            # feeds it because the probe may repeat a bucket (a tracked
+            # index holds one row per doc), which an outer join would
+            # multiply
+            bk = F.struct("band", "key").alias("__bk")
+            got["near"] = batch_cut(
+                bands.select(id_col, bk, F.lit(False).alias("__n"))
+                .unionByName(hits.select(id_col, bk,
+                                         F.lit(True).alias("__n")))
+                .groupBy(id_col)
+                .agg(F.collect_set("__bk").alias("__b"),
+                     F.max("__n").alias("__n"))
+            )
+
+        parallel_writes(hash_branch, band_branch)
+        verdict = (
+            doc_hash
+            .join(small(got["exact"].withColumn("__e", F.lit(1))),
+                  id_col, "left")
+            .join(small(got["near"]), id_col, "left")
             .select(
-                id_col,
+                id_col, "__h",
                 F.when(F.col("__e").isNotNull(), F.lit("exact"))
-                .when(F.col("__n").isNotNull(), F.lit("near"))
+                .when(F.col("__n"), F.lit("near"))
                 .otherwise(F.lit("novel"))
                 .alias("status"),
+                "__b",
             )
         )
         if cut:
-            # the verdicts themselves: they still read the pinned
-            # intermediates (and, lazily, the index), so the caller
-            # may free `temps` once it is done with new_hash/rest_bands.
-            # The eager evaluation adds no total work: the caller's
-            # action was about to run this exact plan.
-            status = status.localCheckpoint(eager=True)
+            # the verdicts themselves, kept apart from `temps`: the
+            # caller's status reads them. The eager evaluation adds no
+            # total work: the caller's action was about to run this
+            # exact plan.
+            verdict = verdict.localCheckpoint(eager=True)
     except BaseException:
         free_local_checkpoint(*temps)
         raise
-    return status, new_hash, rest_bands, tuple(temps)
+    return (
+        verdict.select(id_col, "status"),
+        verdict.select(id_col, "__h", "status"),
+        verdict.where(F.col("status") != "exact")
+        .select(id_col, "status", F.inline("__b")),
+        tuple(temps),
+    )
 
 
 def _accepted_rows(
-    status: DataFrame,
     new_hash: DataFrame,
     rest_bands: DataFrame,
     id_col: str,
@@ -942,18 +996,17 @@ def _accepted_rows(
     tracked: bool = False,
 ) -> "tuple[DataFrame, DataFrame]":
     """(hash rows, band rows) that an ingest appends for one
-    classification: the kernel's ``new_hash`` and ``rest_bands`` of the
-    docs whose status is in ``accept``, distinct, with the doc id as a
-    string ``__id`` column when ``tracked``. Shared by
-    :meth:`DedupIndex.ingest` and the streaming ingest sink, so neither
-    recomputes md5 or MinHash over the accepted docs."""
-    accepted = status.filter(F.col("status").isin(*accept)).select(id_col)
+    classification: the kernel's ``new_hash`` and ``rest_bands`` rows
+    whose status is in ``accept``, distinct, with the doc id as a
+    string ``__id`` column when ``tracked``. Both are filters on the
+    kernel's verdicts, so no append joins or re-hashes the batch.
+    Shared by :meth:`DedupIndex.ingest` and the streaming ingest
+    sink."""
+    accepted = F.col("status").isin(*accept)
     id_str = [F.col(id_col).cast("string").alias("__id")] if tracked else []
     return (
-        new_hash.join(accepted, id_col, "left_semi")
-        .select("__h", *id_str).distinct(),
-        rest_bands.join(accepted, id_col, "left_semi")
-        .select("band", "key", *id_str).distinct(),
+        new_hash.where(accepted).select("__h", *id_str).distinct(),
+        rest_bands.where(accepted).select("band", "key", *id_str).distinct(),
     )
 
 
@@ -1466,9 +1519,11 @@ class DedupIndex:
         function's micro-batch join mode (broadcast the bounded batch
         keys, never exchange the index tables) — set it only when
         ``new_df`` is trigger-bounded. In that mode the returned frame
-        is MATERIALIZED (locally checkpointed, at most batch-sized)
-        and every intermediate checkpoint is freed before returning;
-        blocks free when the frame is garbage-collected.
+        selects from a MATERIALIZED (locally checkpointed, at most
+        batch-sized) verdict frame and every intermediate checkpoint is
+        freed before returning; ``free_local_checkpoint`` on the
+        returned frame frees its blocks, otherwise they free when it is
+        garbage-collected.
 
         Fails fast on a root ``_COMPACTING`` marker: while a
         :meth:`remove` runs (or after one crashed mid-way) the two
@@ -1493,10 +1548,12 @@ class DedupIndex:
     ) -> DataFrame:
         """Classify ``new_df`` against the stored index, APPEND the
         accepted docs' hashes and band buckets, and return the status
-        frame — MATERIALIZED (locally checkpointed): the classification
-        already ran to drive the append, so the caller reads the same
-        result without recompute, and the appended files cannot leak
-        into it. Blocks free when the frame is garbage-collected.
+        frame — a selection of the MATERIALIZED (locally checkpointed)
+        verdicts: the classification already ran to drive the append,
+        so the caller reads the same result without recompute, and the
+        appended files cannot leak into it. ``free_local_checkpoint``
+        on it frees its blocks; otherwise they free when the frame is
+        garbage-collected.
 
         With the default ``accept=('novel',)`` the appended rows are
         guaranteed absent from the store ('novel' means no hash match
@@ -1512,7 +1569,9 @@ class DedupIndex:
 
         Classification is :func:`_classify_against_index`, the same
         kernel :meth:`classify` runs, with its lineage cuts on in both
-        modes. Refuses before any work on a ``_COMPACTING`` marker on
+        modes; both appends are filters on its verdicts, so neither
+        joins, re-hashes or re-reads the batch. Refuses before any work
+        on a ``_COMPACTING`` marker on
         the root or either store dir, and frees the kernel's
         checkpoints on every exit path, a failed append included."""
         if self._epoched:
@@ -1548,7 +1607,7 @@ class DedupIndex:
         # to 'exact'/'near'. localCheckpoint truncates the plan to the
         # materialized blocks, which no path refresh can touch.
         # (Executor-loss durability caveat as with Merge's lineage cut;
-        # both frames are batch-sized.)
+        # the verdicts are batch-sized.)
         status, new_hash, rest_bands, temps = _classify_against_index(
             new_df, self.hashes, self.bands, m["text_col"], id_col,
             m["n_hashes"], m["band_size"], m["shingle_n"],
@@ -1564,14 +1623,13 @@ class DedupIndex:
             # a compaction that started during classification
             check_markers()
             hashes, bands = _accepted_rows(
-                status, new_hash, rest_bands, id_col, accept,
+                new_hash, rest_bands, id_col, accept,
                 tracked=self.meta.get("track_ids", False),
             )
-            # both append inputs derive from checkpointed frames or
-            # index-independent scans (new_hash is md5 over the batch),
-            # so neither re-reads the store and append order is free —
-            # overlap the two appends so the ingest pays the slower one
-            # (guide §2.6)
+            # both append inputs are filters on the checkpointed
+            # verdicts, so neither re-reads the store or the batch and
+            # append order is free — overlap the two appends so the
+            # ingest pays the slower one (guide §2.6)
             parallel_writes(
                 lambda: write_keyed(bands, f"{self.path}/bands", "key",
                                     append=True),

@@ -82,6 +82,7 @@ threshold would admit it (ADVICE r13).
 from __future__ import annotations
 
 import json
+import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -138,6 +139,7 @@ PROBE_SPAN_FANOUT = 8
 PROBE_SPAN_COVERAGE = 0.8
 
 _IN_THRESHOLD_CONF = "spark.sql.parquet.pushdown.inFilterThreshold"
+_IN_RAISE_LOCK = threading.Lock()
 
 
 def configure_probe_pushdown(
@@ -182,12 +184,18 @@ def _ensure_in_pushdown(spark, n_keys: int) -> None:
     :data:`PARQUET_IN_MAX`: an admitted In becomes a values-deep
     parquet Or-chain that StackOverflows past ~1-2k string values,
     while a NON-admitted In converts to parquet's native min/max
-    range — safe (PROBE_CAP.json)."""
+    range — safe (PROBE_CAP.json).
+
+    The compare-and-raise holds a module lock: the classify kernel
+    probes hashes and bands at once, and an unlocked smaller raise
+    could overwrite a larger one read before it was set — the larger
+    probe's In would reach parquet as a min/max range (still exact,
+    but pruning nothing)."""
     if n_keys > PARQUET_IN_MAX:
         return
-    cur = _session_in_threshold(spark)
-    if cur <= n_keys:
-        spark.conf.set(_IN_THRESHOLD_CONF, str(n_keys + 1))
+    with _IN_RAISE_LOCK:
+        if _session_in_threshold(spark) <= n_keys:
+            spark.conf.set(_IN_THRESHOLD_CONF, str(n_keys + 1))
 
 
 def key_bloom(writer, *key_cols: str):

@@ -190,8 +190,7 @@ def ingest_with_dedup(
             )
             new_hashes, new_bands = (
                 df.withColumn(EPOCH_COL, F.lit(int(epoch_id)))
-                for df in _accepted_rows(status, new_hash, rest_bands,
-                                         id_col)
+                for df in _accepted_rows(new_hash, rest_bands, id_col)
             )
             novel = uniq.join(
                 status.filter(F.col("status") == "novel").select(id_col),

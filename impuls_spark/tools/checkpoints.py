@@ -22,14 +22,21 @@ batch checkpoints through ``streaming.compact.maintenance``'s
 from __future__ import annotations
 
 
-def checkpoint_rdd(df):
+def checkpoint_rdd(df, selected: bool = False):
     """The JVM RDD holding ``df``'s checkpoint blocks, or None.
 
     A frame counts as checkpointed when its analyzed plan is a bare
     ``LogicalRDD`` whose RDD is still persisted: exactly what
     ``localCheckpoint`` returns, and not yet freed. Anything on top of
-    that leaf (a ``Project``, a ``Filter``) is lineage of its own."""
+    that leaf (a ``Project``, a ``Filter``) is lineage of its own —
+    except, with ``selected``, a ``Project`` of plain columns: such a
+    frame reads nothing but the leaf's blocks, so it owns them."""
     plan = df._jdf.queryExecution().analyzed()
+    if selected and plan.getClass().getSimpleName() == "Project":
+        cols = plan.projectList()
+        if all(cols.apply(i).getClass().getSimpleName()
+               == "AttributeReference" for i in range(cols.size())):
+            plan = plan.child()
     if plan.getClass().getSimpleName() != "LogicalRDD":
         return None
     rdd = plan.rdd()
@@ -38,15 +45,17 @@ def checkpoint_rdd(df):
 
 def free_local_checkpoint(*dfs) -> None:
     """Unpersist the checkpoint blocks behind locally-checkpointed
-    DataFrames, best-effort (non-blocking). A frame that is not backed
-    by a ``LogicalRDD`` (not actually checkpointed) is skipped; any
+    DataFrames, best-effort (non-blocking). A frame that selects
+    columns of a checkpoint frees that checkpoint (the dedup verdicts
+    are returned that way); any other frame not backed by a
+    ``LogicalRDD`` (not actually checkpointed) is skipped. Any
     py4j/internal failure degrades to the old GC-eventually behaviour
     rather than raising into the caller's write path."""
     for df in dfs:
         if df is None:
             continue
         try:
-            rdd = checkpoint_rdd(df)
+            rdd = checkpoint_rdd(df, selected=True)
             if rdd is not None:
                 rdd.unpersist(False)
         except Exception:  # noqa: BLE001 — cleanup must never fail a job

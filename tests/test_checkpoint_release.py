@@ -7,11 +7,29 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from impuls_spark.tools.checkpoints import free_local_checkpoint
+from impuls_spark.tools.checkpoints import (
+    checkpoint_rdd,
+    free_local_checkpoint,
+)
 
 
 def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _persistent_ids(spark) -> set:
+    # ids, not a count: a dead checkpoint of an earlier test that the
+    # ContextCleaner unpersists during this one would shift a count
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _pins(spark, frame, before: set) -> None:
+    """The RDDs pinned since ``before`` are exactly ``frame``'s
+    checkpoint; freeing ``frame`` leaves none of them pinned."""
+    added = _persistent_ids(spark) - before
+    assert added == {checkpoint_rdd(frame, selected=True).id()}, added
+    free_local_checkpoint(frame)
+    assert not added & _persistent_ids(spark)
 
 
 def _docs(spark, lo, hi):
@@ -35,6 +53,20 @@ def test_free_local_checkpoint_releases_blocks(spark):
     assert _n_persistent(spark) == base
 
 
+def test_free_local_checkpoint_frees_a_column_selection(spark):
+    """A plain column selection of a checkpoint owns its blocks (the
+    dedup verdicts come back that way); a computed column does not."""
+    cp = spark.range(50).select("id", (F.col("id") * 2).alias("x")) \
+        .localCheckpoint(eager=True)
+    rdd = checkpoint_rdd(cp).id()
+    free_local_checkpoint(cp.select((F.col("x") + 1).alias("y")))
+    assert rdd in _persistent_ids(spark)
+    assert checkpoint_rdd(cp.select("x")) is None
+    assert checkpoint_rdd(cp.select("x"), selected=True).id() == rdd
+    free_local_checkpoint(cp.select("x", "id"))
+    assert rdd not in _persistent_ids(spark)
+
+
 def test_free_local_checkpoint_skips_plain_frames(spark):
     # not checkpointed, not persisted: a no-op, never an error
     df = spark.range(10).select((F.col("id") * 2).alias("x"))
@@ -52,14 +84,12 @@ def test_classify_broadcast_pins_only_the_result(spark, tmp_path):
     path = str(tmp_path / "idx")
     DedupIndex.build(_docs(spark, 0, 40), path)
     idx = DedupIndex.load(spark, path)
-    base = _n_persistent(spark)
+    before = _persistent_ids(spark)
     status = idx.classify(_docs(spark, 35, 45), broadcast_new=True)
-    assert _n_persistent(spark) == base + 1
     got = {r["doc_id"]: r["status"] for r in status.collect()}
     assert all(got[i] == "exact" for i in range(35, 40))
     assert all(got[i] == "novel" for i in range(40, 45))
-    free_local_checkpoint(status)
-    assert _n_persistent(spark) == base
+    _pins(spark, status, before)
 
 
 def test_ingest_frees_intermediates_deterministically(spark, tmp_path):
@@ -72,12 +102,98 @@ def test_ingest_frees_intermediates_deterministically(spark, tmp_path):
         path = str(tmp_path / f"idx_{mode}")
         DedupIndex.build(_docs(spark, 0, 30), path)
         idx = DedupIndex.load(spark, path)
-        base = _n_persistent(spark)
+        before = _persistent_ids(spark)
         st = idx.ingest(_docs(spark, 25, 35), broadcast_new=mode)
-        assert _n_persistent(spark) == base + 1, mode
         assert st.count() == 10
-        free_local_checkpoint(st)
-        assert _n_persistent(spark) == base, mode
+        _pins(spark, st, before)
+
+
+def _counted_batch(spark, lo, hi):
+    """(batch, reads): ``_docs`` rows from an RDD whose map ticks an
+    accumulator, so ``reads.value`` is the rows read from the batch."""
+    reads = spark.sparkContext.accumulator(0)
+
+    def tick(row):
+        reads.add(1)
+        return row
+
+    rows = [tuple(r) for r in _docs(spark, lo, hi).collect()]
+    rdd = spark.sparkContext.parallelize(rows, 4).map(tick)
+    return spark.createDataFrame(rdd, "doc_id long, text string"), reads
+
+
+@pytest.mark.parametrize("mode", [False, True])
+@pytest.mark.parametrize("op", ["classify", "ingest"])
+def test_classify_reads_the_batch_once(spark, tmp_path, op, mode):
+    """The classify kernel reads the caller's batch once per call in
+    broadcast mode: the hash and band branches and the verdicts all
+    derive from one checkpointed sketch (the kernel before it read the
+    batch 3 times). The lazy modes read it 3 times (before: 4 for
+    classify, 5 for ingest). The ingest appends read only the
+    verdicts."""
+    from impuls_spark.llm.dedup import DedupIndex
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 60), path, track_ids=True)
+    idx = DedupIndex.load(spark, path)
+    batch, reads = _counted_batch(spark, 40, 100)
+    status = getattr(idx, op)(batch, broadcast_new=mode)
+    got = dict(status.collect())
+    assert len(got) == 60 and {got[i] for i in range(40, 60)} == {"exact"}
+    assert reads.value == (60 if mode else 3 * 60), reads.value
+    free_local_checkpoint(status)
+
+
+@pytest.mark.parametrize("branch", ["__h", "key"])
+def test_failed_branch_pins_nothing(spark, tmp_path, monkeypatch, branch):
+    """A probe that fails in one classify branch while the other branch
+    runs (broadcast mode runs them at once) re-raises after both have
+    finished, and the kernel frees every checkpoint it made: the
+    sketch, and the other branch's cut."""
+    from impuls_spark.llm import probe
+    from impuls_spark.llm.dedup import DedupIndex
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 30), path)
+    idx = DedupIndex.load(spark, path)
+    real = probe.pushdown_key_filter
+
+    def failing(index, key, batch):
+        if key == branch:
+            raise OSError(f"probe of {key} failed")
+        return real(index, key, batch)
+
+    monkeypatch.setattr(probe, "pushdown_key_filter", failing)
+    before = _persistent_ids(spark)
+    for op in ("classify", "ingest"):
+        with pytest.raises(OSError, match="failed"):
+            getattr(idx, op)(_docs(spark, 25, 35), broadcast_new=True)
+    assert _persistent_ids(spark) <= before
+
+
+@pytest.mark.parametrize("mode", [False, True])
+def test_failed_append_frees_the_verdicts(spark, tmp_path, monkeypatch,
+                                          mode):
+    """An append that fails after the classification has run frees the
+    verdicts and every intermediate checkpoint before the error
+    propagates, and nothing reaches the store."""
+    from impuls_spark.llm import probe
+    from impuls_spark.llm.dedup import DedupIndex
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 30), path)
+    idx = DedupIndex.load(spark, path)
+    rows = spark.read.parquet(f"{path}/hashes").count()
+
+    def fail(df, path, *keys, **kw):
+        raise OSError("append failed")
+
+    monkeypatch.setattr(probe, "write_keyed", fail)
+    before = _persistent_ids(spark)
+    with pytest.raises(OSError, match="append failed"):
+        idx.ingest(_docs(spark, 25, 35), broadcast_new=mode)
+    assert _persistent_ids(spark) <= before
+    assert spark.read.parquet(f"{path}/hashes").count() == rows
 
 
 @pytest.mark.parametrize("mode", [False, True])

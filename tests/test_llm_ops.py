@@ -52,6 +52,55 @@ def test_word_shingles(docs):
     assert len(shingles) == 7  # 9 words -> 7 trigrams
 
 
+def _reference_shingles(text, n, distinct):
+    if text is None:
+        return []
+    words = text.split(" ")  # Spark's split(" ") keeps empty words too
+    out = [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+    return sorted(set(out) if distinct else out)
+
+
+def test_word_shingles_matches_python_reference(spark):
+    import random
+
+    rng = random.Random(5)
+    long_doc = " ".join(f"w{rng.randrange(3000)}" for _ in range(20_000))
+    texts = [None, "", "one", "two words", "a  b  c d", "x\x1fy z\x1f w",
+             "żółw ünï cödé 漢字 a b", " lead trail ", "a b a b a b a",
+             long_doc]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    for n in (1, 2, 3, 5):
+        for distinct in (True, False):
+            got: dict = {}
+            for r in word_shingles(df, n=n, distinct=distinct).collect():
+                got.setdefault(r["doc_id"], []).append(r["shingle"])
+            for i, text in enumerate(texts):
+                assert sorted(got.get(i, [])) == _reference_shingles(
+                    text, n, distinct), (n, distinct, i)
+
+
+def test_word_shingles_lambda_reads_only_its_element(spark):
+    """Each shingle is built from its own zipped tuple: the lambda must
+    not index the split text, which would re-split the whole document
+    per word (quadratic; 62 s for one 20,000-word document)."""
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    plan = word_shingles(df, n=3)._jdf.queryExecution().analyzed().toString()
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, end = 0, start + len("lambdafunction")
+        for end in range(end, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", end)
+    assert bodies
+    for body in bodies:
+        assert "split(" not in body and "text#" not in body, body
+
+
 def test_exact_dedup(docs):
     groups = exact_duplicate_groups(docs).collect()
     assert len(groups) == 1

@@ -179,6 +179,51 @@ def test_ensure_in_pushdown_raises_minimally_and_monotonic(spark):
             spark.conf.set(conf, old)
 
 
+def test_ensure_in_pushdown_concurrent_raises_keep_the_max(
+    spark, monkeypatch
+):
+    """The classify kernel probes hashes and bands at once: concurrent
+    raises must leave the largest one. The threshold read is slowed, the
+    more the smaller the raise, so that unlocked every thread reads
+    before any sets and the largest raise is overwritten."""
+    import threading
+    import time
+
+    conf = "spark.sql.parquet.pushdown.inFilterThreshold"
+    old = spark.conf.get(conf, None)
+    read = probe._session_in_threshold
+    raising = threading.local()
+
+    def slow_read(session):
+        value = read(session)
+        time.sleep(0.1 - raising.n / 10_000)
+        return value
+
+    monkeypatch.setattr(probe, "_session_in_threshold", slow_read)
+    counts = [120, 900, 40, 610, 300, 75, 880, 15]
+    try:
+        spark.conf.set(conf, "10")
+        go = threading.Barrier(len(counts))
+
+        def raise_for(n):
+            raising.n = n
+            go.wait()
+            probe._ensure_in_pushdown(spark, n)
+
+        threads = [threading.Thread(target=raise_for, args=(n,))
+                   for n in counts]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert int(spark.conf.get(conf)) == max(counts) + 1
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+
+
 def test_range_cluster_shard_control(spark, tmp_path):
     """range_cluster: an explicit target_shards pins the file count;
     the AQE default coalesces a tiny artifact to a few files; with AQE
