@@ -14,10 +14,12 @@ Design rules for 100 TB readiness:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..tools.checkpoints import free_local_checkpoint
+from ..tools.checkpoints import checkpoint_rdd, free_local_checkpoint
 from ..tools.concurrency import parallel_writes
 
 SEP = "\x1f"
@@ -1248,6 +1250,23 @@ BAND_SCHEMA = "band int, key string"
 ID_COL_SUFFIX = ", __id string"
 
 
+class _Verdicts(NamedTuple):
+    """A cut-mode :meth:`DedupIndex.classify` result, kept by its
+    handle for an :meth:`DedupIndex.ingest` of the same batch: the
+    kernel's three selections of one verdict checkpoint, with what the
+    verdicts were computed from."""
+
+    #: the very frame classified, its plan deterministic: an equal
+    #: plan over a file source can list other files than this one did
+    batch: DataFrame
+    #: ``listed_files`` of the ``hashes`` and ``bands`` frames the
+    #: kernel read
+    files: tuple
+    status: DataFrame
+    new_hash: DataFrame
+    rest_bands: DataFrame
+
+
 #: the banding of a streaming corpus whose ingest started before the
 #: sidecar manifest existed: ``ingest_with_dedup``'s own defaults
 STREAM_BANDING_DEFAULTS = {"text_col": "text", "id_col": "doc_id",
@@ -1286,6 +1305,20 @@ class DedupIndex:
     :func:`lsh_candidate_pairs` upstream): two identical novel docs in
     ONE batch are both accepted ('novel' is judged against the index,
     which only sees the batch after :meth:`ingest` returns).
+
+    Classify once: a handle keeps the verdicts of its last
+    ``classify(..., broadcast_new=True)``, and an :meth:`ingest` of the
+    same batch appends from them instead of classifying again, while
+    the index files are the ones that classification read. The caller
+    owns those verdicts: the frame ``classify`` returned and the frame
+    the reusing ``ingest`` returns select from one checkpoint, and
+    ``free_local_checkpoint`` on either frees both. The handle never
+    frees them; it drops its reference on the next ``classify``,
+    ``ingest``, :meth:`remove` or :meth:`compact`. Until then that
+    reference keeps the checkpoint reachable, so dropping the classify
+    frame does not free it by garbage collection: a handle that
+    classifies and is not called again holds one batch-sized
+    checkpoint until the caller frees the frame.
     """
 
     def __init__(self, spark, path: str, meta: dict) -> None:
@@ -1295,6 +1328,8 @@ class DedupIndex:
         #: True for stream-sidecar views (epoch-partitioned artifacts,
         #: read-only — see :meth:`from_stream_index`)
         self._epoched = False
+        #: the last cut-mode classify's verdicts (see :meth:`ingest`)
+        self._held: "_Verdicts | None" = None
 
     # -- construction --------------------------------------------------
 
@@ -1523,7 +1558,13 @@ class DedupIndex:
         batch-sized) verdict frame and every intermediate checkpoint is
         freed before returning; ``free_local_checkpoint`` on the
         returned frame frees its blocks, otherwise they free when it is
-        garbage-collected.
+        garbage-collected. The handle also keeps those verdicts, for an
+        :meth:`ingest` of the same batch to append from; that ingest
+        returns a selection of the same checkpoint, so freeing either
+        frame frees both. The handle itself never frees them, and keeps
+        them reachable until its next ``classify``, ``ingest``,
+        :meth:`remove` or :meth:`compact`: until then, dropping the
+        returned frame does not free its blocks by garbage collection.
 
         Fails fast on a root ``_COMPACTING`` marker: while a
         :meth:`remove` runs (or after one crashed mid-way) the two
@@ -1531,13 +1572,42 @@ class DedupIndex:
         computed then would be silently wrong."""
         from ..streaming.compact import check_not_compacting
 
+        self._held = None
         check_not_compacting(self.spark, self.path, "classify against")
         self._check_batch(new_df)
         m = self.meta
-        return incremental_dedup(
-            new_df, None, m["text_col"], m["id_col"], m["n_hashes"],
-            m["band_size"], m["shingle_n"], corpus_hashes=self.hashes,
-            corpus_bands=self.bands, broadcast_new=broadcast_new,
+        hashes, bands = self.hashes, self.bands
+        status, new_hash, rest_bands, temps = _classify_against_index(
+            new_df, hashes, bands, m["text_col"], m["id_col"],
+            m["n_hashes"], m["band_size"], m["shingle_n"],
+            broadcast_new=broadcast_new,
+        )
+        free_local_checkpoint(*temps)
+        if broadcast_new and not self._epoched:
+            if new_df._jdf.queryExecution().analyzed().deterministic():
+                # the listings of the frames the kernel read: a write
+                # that lands after it ran must not match them
+                self._held = _Verdicts(
+                    new_df, self._index_files(hashes, bands), status,
+                    new_hash, rest_bands,
+                )
+        return status
+
+    @staticmethod
+    def _index_files(hashes: DataFrame, bands: DataFrame) -> tuple:
+        from ..tools.rows import listed_files
+
+        return listed_files(hashes), listed_files(bands)
+
+    def _holds_for(self, held: "_Verdicts | None", new_df: DataFrame,
+                   hashes: DataFrame, bands: DataFrame) -> bool:
+        """Whether ``held`` classifies ``new_df`` against the index that
+        the ``hashes``/``bands`` frames list."""
+        return (
+            held is not None
+            and held.batch is new_df
+            and checkpoint_rdd(held.status, selected=True) is not None
+            and self._index_files(hashes, bands) == held.files
         )
 
     def ingest(
@@ -1573,7 +1643,26 @@ class DedupIndex:
         joins, re-hashes or re-reads the batch. Refuses before any work
         on a ``_COMPACTING`` marker on
         the root or either store dir, and frees the kernel's
-        checkpoints on every exit path, a failed append included."""
+        checkpoints on every exit path, a failed append included.
+
+        Classify once: the kernel does not run when this handle's last
+        call was a ``classify(..., broadcast_new=True)`` whose verdicts
+        still hold for ``new_df``:
+
+        - ``new_df`` is the very frame that classify received, and its
+          plan is deterministic (an equal frame built again, say a new
+          ``spark.read.parquet`` of the same directory, re-classifies:
+          its files may have changed);
+        - the ``hashes`` and ``bands`` files listed now are exactly
+          those the classify read (so no write from any handle or
+          process, and no stray file, landed since);
+        - the caller has not freed the verdicts.
+
+        The appends then filter those verdicts, and the frame returned
+        is a selection of the checkpoint that ``classify`` returned:
+        the caller owns it, freeing either frame frees both, and a
+        failed append leaves it to the caller instead of freeing it."""
+        held, self._held = self._held, None
         if self._epoched:
             raise ValueError(
                 "this DedupIndex is a read-only view over a streaming "
@@ -1597,6 +1686,8 @@ class DedupIndex:
         check_markers()
         m = self.meta
         id_col = m["id_col"]
+        index_h, index_b = self.hashes, self.bands
+        reused = self._holds_for(held, new_df, index_h, index_b)
         # Lineage cuts before any append (`cut=True`): every downstream
         # consumer (the two append writes and the frame handed back to
         # the caller) would otherwise re-execute plans that READ the
@@ -1608,11 +1699,15 @@ class DedupIndex:
         # materialized blocks, which no path refresh can touch.
         # (Executor-loss durability caveat as with Merge's lineage cut;
         # the verdicts are batch-sized.)
-        status, new_hash, rest_bands, temps = _classify_against_index(
-            new_df, self.hashes, self.bands, m["text_col"], id_col,
-            m["n_hashes"], m["band_size"], m["shingle_n"],
-            broadcast_new=broadcast_new, cut=True,
-        )
+        if reused:
+            _, _, status, new_hash, rest_bands = held
+            temps = ()
+        else:
+            status, new_hash, rest_bands, temps = _classify_against_index(
+                new_df, index_h, index_b, m["text_col"], id_col,
+                m["n_hashes"], m["band_size"], m["shingle_n"],
+                broadcast_new=broadcast_new, cut=True,
+            )
         # appended batch files carry the same within-file key order and
         # bloom as the built artifact (local sort only — no extra
         # shuffle), so probes prune appended files too until the next
@@ -1637,7 +1732,8 @@ class DedupIndex:
                                     append=True),
             )
         except BaseException:
-            free_local_checkpoint(status)
+            if not reused:  # reused verdicts belong to the caller
+                free_local_checkpoint(status)
             raise
         finally:
             # the appends were the intermediates' last consumers; the
@@ -1657,6 +1753,7 @@ class DedupIndex:
         window at any crash point (see
         ``streaming.compact.compact_flat_dir``). Not needed for
         correctness, only for listing/open cost at scale."""
+        self._held = None
         if self._epoched:
             raise ValueError(
                 "stream-sidecar views are read-only: the ingest "
@@ -1726,6 +1823,7 @@ class DedupIndex:
         ``load(..., force=True)`` from a fresh session) converges (the
         anti-join is idempotent). Each fold additionally holds its own
         per-dir marker."""
+        self._held = None
         if self._epoched:
             raise ValueError(
                 "stream-sidecar views are read-only: stop the ingest "

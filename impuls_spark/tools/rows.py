@@ -1,8 +1,9 @@
 """Driver-side constant rows, built JVM-side (optimization guide §5:
 the driver should do almost no data work — and neither should the
 Python workers for a constant), and the artifact-dir reads built on
-them: a missing parquet path as an empty frame, and the one-row JSON
-manifest every index and shard layout carries."""
+them: a missing parquet path as an empty frame, the one-row JSON
+manifest every index and shard layout carries, and the file listing a
+read was planned over."""
 
 from __future__ import annotations
 
@@ -98,6 +99,17 @@ def read_or_empty(spark, path: str, ddl: str) -> DataFrame:
     if not _HadoopFS(spark, path).exists(path):
         return empty_df(spark, ddl)
     return spark.read.schema(ddl).parquet(path)
+
+
+def listed_files(df: DataFrame) -> "tuple[str, ...]":
+    """The files that the file index of ``df``, a bare file-source read
+    (``spark.read.parquet(path)``), listed when the frame was built:
+    one sorted ``FileStatus`` text (path, length, modification time)
+    per file. It is the state a plan over ``df`` reads; the directory
+    is not listed again. It costs the same 6 Py4J round trips whatever
+    the file count (``df.inputFiles()`` costs one per file)."""
+    files = df._jdf.queryExecution().analyzed().relation().location()
+    return tuple(sorted(files.allFiles().mkString("\n").splitlines()))
 
 
 def write_manifest(spark, path: str, meta: dict) -> None:

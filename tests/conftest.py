@@ -67,12 +67,12 @@ def feed(spark, gtfs_dir):
 # are shared across modules. So do the four GTFS pipeline end-to-end
 # tests (radom_like, warsaw_like and its CLI, the example pipeline;
 # 23-36 s each): they export whole pipeline outputs through save_gtfs.
+# So do seven cheaper ones (4-14 s each): the remove-unused-entities
+# and two merge operator tests, two ANN recall tests, the streaming
+# vector takedown and the incremental-dedup recall test.
 _SLOW_TESTS = {
     "test_merge_geo_skew_at_generator_scale",
-    "test_refined_never_below_plain_ivfpq",
-    "test_remove_unused_entities",
     "test_continuous_corpus_example_end_to_end",
-    "test_annindex_topk_matches_direct_ivfpq",
     "test_merge_lineage_cut_modes_identical",
     "test_daily_ingest_retrain_trigger",
     "test_lifecycle_recall_floors",
@@ -87,11 +87,7 @@ _SLOW_TESTS = {
     "test_multi_file_failed_build_recovers_incrementally",
     "test_distributed_row_number_property",
     "test_multi_file",
-    "test_merge_preserves_active_service",
     "test_content_maintenance_refused_until_absorbed",
-    "test_takedown_stream_vectors_mid_stream",
-    "test_merge_route_id_conflict_suffix",
-    "test_incremental_dedup_near_recall_vs_exact",
 }
 
 

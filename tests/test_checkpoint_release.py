@@ -206,7 +206,7 @@ def test_failed_ingest_pins_nothing(spark, tmp_path, monkeypatch,
     error propagates — in both join modes no RDD stays pinned."""
     import os
 
-    from impuls_spark.llm import dedup
+    from impuls_spark.llm import probe
     from impuls_spark.llm.dedup import DedupIndex
     from impuls_spark.streaming.compact import compact_marker_path
 
@@ -219,10 +219,12 @@ def test_failed_ingest_pins_nothing(spark, tmp_path, monkeypatch,
         open(marker, "w").close()  # fresh heartbeat: the holder is alive
         match = "_COMPACTING"
     else:
-        def fail(*jobs):
+        def fail(df, path, *keys, **kw):
             raise OSError("append failed")
 
-        monkeypatch.setattr(dedup, "parallel_writes", fail)
+        # the append writer alone: the classify kernel runs its
+        # branches through parallel_writes too
+        monkeypatch.setattr(probe, "write_keyed", fail)
         match = "append failed"
     base, jobs = _n_persistent(spark), spark_jobs()
     with pytest.raises((RuntimeError, OSError), match=match):
@@ -231,6 +233,80 @@ def test_failed_ingest_pins_nothing(spark, tmp_path, monkeypatch,
     if failure == "live_marker":
         assert spark_jobs() == jobs  # refused before any work
         assert os.path.exists(marker)  # another run's marker: untouched
+
+
+def _classified(spark, tmp_path, track_ids=False):
+    """(handle, batch, classify frame): a cut-mode classify of
+    ``_docs(25, 35)`` against an index of ``_docs(0, 30)``."""
+    from impuls_spark.llm.dedup import DedupIndex
+
+    path = str(tmp_path / "idx")
+    DedupIndex.build(_docs(spark, 0, 30), path, track_ids=track_ids)
+    idx = DedupIndex.load(spark, path)
+    batch = _docs(spark, 25, 35)
+    return idx, batch, idx.classify(batch, broadcast_new=True)
+
+
+@pytest.mark.parametrize("freed", ["classify", "ingest"])
+def test_reused_ingest_shares_the_classify_checkpoint(spark, tmp_path,
+                                                      freed):
+    """An ingest of the batch the handle just classified appends from
+    the classify's verdicts: both frames select from one checkpoint,
+    the only RDD the two calls pinned, and freeing either frame frees
+    it."""
+    before = _persistent_ids(spark)
+    idx, batch, classified = _classified(spark, tmp_path)
+    ingested = idx.ingest(batch, broadcast_new=True)
+    rdd = checkpoint_rdd(classified, selected=True).id()
+    assert checkpoint_rdd(ingested, selected=True).id() == rdd
+    assert _persistent_ids(spark) - before == {rdd}
+    assert dict(ingested.collect()) == dict(classified.collect())
+    free_local_checkpoint(ingested if freed == "ingest" else classified)
+    assert not _persistent_ids(spark) - before
+
+
+def test_failed_reused_append_leaves_the_classify_frame(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """A failed append of a reused ingest leaves the verdicts to the
+    caller's classify frame, which still reads; the handle drops them,
+    so the next ingest classifies again."""
+    from impuls_spark.llm import probe
+
+    idx, batch, classified = _classified(spark, tmp_path)
+    want = dict(classified.collect())
+
+    def fail(df, path, *keys, **kw):
+        raise OSError("append failed")
+
+    monkeypatch.setattr(probe, "write_keyed", fail)
+    with pytest.raises(OSError, match="append failed"):
+        idx.ingest(batch, broadcast_new=True)
+    assert dict(classified.collect()) == want
+    monkeypatch.undo()
+    jobs = spark_jobs()
+    ingested = idx.ingest(batch, broadcast_new=True)
+    assert spark_jobs() - jobs > 10  # the classify kernel ran
+    assert checkpoint_rdd(ingested, selected=True).id() != checkpoint_rdd(
+        classified, selected=True).id()
+    assert dict(ingested.collect()) == want
+    free_local_checkpoint(classified, ingested)
+
+
+def test_reused_cycles_pin_nothing(spark, tmp_path):
+    """classify → ingest → remove over 5 cycles, every frame freed: no
+    RDD stays pinned."""
+    idx, _, classified = _classified(spark, tmp_path, track_ids=True)
+    free_local_checkpoint(classified)
+    before = _persistent_ids(spark)
+    for c in range(5):
+        batch = _docs(spark, 100 + 10 * c, 110 + 10 * c)
+        classified = idx.classify(batch, broadcast_new=True)
+        ingested = idx.ingest(batch, broadcast_new=True)
+        assert dict(ingested.collect()) == dict(classified.collect())
+        idx.remove([100 + 10 * c, 101 + 10 * c])
+        free_local_checkpoint(classified, ingested)
+    assert _persistent_ids(spark) <= before
 
 
 def test_rid_frame_list_path_is_jvm_side(spark):
