@@ -19,7 +19,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..tools.checkpoints import checkpoint_rdd, free_local_checkpoint
+from ..tools.checkpoints import checkpoint_rdd, checkpoints
 from ..tools.concurrency import parallel_writes
 
 SEP = "\x1f"
@@ -687,8 +687,9 @@ def duplicate_clusters(
     groupBy on the node id. Near-dup graphs have tiny diameters (dup
     groups are cliques-ish), so rounds stay in single digits;
     ``localCheckpoint`` truncates lineage so round N's plan doesn't
-    re-analyze rounds 1..N-1. Only nodes that appear in a pair
-    participate — singletons are implicitly their own cluster.
+    re-analyze rounds 1..N-1, and every checkpoint but the one the
+    result reads is freed before returning. Only nodes that appear in
+    a pair participate — singletons are implicitly their own cluster.
 
     Convergence is probed every OTHER round, and the probe reads a
     ``changed`` flag carried through the round's own (already
@@ -698,52 +699,57 @@ def duplicate_clusters(
     (min-propagation is idempotent), so batched probing never changes
     the result.
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+    with checkpoints() as cps:
+        edges = cps.checkpoint(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            .unionByName(
+                pairs.select(
+                    F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+                )
             )
+            .distinct(),
+            eager=False,
         )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for round_ix in range(max_iterations):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("node", "dst"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nlabel"))
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "label", F.coalesce("nlabel", F.col("label"))
-                ).alias("new_label"),
-                F.col("label").alias("old_label"),
+        # the one checkpoint the result reads: the last round's labels,
+        # or the edges if no round ran
+        read = edges
+        for round_ix in range(max_iterations):
+            neighbor_min = (
+                edges.join(
+                    labels.withColumnRenamed("node", "dst"), "dst"
+                )
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.min("label").alias("nlabel"))
             )
-            .select(
-                "node",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") != F.col("old_label")).alias("changed"),
+            read = cps.checkpoint(
+                labels.join(neighbor_min, "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        "label", F.coalesce("nlabel", F.col("label"))
+                    ).alias("new_label"),
+                    F.col("label").alias("old_label"),
+                )
+                .select(
+                    "node",
+                    F.col("new_label").alias("label"),
+                    (F.col("new_label") != F.col("old_label"))
+                    .alias("changed"),
+                )
             )
-            .localCheckpoint(eager=True)
-        )
-        labels = new_labels.select("node", "label")
-        # probe every other round: the flag scan is cheap (checkpointed
-        # partitions, no join) but still an action; overshooting the
-        # fixed point by one round is free, a per-round action is not
-        if round_ix % 2 == 1 or round_ix == max_iterations - 1:
-            if new_labels.filter("changed").limit(1).count() == 0:
-                break
+            labels = read.select("node", "label")
+            # probe every other round: the flag scan is cheap (checkpointed
+            # partitions, no join) but still an action; overshooting the
+            # fixed point by one round is free, a per-round action is not
+            if round_ix % 2 == 1 or round_ix == max_iterations - 1:
+                if read.filter("changed").limit(1).count() == 0:
+                    break
+        cps.keep(read)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -817,9 +823,9 @@ def incremental_dedup(
     text, md5) that both membership tests read; the hash probe and the
     MinHash band probe run concurrently; the returned frame selects
     from a MATERIALIZED (locally checkpointed) verdict frame, which
-    ``free_local_checkpoint(result)`` frees, and every intermediate
-    checkpoint is freed before returning. Only set it when the new
-    side is trigger-bounded.
+    ``free_local_checkpoint`` on the result frees, and every
+    intermediate checkpoint is freed before returning. Only set it
+    when the new side is trigger-bounded.
     """
     if corpus_hashes is None:
         corpus_hashes = corpus_df.select(
@@ -831,12 +837,13 @@ def incremental_dedup(
                                shingle_n),
             id_col, n_hashes, band_size,
         ).select("band", "key").distinct()
-    status, _, _, temps = _classify_against_index(
-        new_df, corpus_hashes, corpus_bands,
-        text_col, id_col, n_hashes, band_size, shingle_n,
-        broadcast_new=broadcast_new,
-    )
-    free_local_checkpoint(*temps)
+    with checkpoints() as cps:
+        status, _, _ = _classify_against_index(
+            new_df, corpus_hashes, corpus_bands,
+            text_col, id_col, n_hashes, band_size, shingle_n, cps,
+            broadcast_new=broadcast_new,
+        )
+        cps.keep(status)
     return status
 
 
@@ -849,21 +856,18 @@ def _classify_against_index(
     n_hashes: int,
     band_size: int,
     shingle_n: int,
+    cps,
     broadcast_new: bool = False,
     cut: bool = False,
 ):
     """The one classify kernel, shared by :func:`incremental_dedup`,
     :meth:`DedupIndex.classify`, :meth:`DedupIndex.ingest` and the
-    streaming ingest sink. Returns ``(status, new_hash, rest_bands,
-    temps)``:
+    streaming ingest sink. Returns ``(status, new_hash, rest_bands)``:
 
     - ``status``: (id, status);
     - ``new_hash``: (id, ``__h``, status), the batch's md5 rows;
     - ``rest_bands``: (id, status, band, key), the band rows of the
-      docs that are not ``'exact'``;
-    - ``temps``: the intermediate checkpoints, which the caller frees
-      (guide §5: the r14 harness left 3 pinned batch RDDs per
-      classification to Python GC, measured as 4-6x rep-time spikes).
+      docs that are not ``'exact'``.
 
     All three frames select from one verdict frame (id, ``__h``,
     status, ``__b``: the doc's band keys), so an ingest's appends are
@@ -883,18 +887,14 @@ def _classify_against_index(
 
     ``cut`` (always on in broadcast mode) materializes the bands and
     the verdicts with ``localCheckpoint``; ``status`` then selects from
-    a checkpoint, and ``free_local_checkpoint(status)`` frees it.
-    Without it (and without ``broadcast_new``) every frame stays lazy.
-    If the kernel raises, it frees what it had already checkpointed."""
+    a checkpoint. Without it (and without ``broadcast_new``) every
+    frame stays lazy. Every checkpoint goes through the caller's
+    :func:`~impuls_spark.tools.checkpoints.checkpoints` scope ``cps``,
+    which frees them all when it exits, the kernel failing included;
+    a caller that returns ``status`` keeps it with ``cps.keep``."""
     cut = cut or broadcast_new
-    temps: list = []
 
-    def checkpoint(df: DataFrame) -> DataFrame:
-        df = df.localCheckpoint(eager=True)
-        temps.append(df)
-        return df
-
-    def keep(df: DataFrame) -> DataFrame:
+    def same(df: DataFrame) -> DataFrame:
         return df
 
     def probe(index: DataFrame, key: str, batch: DataFrame) -> DataFrame:
@@ -914,79 +914,74 @@ def _classify_against_index(
     # batch-bounded — hint them all so one classification plans ZERO
     # sort-merge joins, and cut each branch's result so the verdict
     # join reads blocks, not the branches' plans
-    small = F.broadcast if broadcast_new else keep
-    batch_cut = checkpoint if broadcast_new else keep
-    band_cut = checkpoint if cut else keep
+    small = F.broadcast if broadcast_new else same
+    batch_cut = cps.checkpoint if broadcast_new else same
+    band_cut = cps.checkpoint if cut else same
     got: dict = {}
-    try:
-        sketch = batch_cut(new_df.select(
-            F.col(id_col), F.col(text_col),
-            F.md5(F.col(text_col)).alias("__h"),
+    sketch = batch_cut(new_df.select(
+        F.col(id_col), F.col(text_col),
+        F.md5(F.col(text_col)).alias("__h"),
+    ))
+    doc_hash = sketch.select(id_col, "__h")
+
+    def hash_branch() -> None:
+        got["exact"] = batch_cut(doc_hash.join(
+            probe(corpus_hashes, "__h", doc_hash), "__h", "left_semi"
+        ).select(id_col))
+
+    def band_branch() -> None:
+        # the ONE MinHash pass: the bands probe and `near` read it
+        bands = band_cut(_band_keys(
+            minhash_signatures(sketch, text_col, id_col, n_hashes,
+                               shingle_n),
+            id_col, n_hashes, band_size,
         ))
-        doc_hash = sketch.select(id_col, "__h")
-
-        def hash_branch() -> None:
-            got["exact"] = batch_cut(doc_hash.join(
-                probe(corpus_hashes, "__h", doc_hash), "__h", "left_semi"
-            ).select(id_col))
-
-        def band_branch() -> None:
-            # the ONE MinHash pass: the bands probe and `near` read it
-            bands = band_cut(_band_keys(
-                minhash_signatures(sketch, text_col, id_col, n_hashes,
-                                   shingle_n),
-                id_col, n_hashes, band_size,
-            ))
-            # the probe is on `key` alone (a composite (band, key) In is
-            # not pushable): its matches are exact on the key, and this
-            # (band, key) semi-join refines cross-band collisions
-            hits = bands.join(probe(corpus_bands, "key", bands),
-                              ["band", "key"], "left_semi")
-            # one aggregate gathers each doc's band keys (what an
-            # ingest appends) and whether any collided; a semi-join
-            # feeds it because the probe may repeat a bucket (a tracked
-            # index holds one row per doc), which an outer join would
-            # multiply
-            bk = F.struct("band", "key").alias("__bk")
-            got["near"] = batch_cut(
-                bands.select(id_col, bk, F.lit(False).alias("__n"))
-                .unionByName(hits.select(id_col, bk,
-                                         F.lit(True).alias("__n")))
-                .groupBy(id_col)
-                .agg(F.collect_set("__bk").alias("__b"),
-                     F.max("__n").alias("__n"))
-            )
-
-        parallel_writes(hash_branch, band_branch)
-        verdict = (
-            doc_hash
-            .join(small(got["exact"].withColumn("__e", F.lit(1))),
-                  id_col, "left")
-            .join(small(got["near"]), id_col, "left")
-            .select(
-                id_col, "__h",
-                F.when(F.col("__e").isNotNull(), F.lit("exact"))
-                .when(F.col("__n"), F.lit("near"))
-                .otherwise(F.lit("novel"))
-                .alias("status"),
-                "__b",
-            )
+        # the probe is on `key` alone (a composite (band, key) In is
+        # not pushable): its matches are exact on the key, and this
+        # (band, key) semi-join refines cross-band collisions
+        hits = bands.join(probe(corpus_bands, "key", bands),
+                          ["band", "key"], "left_semi")
+        # one aggregate gathers each doc's band keys (what an ingest
+        # appends) and whether any collided; a semi-join feeds it
+        # because the probe may repeat a bucket (a tracked index holds
+        # one row per doc), which an outer join would multiply
+        bk = F.struct("band", "key").alias("__bk")
+        got["near"] = batch_cut(
+            bands.select(id_col, bk, F.lit(False).alias("__n"))
+            .unionByName(hits.select(id_col, bk,
+                                     F.lit(True).alias("__n")))
+            .groupBy(id_col)
+            .agg(F.collect_set("__bk").alias("__b"),
+                 F.max("__n").alias("__n"))
         )
-        if cut:
-            # the verdicts themselves, kept apart from `temps`: the
-            # caller's status reads them. The eager evaluation adds no
-            # total work: the caller's action was about to run this
-            # exact plan.
-            verdict = verdict.localCheckpoint(eager=True)
-    except BaseException:
-        free_local_checkpoint(*temps)
-        raise
+
+    # the scope frees only when the caller's block exits, after this
+    # has joined both branches
+    parallel_writes(hash_branch, band_branch)
+    verdict = (
+        doc_hash
+        .join(small(got["exact"].withColumn("__e", F.lit(1))),
+              id_col, "left")
+        .join(small(got["near"]), id_col, "left")
+        .select(
+            id_col, "__h",
+            F.when(F.col("__e").isNotNull(), F.lit("exact"))
+            .when(F.col("__n"), F.lit("near"))
+            .otherwise(F.lit("novel"))
+            .alias("status"),
+            "__b",
+        )
+    )
+    if cut:
+        # the verdicts themselves, which the caller's status reads. The
+        # eager evaluation adds no total work: the caller's action was
+        # about to run this exact plan.
+        verdict = cps.checkpoint(verdict)
     return (
         verdict.select(id_col, "status"),
         verdict.select(id_col, "__h", "status"),
         verdict.where(F.col("status") != "exact")
         .select(id_col, "status", F.inline("__b")),
-        tuple(temps),
     )
 
 
@@ -1577,12 +1572,13 @@ class DedupIndex:
         self._check_batch(new_df)
         m = self.meta
         hashes, bands = self.hashes, self.bands
-        status, new_hash, rest_bands, temps = _classify_against_index(
-            new_df, hashes, bands, m["text_col"], m["id_col"],
-            m["n_hashes"], m["band_size"], m["shingle_n"],
-            broadcast_new=broadcast_new,
-        )
-        free_local_checkpoint(*temps)
+        with checkpoints() as cps:
+            status, new_hash, rest_bands = _classify_against_index(
+                new_df, hashes, bands, m["text_col"], m["id_col"],
+                m["n_hashes"], m["band_size"], m["shingle_n"], cps,
+                broadcast_new=broadcast_new,
+            )
+            cps.keep(status)
         if broadcast_new and not self._epoched:
             if new_df._jdf.queryExecution().analyzed().deterministic():
                 # the listings of the frames the kernel read: a write
@@ -1688,6 +1684,12 @@ class DedupIndex:
         id_col = m["id_col"]
         index_h, index_b = self.hashes, self.bands
         reused = self._holds_for(held, new_df, index_h, index_b)
+        # appended batch files carry the same within-file key order and
+        # bloom as the built artifact (local sort only — no extra
+        # shuffle), so probes prune appended files too until the next
+        # compact folds them into the range-partitioned layout
+        from .probe import write_keyed
+
         # Lineage cuts before any append (`cut=True`): every downstream
         # consumer (the two append writes and the frame handed back to
         # the caller) would otherwise re-execute plans that READ the
@@ -1698,23 +1700,18 @@ class DedupIndex:
         # to 'exact'/'near'. localCheckpoint truncates the plan to the
         # materialized blocks, which no path refresh can touch.
         # (Executor-loss durability caveat as with Merge's lineage cut;
-        # the verdicts are batch-sized.)
-        if reused:
-            _, _, status, new_hash, rest_bands = held
-            temps = ()
-        else:
-            status, new_hash, rest_bands, temps = _classify_against_index(
-                new_df, index_h, index_b, m["text_col"], id_col,
-                m["n_hashes"], m["band_size"], m["shingle_n"],
-                broadcast_new=broadcast_new, cut=True,
-            )
-        # appended batch files carry the same within-file key order and
-        # bloom as the built artifact (local sort only — no extra
-        # shuffle), so probes prune appended files too until the next
-        # compact folds them into the range-partitioned layout
-        from .probe import write_keyed
-
-        try:
+        # the verdicts are batch-sized.) The scope frees the kernel's
+        # checkpoints on every exit but keeps the status once the
+        # appends land; reused verdicts are the caller's, not in it.
+        with checkpoints() as cps:
+            if reused:
+                _, _, status, new_hash, rest_bands = held
+            else:
+                status, new_hash, rest_bands = _classify_against_index(
+                    new_df, index_h, index_b, m["text_col"], id_col,
+                    m["n_hashes"], m["band_size"], m["shingle_n"], cps,
+                    broadcast_new=broadcast_new, cut=True,
+                )
             # a compaction that started during classification
             check_markers()
             hashes, bands = _accepted_rows(
@@ -1731,15 +1728,7 @@ class DedupIndex:
                 lambda: write_keyed(hashes, f"{self.path}/hashes", "__h",
                                     append=True),
             )
-        except BaseException:
-            if not reused:  # reused verdicts belong to the caller
-                free_local_checkpoint(status)
-            raise
-        finally:
-            # the appends were the intermediates' last consumers; the
-            # returned status is a standalone checkpoint, so the
-            # caller's reads never touch the freed blocks
-            free_local_checkpoint(*temps)
+            cps.keep(status)
         return status
 
     def compact(self, target_shards: int = 1,

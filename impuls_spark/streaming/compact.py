@@ -50,7 +50,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tools.checkpoints import free_local_checkpoint
+from ..tools.checkpoints import checkpoints
 from ..tools.concurrency import parallel_writes
 from ..tools.rows import empty_df
 from .sinks import EPOCH_COL
@@ -315,18 +315,21 @@ def _acquire_compact_marker(
 
 class _Scope:
     """One :func:`maintenance` scope: the marker lease it holds or
-    borrows and the checkpoints it made. The scope that OWNS the
-    marker also records, for every scope borrowing it, whether the run
-    has mutated anything yet and which exception was a refusal."""
+    borrows and its checkpoint scope. The scope that OWNS the marker
+    also records, for every scope borrowing it, whether the run has
+    mutated anything yet and which exception was a refusal."""
 
-    def __init__(self, spark, path, stale_after_sec, force, lease, owner):
+    def __init__(self, spark, path, stale_after_sec, force, lease, owner,
+                 cps):
         self.spark = spark
         self.path = path
         self.stale_after_sec = stale_after_sec
         self.force = force
         self._lease = lease
         self._owner = owner if owner is not None else self
-        self._frames: list = []
+        #: ``checkpoint(df)``: an eager local checkpoint, freed when the
+        #: scope exits; only for frames whose consumers all finish in it
+        self.checkpoint = cps.checkpoint
         self._mutated = False
         self._refusal = None
 
@@ -342,14 +345,6 @@ class _Scope:
             if not self._owner._mutated:
                 self._owner._refusal = exc
             raise
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        """``df.localCheckpoint(eager=True)``, freed when the scope
-        exits — on success, refusal and failure alike (guide §5). Only
-        for frames whose every consumer finishes inside the scope."""
-        cp = df.localCheckpoint(eager=True)
-        self._frames.append(cp)
-        return cp
 
 
 @contextmanager
@@ -371,37 +366,36 @@ def maintenance(
     - any other failure abandons it — the heartbeat stops and the
       marker stays, so readers fail fast until a ``force=True`` re-run
       converges;
-    - every ``m.checkpoint(df)`` is freed.
+    - every ``m.checkpoint(df)`` is freed (a ``checkpoints()`` scope).
 
     ``lease=`` borrows the marker of an enclosing scope instead of
     taking one (an operator running as one step of a longer chain
     under the chain's marker): the borrower never releases it — its
     success or failure marks the owner's run as mutated, and a failure
     also abandons the marker, which then stays abandoned."""
-    if lease is None:
-        held = _acquire_compact_marker(
-            _HadoopFS(spark, path), path, stale_after_sec, force
-        )
-        m = _Scope(spark, path, stale_after_sec, force, held, None)
-    else:
-        m = _Scope(spark, path, stale_after_sec, force,
-                   lease._lease, lease._owner)
-    owner = m._owner
-    try:
-        yield m
-    except BaseException as exc:
-        if exc is not owner._refusal:
+    with checkpoints() as cps:
+        if lease is None:
+            held = _acquire_compact_marker(
+                _HadoopFS(spark, path), path, stale_after_sec, force
+            )
+            m = _Scope(spark, path, stale_after_sec, force, held, None, cps)
+        else:
+            m = _Scope(spark, path, stale_after_sec, force,
+                       lease._lease, lease._owner, cps)
+        owner = m._owner
+        try:
+            yield m
+        except BaseException as exc:
+            if exc is not owner._refusal:
+                owner._mutated = True
+                m._lease.abandon()
+            elif m is owner:
+                m._lease.release()
+            raise
+        else:
             owner._mutated = True
-            m._lease.abandon()
-        elif m is owner:
-            m._lease.release()
-        raise
-    else:
-        owner._mutated = True
-        if m is owner:
-            m._lease.release()
-    finally:
-        free_local_checkpoint(*m._frames)
+            if m is owner:
+                m._lease.release()
 
 
 def _epoch_dirs(path: str, fs: "_HadoopFS | None" = None) -> "dict[int, str]":

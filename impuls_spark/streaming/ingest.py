@@ -39,7 +39,7 @@ from ..llm.dedup import (
 )
 from ..llm.probe import write_keyed
 from ..sources.corpus import write_corpus
-from ..tools.checkpoints import free_local_checkpoint
+from ..tools.checkpoints import checkpoints
 from ..tools.concurrency import parallel_writes
 from ..tools.rows import (
     manifest_params,
@@ -169,23 +169,23 @@ def ingest_with_dedup(
         # and both copies would otherwise pass the semi-join; ADVICE r6)
         # checkpointed: the classification and the corpus write read
         # ONE evaluation of the batch, so the corpus rows and the index
-        # rows always describe the same documents
-        uniq = batch.join(
-            w_first.select(id_col), id_col, "left_semi"
-        ).dropDuplicates([id_col]).localCheckpoint(eager=True)
-        status, temps = None, ()
-        try:
+        # rows always describe the same documents. The scope frees every
+        # checkpoint of the epoch when it ends, a failed write included
+        with checkpoints() as cps:
+            uniq = cps.checkpoint(batch.join(
+                w_first.select(id_col), id_col, "left_semi"
+            ).dropDuplicates([id_col]))
             # micro-batches are trigger-bounded: broadcast the batch
             # keys instead of exchanging the index tables every epoch.
             # The kernel's md5 and band frames are the epoch's index
             # rows, so nothing re-hashes the accepted docs.
-            status, new_hash, rest_bands, temps = _classify_against_index(
+            status, new_hash, rest_bands = _classify_against_index(
                 uniq,
                 _read_or_empty(spark, hashes_path, HASH_SCHEMA,
                                int(epoch_id)),
                 _read_or_empty(spark, bands_path, BAND_SCHEMA,
                                int(epoch_id)),
-                text_col, id_col, n_hashes, band_size, shingle_n,
+                text_col, id_col, n_hashes, band_size, shingle_n, cps,
                 broadcast_new=True,
             )
             new_hashes, new_bands = (
@@ -213,12 +213,6 @@ def ingest_with_dedup(
                 lambda: write_keyed(new_bands, bands_path, "key",
                                     epoch_col=EPOCH_COL),
             )
-        finally:
-            # epoch over: free this batch's checkpoint blocks NOW
-            # instead of pinning batch-sized RDDs per epoch until
-            # Python GC (guide §5; the d74-class churn VERDICT r14
-            # flagged), on a failed write too
-            free_local_checkpoint(uniq, status, *temps)
 
         if (
             compact_every

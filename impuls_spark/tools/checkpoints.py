@@ -7,19 +7,24 @@ finalizer round-trip runs. A loop that checkpoints per batch/iteration
 (ingest epochs, classify reps, Lloyd iterations) therefore accumulates
 dead blocks for an unbounded number of GC cycles; r14 measured this as
 4-6x rep-time spikes on d74 (+3 persistent RDDs per classify, storage
-reclaimed "within 2 reps"). Freeing the blocks at the exact point the
-last consumer is done makes memory behaviour flat and deterministic.
+reclaimed "within 2 reps").
 
-ONLY call this when every frame derived from the checkpoint has been
-fully evaluated (or checkpointed itself): a locally-checkpointed RDD
-has its lineage truncated, so a use after free raises
-``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing.
-Maintenance code never calls it directly: a takedown or fold takes its
-batch checkpoints through ``streaming.compact.maintenance``'s
-``m.checkpoint(df)``, which frees them on every exit path.
+One lifetime rule frees them: ``with checkpoints() as cps:`` frees
+every ``cps.checkpoint(df)`` of the block when it exits — on success,
+refusal and failure alike — except those ``cps.keep(frame)`` hands to
+the caller, who may free them with :func:`free_local_checkpoint`. The
+dedup kernel, the streaming sinks, the Lloyd loops, label propagation
+and ``maintenance`` scopes (``m.checkpoint``) all checkpoint this way.
+
+A local checkpoint has its lineage truncated, so a use after free
+raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing:
+every frame that reads a checkpoint must be fully evaluated (or
+checkpointed itself) before it is freed.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 
 def checkpoint_rdd(df, selected: bool = False):
@@ -43,20 +48,51 @@ def checkpoint_rdd(df, selected: bool = False):
     return rdd if rdd.getStorageLevel().isValid() else None
 
 
+class Checkpoints:
+    """The checkpoints one :func:`checkpoints` scope made and kept."""
+
+    def __init__(self) -> None:
+        # parallel_writes threads append (atomic) before the scope exits
+        self._made: list = []
+        self._kept: set = set()
+
+    def checkpoint(self, df, eager: bool = True):
+        """``df.localCheckpoint(eager)``, freed when the scope exits."""
+        cp = df.localCheckpoint(eager)
+        self._made.append(cp)
+        return cp
+
+    def keep(self, df) -> None:
+        """Leave the checkpoint behind ``df`` (one of this scope's, or a
+        plain column selection of one) to the caller; no-op otherwise."""
+        rdd = checkpoint_rdd(df, selected=True)
+        if rdd is not None:
+            self._kept.add(rdd.id())
+
+
+@contextmanager
+def checkpoints():
+    """``with checkpoints() as cps:`` (see the module docstring). The
+    release is best-effort and non-blocking: a py4j failure degrades to
+    the GC-eventually behaviour instead of failing the caller."""
+    cps = Checkpoints()
+    try:
+        yield cps
+    finally:
+        for df in cps._made:
+            try:
+                rdd = checkpoint_rdd(df, selected=True)
+                if rdd is not None and rdd.id() not in cps._kept:
+                    rdd.unpersist(False)
+            except Exception:  # noqa: BLE001 — cleanup must never fail a job
+                pass
+
+
 def free_local_checkpoint(*dfs) -> None:
     """Unpersist the checkpoint blocks behind locally-checkpointed
-    DataFrames, best-effort (non-blocking). A frame that selects
-    columns of a checkpoint frees that checkpoint (the dedup verdicts
-    are returned that way); any other frame not backed by a
-    ``LogicalRDD`` (not actually checkpointed) is skipped. Any
-    py4j/internal failure degrades to the old GC-eventually behaviour
-    rather than raising into the caller's write path."""
-    for df in dfs:
-        if df is None:
-            continue
-        try:
-            rdd = checkpoint_rdd(df, selected=True)
-            if rdd is not None:
-                rdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — cleanup must never fail a job
-            pass
+    DataFrames, as a scope that made them and keeps none. A frame that
+    selects columns of a checkpoint frees that checkpoint (the dedup
+    verdicts are returned that way); any other frame not backed by a
+    ``LogicalRDD`` (not actually checkpointed) is skipped."""
+    with checkpoints() as cps:
+        cps._made.extend(df for df in dfs if df is not None)

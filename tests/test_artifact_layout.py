@@ -177,6 +177,23 @@ def test_artifact_files_are_key_sorted_with_bloom(spark, tmp_path, writer):
         assert rows > 0, f"{writer} wrote no {d} rows"
 
 
+def test_small_append_blooms_are_sized_to_the_rows(spark, tmp_path):
+    """A bloom without an expected NDV is sized at its 1 MiB maximum;
+    the adaptive writer sizes it to the distinct keys it saw, so a
+    40-doc ingest appends files of kilobytes that still carry a bloom
+    in every row group."""
+    path, dirs, ingest = _dedup_ingest(spark, tmp_path)
+    before = {d: _files(f"{path}/{d}") for d in dirs}
+    ingest()
+    for d, key in dirs.items():
+        written = _files(f"{path}/{d}") - before[d]
+        assert written, d
+        for f in written:
+            assert os.path.getsize(f) < 256 * 1024, (f, os.path.getsize(f))
+            offsets = _bloom_offsets(spark, f, key)
+            assert offsets and all(o >= 0 for o in offsets), (f, offsets)
+
+
 def test_manifest_round_trip(spark, tmp_path):
     path = str(tmp_path / "manifest")
     assert read_manifest(spark, path) is None
