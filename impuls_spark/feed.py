@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schema as S
-from .tools.checkpoints import checkpoint_rdd
+from .tools.checkpoints import Checkpoints, checkpoint_rdd
 from .tools.concurrency import parallel_writes
 from .tools.rows import empty_df
 
@@ -161,8 +161,8 @@ class FeedDataset(Mapping[str, DataFrame]):
                 frontier.append(fk.child)
         return feed
 
-    def checkpoint(self, eager: bool = True) -> "FeedDataset":
-        """Truncate every table's lineage via ``localCheckpoint``.
+    def checkpoint(self, cps: Checkpoints | None = None) -> "FeedDataset":
+        """Truncate every table's lineage via a checkpoint in ``cps``.
 
         Deep operator chains (truncate -> merge -> simplify -> split ->
         extend) build plan trees that Catalyst re-analyzes at every step
@@ -187,7 +187,12 @@ class FeedDataset(Mapping[str, DataFrame]):
           flight, so their small single-stage jobs overlap instead of
           each paying the scheduling floor in turn. A failure in one
           re-raises from here once the others have finished.
+
+        ``Pipeline.run`` passes its run's scope, which frees each cut
+        once the feed no longer reads it; the cuts its returned feed
+        reads are the caller's. By default nothing releases them.
         """
+        cps = cps or Checkpoints()
         out: dict[str, DataFrame] = {}
         cut = []
         for name, df in self._tables.items():
@@ -201,7 +206,7 @@ class FeedDataset(Mapping[str, DataFrame]):
                 cut.append(name)
 
         def cut_one(name: str) -> None:
-            out[name] = self._tables[name].localCheckpoint(eager=eager)
+            out[name] = cps.checkpoint(self._tables[name])
 
         parallel_writes(*[lambda n=name: cut_one(n) for name in cut])
         return FeedDataset(self.spark, {name: out[name] for name in self._tables})

@@ -45,7 +45,8 @@ from .operators.merge import Merge
 from .pipeline import Pipeline
 from .resource import Resource, prepare_resources
 from .sources import load_feed_parquet, load_gtfs, save_feed_parquet
-from .task import PipelineOptions, Task, TaskRuntime
+from .task import PipelineOptions, Task
+from .tools.checkpoints import free_read
 from .tools.temporal import DateRange
 
 
@@ -172,6 +173,7 @@ class MultiFile:
         spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"multifile-{f.version}"
         )
+        feed = None
         try:
             in_path = fetched[f"{f.version}.input"].path
             feed = self.loader(spark, in_path)
@@ -197,6 +199,8 @@ class MultiFile:
             with open(os.path.join(snap, "_SNAPSHOT_OK"), "w") as fh:
                 json.dump({"version": f.version}, fh)
         finally:
+            if feed is not None:  # MultiFile owns the version's lineage
+                free_read(feed.values())
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
     def run(self, spark: SparkSession) -> FeedDataset:

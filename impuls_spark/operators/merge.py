@@ -40,9 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .. import schema as S
 from ..feed import FeedDataset
 from ..task import BaseTask, TaskRuntime
+from ..tools.checkpoints import Checkpoints
 from .ranks import distributed_row_number
 SEP = ":"
 STOP_MERGE_DISTANCE_M = 10.0
@@ -153,43 +153,19 @@ def _make_greedy_geo_match(dist_m: float):
 
 class Merge(BaseTask):
     """``sources`` is an ordered list of (prefix, FeedDataset); earlier
-    feeds win all dedup ties."""
+    feeds win all dedup ties.
 
-    LINEAGE_CUTS = ("local", "persist", "checkpoint", "none")
+    Its cuts are lazy local checkpoints (``runtime.checkpoints``) like
+    every other cut of a pipeline run, so no other kind of cut here
+    alone would make a run survive an executor loss."""
 
     def __init__(self, sources: Sequence[tuple[str, FeedDataset]],
                  distance_m: float = STOP_MERGE_DISTANCE_M,
-                 geo_presplit_deg: float | None = None,
-                 lineage_cut: str = "local") -> None:
+                 geo_presplit_deg: float | None = None) -> None:
         if not sources:
             raise ValueError("Merge needs at least one source feed")
         self.sources = list(sources)
         self.distance_m = distance_m
-        # How the pairs/mapping frames are materialized so remap sites
-        # reuse them instead of re-executing the geo-match subtree
-        # (r8: 36 re-embedded pandas subtrees -> 0):
-        #   "local"      — localCheckpoint(eager=False). Fastest, but the
-        #                  blocks live on executors with NO lineage to
-        #                  recompute from: executor loss / decommission /
-        #                  dynamic-allocation shrink fails the job. Right
-        #                  default for local mode and static clusters.
-        #   "persist"    — persist(MEMORY_AND_DISK). Keeps lineage, so a
-        #                  lost block recomputes (the geo match re-runs
-        #                  for that partition only); execution still hits
-        #                  the cache at every remap site. Use on
-        #                  preemptible / dynamically-allocated clusters.
-        #   "checkpoint" — reliable checkpoint (requires
-        #                  spark.sparkContext.setCheckpointDir on a
-        #                  shared filesystem): survives executor loss
-        #                  AND truncates lineage. The durable choice.
-        #   "none"       — no cut; every remap site re-embeds the
-        #                  subtree. Only for plan debugging.
-        if lineage_cut not in self.LINEAGE_CUTS:
-            raise ValueError(
-                f"lineage_cut must be one of {self.LINEAGE_CUTS}, "
-                f"got {lineage_cut!r}"
-            )
-        self.lineage_cut = lineage_cut
         # Opt-in mega-block distribution: include a floor(lat/deg),
         # floor(lon/deg) coarse cell in the stop blocking key so a
         # pathological content-hash block (hundreds of thousands of
@@ -202,18 +178,6 @@ class Merge(BaseTask):
         self.geo_presplit_deg = geo_presplit_deg
 
     # -- helpers -------------------------------------------------------
-
-    def _cut(self, df: DataFrame) -> DataFrame:
-        """Materialize a reused frame per ``lineage_cut`` (see __init__)."""
-        if self.lineage_cut == "local":
-            return df.localCheckpoint(eager=False)
-        if self.lineage_cut == "persist":
-            from pyspark import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        if self.lineage_cut == "checkpoint":
-            return df.checkpoint(eager=False)
-        return df
 
     def _union(self, table: str) -> DataFrame:
         parts = []
@@ -274,7 +238,7 @@ class Merge(BaseTask):
 
     # -- stops ---------------------------------------------------------
 
-    def _merge_stops(self, stops_all: DataFrame):
+    def _merge_stops(self, stops_all: DataFrame, cps: Checkpoints):
         """Content-hash blocking + greedy first-wins geo match (≤10 m)
         within each block (reference merge.py:387-425). Per-block greedy
         pass runs in pandas, grid-indexed so even a pathological
@@ -322,11 +286,8 @@ class Merge(BaseTask):
         # translations, parent_station, ...) — without a lineage cut
         # each site re-embeds and RE-EXECUTES the geo-match pandas
         # subtree (the r8 e2e plan audit counted 36 FlatMapGroupsInPandas
-        # nodes in the merged transfers plan alone). Materialize once;
-        # the cut strategy is the task-level lineage_cut (ADVICE r8:
-        # localCheckpoint blocks are unrecoverable on executor loss —
-        # "persist"/"checkpoint" are the cluster-safe alternatives).
-        pairs = self._cut(pairs)
+        # nodes in the merged transfers plan alone). Materialize once.
+        pairs = cps.checkpoint(pairs, eager=False)
         winners_keys = pairs.filter(
             (F.col("__ix") == F.col("__w_ix")) & (F.col("stop_id") == F.col("__w_id"))
         ).select("__ix", "stop_id")
@@ -361,18 +322,19 @@ class Merge(BaseTask):
 
     def merged(self, runtime: TaskRuntime) -> FeedDataset:
         spark = runtime.spark
+        cps = runtime.checkpoints
 
         agencies = self._dedup_by_id(self._union("agencies"), "agency_id")
         attributions = self._dedup_by_id(self._union("attributions"), "attribution_id")
 
         routes, route_map = self._merge_routes(self._union("routes"))
-        stop_winners, stop_map = self._merge_stops(self._union("stops"))
+        stop_winners, stop_map = self._merge_stops(self._union("stops"), cps)
         # mapping frames feed one remap site per FK column across the
         # whole feed; cut their window/join lineage so each site reuses
         # a materialized map instead of replaying it (broadcast hints at
         # the sites stay explicit — checkpointed frames are statsless)
-        route_map = self._cut(route_map)
-        stop_map = self._cut(stop_map)
+        route_map = cps.checkpoint(route_map, eager=False)
+        stop_map = cps.checkpoint(stop_map, eager=False)
 
         def remap(df: DataFrame, col: str, mapping: DataFrame,
                   key: str, new: str) -> DataFrame:

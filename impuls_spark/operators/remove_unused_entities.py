@@ -129,12 +129,10 @@ class RemoveUnusedEntities(BaseTask):
         # key frames are metadata-small but *used* by many prunes below;
         # without a lineage cut each use re-derives them from the fact
         # table (measured ~12 redundant passes over stop_times on a
-        # 1.4 M-row feed). localCheckpoint materializes each once.
-        trip_keys = trip_keys.localCheckpoint(eager=False)
-        cal_keys = cal_keys.localCheckpoint(eager=False)
-        route_keys = route_keys.localCheckpoint(eager=False)
-        agency_keys = agency_keys.localCheckpoint(eager=False)
-        stop_keys = stop_keys.localCheckpoint(eager=False)
+        # 1.4 M-row feed). A lazy checkpoint materializes each once.
+        trip_keys, cal_keys, route_keys, agency_keys, stop_keys = (
+            runtime.checkpoints.checkpoint(keys, eager=False) for keys in
+            (trip_keys, cal_keys, route_keys, agency_keys, stop_keys))
 
         # ---- single-pass prunes against the final key sets -----------
         out = {

@@ -238,7 +238,7 @@ class SplitTripLegs(BaseTask):
         # rows, multi-leg main, boundary copies, per-leg metadata, trip
         # rewrites) — cut lineage once so each branch reuses the
         # materialized window result instead of re-running it
-        marked = marked.localCheckpoint(eager=False)
+        marked = runtime.checkpoints.checkpoint(marked, eager=False)
         per_trip = marked.groupBy("trip_id").agg(
             (F.max("__leg") + 1).alias("__n_legs"),
             # a single-leg trip is "whole-bus" iff its LEADING flag is
@@ -249,7 +249,7 @@ class SplitTripLegs(BaseTask):
             .cast("int").alias("__any_bus"),
         )
         marked = marked.join(per_trip, "trip_id")
-        marked = marked.localCheckpoint(eager=False)
+        marked = runtime.checkpoints.checkpoint(marked, eager=False)
 
         # ---- single-leg trips: stop_times unchanged; whole-bus trips
         # just move to the cloned bus route -------------------------------

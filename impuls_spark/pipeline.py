@@ -11,12 +11,16 @@ impuls/app.py (CLI wrapper). Differences by design:
   keep analysis cost bounded;
 - resources resolve on the driver before the first task, with the same
   fetch/cache/InputNotModified semantics (see resource.py).
+
+A run records the checkpoints its tasks (``runtime.checkpoints``) and
+barriers make. After each barrier and at return it frees those the feed
+no longer reads, and all of them if it fails. The returned feed's are
+the caller's, like the caller's own, which are never recorded.
 """
 
 from __future__ import annotations
 
 import logging
-import time
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
@@ -24,7 +28,7 @@ from pyspark.sql import SparkSession
 from .errors import InputNotModified
 from .feed import FeedDataset
 from .task import PipelineOptions, Task, TaskRuntime
-from .tools.checkpoints import checkpoint_rdd, free_local_checkpoint
+from .tools.checkpoints import checkpoints
 from .tools.machine_load import LoadTracker
 
 logger = logging.getLogger(__name__)
@@ -69,42 +73,24 @@ class Pipeline:
     def run(self, spark: SparkSession, feed: FeedDataset | None = None) -> FeedDataset:
         resources = self.prepare_resources() if self.resources else {}
         resources = {**self.prefetched_resources, **resources}
-        runtime = TaskRuntime(spark=spark, resources=resources, options=self.options)
         feed = feed if feed is not None else FeedDataset.empty(spark)
 
         self.run_stats = []
-        #: checkpoints this run's barriers made that the feed still uses
-        owned: list = []
-        for i, task in enumerate(self.tasks, start=1):
-            with LoadTracker() as tracker:
-                feed = task.transform(feed, runtime)
-                if self.checkpoint_every and i % self.checkpoint_every == 0:
-                    feed, owned = _barrier(feed, owned)
-            stats = {"task": task.name, **tracker.stats()}
-            self.run_stats.append(stats)
-            logger.info(
-                "Task %s finished in %.2fs (peak RSS %.0f MiB)",
-                task.name, stats["seconds"], stats["peak_rss_mib"],
-            )
+        with checkpoints() as cps:
+            runtime = TaskRuntime(spark, resources, self.options, cps)
+            last = len(self.tasks)
+            for i, task in enumerate(self.tasks, start=1):
+                with LoadTracker() as tracker:
+                    feed = task.transform(feed, runtime)
+                    barrier = self.checkpoint_every and i % self.checkpoint_every == 0
+                    if barrier:
+                        feed = feed.checkpoint(cps)
+                    if barrier or i == last:
+                        cps.release(feed.values(), hand_over=i == last)
+                stats = {"task": task.name, **tracker.stats()}
+                self.run_stats.append(stats)
+                logger.info(
+                    "Task %s finished in %.2fs (peak RSS %.0f MiB)",
+                    task.name, stats["seconds"], stats["peak_rss_mib"],
+                )
         return feed
-
-
-def _barrier(feed: FeedDataset, owned: list) -> tuple[FeedDataset, list]:
-    """Checkpoint ``feed``, then free the blocks of every frame in
-    ``owned`` (checkpoints earlier barriers made) that the new feed no
-    longer holds. Once the barrier has materialized, nothing reads
-    them: every table is a fresh checkpoint, an empty
-    ``LocalRelation``, or a checkpoint carried through, and the RDDs of
-    the carried ones stay. Frames the caller passed in are never in
-    ``owned``. Returns the new feed and its ``owned`` list."""
-    cut = feed.checkpoint()
-    rdds = {name: checkpoint_rdd(df) for name, df in cut.items()}
-    held = {rdd.id() for rdd in rdds.values() if rdd is not None}
-    keep, done = [], []
-    for df in owned:
-        rdd = checkpoint_rdd(df)
-        (keep if rdd is not None and rdd.id() in held else done).append(df)
-    free_local_checkpoint(*done)
-    made = [cut[name] for name, rdd in rdds.items()
-            if rdd is not None and cut[name] is not feed[name]]
-    return cut, keep + made

@@ -16,6 +16,7 @@ from typing import Protocol, runtime_checkable
 from pyspark.sql import SparkSession
 
 from .feed import FeedDataset
+from .tools.checkpoints import Checkpoints
 
 
 @dataclass
@@ -35,6 +36,8 @@ class TaskRuntime:
     spark: SparkSession
     resources: dict = field(default_factory=dict)
     options: PipelineOptions = field(default_factory=PipelineOptions)
+    #: records the task's lazy cuts; a pipeline run passes its own scope
+    checkpoints: Checkpoints = field(default_factory=Checkpoints)
 
 
 @runtime_checkable

@@ -15,6 +15,9 @@ refusal and failure alike — except those ``cps.keep(frame)`` hands to
 the caller, who may free them with :func:`free_local_checkpoint`. The
 dedup kernel, the streaming sinks, the Lloyd loops, label propagation
 and ``maintenance`` scopes (``m.checkpoint``) all checkpoint this way.
+So does the GTFS path: a ``Pipeline.run`` scope records its tasks'
+cuts (``runtime.checkpoints``) and barriers, and ``cps.release`` frees
+those its feed no longer reads (:func:`read_rdds`).
 
 A local checkpoint has its lineage truncated, so a use after free
 raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing:
@@ -37,15 +40,35 @@ def checkpoint_rdd(df, selected: bool = False):
     except, with ``selected``, a ``Project`` of plain columns: such a
     frame reads nothing but the leaf's blocks, so it owns them."""
     plan = df._jdf.queryExecution().analyzed()
-    if selected and plan.getClass().getSimpleName() == "Project":
+    if selected and plan.nodeName() == "Project":
         cols = plan.projectList()
-        if all(cols.apply(i).getClass().getSimpleName()
-               == "AttributeReference" for i in range(cols.size())):
+        if all(cols.apply(i).nodeName() == "AttributeReference"
+               for i in range(cols.size())):
             plan = plan.child()
-    if plan.getClass().getSimpleName() != "LogicalRDD":
+    if plan.nodeName() != "LogicalRDD":
         return None
     rdd = plan.rdd()
     return rdd if rdd.getStorageLevel().isValid() else None
+
+
+def read_rdds(frames) -> dict:
+    """``{id: RDD}`` of the checkpoints ``frames`` read: the persisted
+    ``LogicalRDD`` leaves of their analyzed plans."""
+    out = {}
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        node = plan.nodeName()
+        if node == "LocalRelation":  # an absent table reads nothing
+            continue
+        leaves = [plan]
+        if node != "LogicalRDD":
+            seq = plan.collectLeaves()
+            leaves = [leaf for leaf in map(seq.apply, range(seq.size()))
+                      if leaf.nodeName() == "LogicalRDD"]
+        for rdd in (leaf.rdd() for leaf in leaves):
+            if rdd.getStorageLevel().isValid():
+                out[rdd.id()] = rdd
+    return out
 
 
 class Checkpoints:
@@ -69,6 +92,21 @@ class Checkpoints:
         if rdd is not None:
             self._kept.add(rdd.id())
 
+    def release(self, frames=(), hand_over: bool = False) -> None:
+        """Free each checkpoint of this scope that ``frames`` do not read
+        and :meth:`keep` did not keep; the read ones stay or, with
+        ``hand_over``, go to the caller. While one they read is a lazy cut no
+        job has materialized, nothing is freed: it may read the rest."""
+        read = read_rdds(frames)
+        made = [(df, rdd, rdd.id()) for df in self._made
+                if (rdd := checkpoint_rdd(df, selected=True)) is not None]
+        if all(rdd.isCheckpointed() for _, rdd, i in made if i in read):
+            for _, rdd, i in made:
+                if i not in read and i not in self._kept:
+                    rdd.unpersist(False)
+            made = [m for m in made if m[2] in read]
+        self._made = [] if hand_over else [df for df, _, _ in made]
+
 
 @contextmanager
 def checkpoints():
@@ -79,13 +117,16 @@ def checkpoints():
     try:
         yield cps
     finally:
-        for df in cps._made:
-            try:
-                rdd = checkpoint_rdd(df, selected=True)
-                if rdd is not None and rdd.id() not in cps._kept:
-                    rdd.unpersist(False)
-            except Exception:  # noqa: BLE001 — cleanup must never fail a job
-                pass
+        try:
+            cps.release()
+        except Exception:  # noqa: BLE001 — cleanup must never fail a job
+            pass
+
+
+def free_read(frames) -> None:
+    """Unpersist every checkpoint ``frames`` read (for their owner)."""
+    for rdd in read_rdds(frames).values():
+        rdd.unpersist(False)
 
 
 def free_local_checkpoint(*dfs) -> None:

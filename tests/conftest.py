@@ -73,7 +73,7 @@ def feed(spark, gtfs_dir):
 _SLOW_TESTS = {
     "test_merge_geo_skew_at_generator_scale",
     "test_continuous_corpus_example_end_to_end",
-    "test_merge_lineage_cut_modes_identical",
+    "test_multi_file_pins_only_what_its_feed_reads",
     "test_daily_ingest_retrain_trigger",
     "test_lifecycle_recall_floors",
     "test_multi_file_parallel_intermediates",

@@ -159,9 +159,10 @@ def test_failed_vector_ingest_write_pins_nothing(spark, tmp_path,
     assert _persistent_ids(spark) <= before
 
 
-def _direct_calls(tree: ast.AST) -> "list[tuple[int, str]]":
+def _direct_calls(tree: ast.AST, lazy_too: bool) -> "list[tuple[int, str]]":
     """(line, call) of each ``free_local_checkpoint(...)`` call and each
-    ``.localCheckpoint(...)`` call that asks for an eager checkpoint."""
+    ``.localCheckpoint(...)`` call that asks for an eager checkpoint (or,
+    with ``lazy_too``, any ``.localCheckpoint(...)`` call)."""
     out = []
     for node in ast.walk(tree):
         if not isinstance(node, ast.Call):
@@ -174,27 +175,34 @@ def _direct_calls(tree: ast.AST) -> "list[tuple[int, str]]":
         elif name == "localCheckpoint" and isinstance(f, ast.Attribute):
             eager = [k.value for k in node.keywords if k.arg == "eager"]
             eager += node.args[:1]
-            if not eager or not (isinstance(eager[0], ast.Constant)
-                                 and eager[0].value is False):
+            if lazy_too or not eager or not (
+                    isinstance(eager[0], ast.Constant)
+                    and eager[0].value is False):
                 out.append((node.lineno, name))
     return out
 
 
-@pytest.mark.parametrize("package", ["llm", "streaming"])
-def test_no_hand_paired_checkpoints(package):
-    """Engine code under ``llm/`` and ``streaming/`` takes its transient
-    checkpoints through a ``checkpoints()`` scope (directly or as a
-    ``maintenance`` scope's ``m.checkpoint``): it never calls
+@pytest.mark.parametrize("target", [
+    "llm", "streaming", "operators", "pipeline.py", "feed.py",
+    "multi_file.py",
+])
+def test_no_hand_paired_checkpoints(target):
+    """Engine code takes its checkpoints through a ``checkpoints()``
+    scope (directly, as a ``maintenance`` scope's ``m.checkpoint``, or
+    as a pipeline run's ``runtime.checkpoints``): it never calls
     ``free_local_checkpoint`` or makes an eager ``localCheckpoint``
-    itself."""
-    root = os.path.join(os.path.dirname(impuls_spark.__file__), package)
+    itself. The GTFS operators, the pipeline, the feed barrier and
+    MultiFile make no ``localCheckpoint`` call at all, lazy or eager."""
+    path = os.path.join(os.path.dirname(impuls_spark.__file__), target)
+    paths = [path] if target.endswith(".py") else [
+        os.path.join(dirpath, name)
+        for dirpath, _, files in os.walk(path)
+        for name in sorted(files) if name.endswith(".py")
+    ]
     found = []
-    for dirpath, _, files in os.walk(root):
-        for name in sorted(files):
-            if name.endswith(".py"):
-                path = os.path.join(dirpath, name)
-                with open(path, encoding="utf-8") as fh:
-                    tree = ast.parse(fh.read(), path)
-                found += [(os.path.relpath(path, root), *c)
-                          for c in _direct_calls(tree)]
+    for p in paths:
+        with open(p, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), p)
+        found += [(os.path.relpath(p, path), *c) for c in _direct_calls(
+            tree, lazy_too=target not in ("llm", "streaming"))]
     assert not found, found

@@ -134,41 +134,6 @@ def test_merge_two_feeds(spark, feed, rt, tmp_path_factory):
     assert fi["version"] == "2026-06-01/2027-06-01"
 
 
-def test_merge_lineage_cut_modes_identical(spark, feed, rt,
-                                           tmp_path_factory, tmp_path):
-    """ADVICE r8: localCheckpoint blocks are unrecoverable on executor
-    loss, so the lineage cut is configurable — 'persist' (recomputable
-    cache) and 'checkpoint' (reliable, shared-fs) for preemptible
-    clusters, 'none' for plan debugging. Every mode must produce
-    bit-identical merges; only the materialization strategy differs."""
-    feed2 = _second_feed(spark, tmp_path_factory)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-
-    def snap(merged):
-        stops = sorted(
-            (r["stop_id"], r["name"]) for r in merged["stops"].collect()
-        )
-        st = sorted(
-            r["stop_id"] for r in merged["stop_times"].collect()
-        )
-        return stops, st
-
-    base = None
-    for mode in Merge.LINEAGE_CUTS:
-        merged = Merge(
-            [("v1", feed), ("v2", feed2)], lineage_cut=mode
-        ).transform(feed, rt)
-        got = snap(merged)
-        if base is None:
-            base = got
-        else:
-            assert got == base, f"lineage_cut={mode} diverged"
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="lineage_cut"):
-        Merge([("v1", feed)], lineage_cut="eager")
-
-
 def test_merge_route_id_conflict_suffix(spark, feed, rt, tmp_path_factory):
     """Same route_id, different content (color changed) -> both kept,
     the later feed's route gets a :N suffix; its trips follow the
