@@ -10,7 +10,7 @@ unchanged (the incremental-run signal).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 from typing import TypeVar
 
 T = TypeVar("T")

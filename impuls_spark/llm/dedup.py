@@ -1826,34 +1826,12 @@ class DedupIndex:
                 "retained corpus (DedupIndex.build(corpus, path, "
                 "track_ids=True)) to make future takedowns cheap"
             )
-        from ..streaming.compact import (
-            _rid_frame,
-            fold_artifacts,
-            maintenance,
-        )
+        from ..streaming.compact import fold_out_ids, maintenance
 
         h_schema, h_keys, b_schema, b_keys = self._artifact_layout()
         with maintenance(self.spark, self.path, stale_after_sec,
                          force) as m:
-            rid = _rid_frame(self.spark, ids)
-            if isinstance(ids, DataFrame):
-                # both folds broadcast this frame; without a cut each
-                # broadcast re-evaluates the caller's subtree (for a
-                # DataFrame of ids that can be an arbitrary upstream
-                # plan — VERDICT r14 next-round #1). One eager
-                # batch-sized checkpoint makes the second evaluation a
-                # block read.
-                rid = m.checkpoint(rid)
-            # batch-sized in every real takedown; broadcast keeps the
-            # anti-join map-side over the index scan
-            rid = F.broadcast(rid)
-
-            def drop_removed(df: DataFrame) -> DataFrame:
-                return df.join(
-                    rid, df["__id"] == rid["__rid"], "left_anti"
-                )
-
-            return fold_artifacts(m, {
-                "hashes": (h_schema, h_keys, drop_removed, ["__h"]),
-                "bands": (b_schema, b_keys, drop_removed, ["key"]),
+            return fold_out_ids(m, ids, {
+                "hashes": (h_schema, h_keys, "__id", ["__h"]),
+                "bands": (b_schema, b_keys, "__id", ["key"]),
             })

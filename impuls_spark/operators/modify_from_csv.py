@@ -14,9 +14,8 @@ the feed).
 from __future__ import annotations
 
 import logging
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import DataError

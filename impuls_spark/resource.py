@@ -18,7 +18,6 @@ path-agnostic).
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import shutil

@@ -27,7 +27,7 @@ Type conventions (SURVEY.md §1.3):
 from __future__ import annotations
 
 import datetime
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import IntEnum
 
 from pyspark.sql import types as T

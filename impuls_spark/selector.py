@@ -6,7 +6,7 @@ compiles agency/type/id filters into a WHERE clause).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -191,16 +191,16 @@ def write_training_shards(
     within each file are ordered by the full digest (kept as the
     ``shuffle_key`` column), so document order in the training stream is
     decorrelated from crawl/ingest order without any global sort: one
-    hash projection, one repartition keyed on (shard, file-salt), and a
-    task-local sort. Re-running the writer on the same corpus produces
-    byte-identical shard membership and order on any cluster size —
-    and an APPENDED batch lands interleaved by the same law, never
-    "new data at the end of the epoch".
+    hash projection written through :func:`write_corpus`, partitioned
+    by ``shard`` and sorted by ``shuffle_key``. Re-running the writer on
+    the same corpus produces byte-identical shard membership and order
+    on any cluster size — and an APPENDED batch lands interleaved by
+    the same law, never "new data at the end of the epoch".
 
-    ``files_per_shard`` spreads one shard over several tasks/files for
-    write parallelism; a loader that needs the shard's total order
-    merges its files by ``shuffle_key`` (each file is a sorted run —
-    the salt rides only the repartition, as in :func:`write_corpus`).
+    ``files_per_shard`` is :func:`write_corpus`'s ``target_shards``: it
+    spreads one shard over several files for write parallelism, each a
+    sorted run that a loader needing the shard's total order merges by
+    ``shuffle_key``.
     Pair with :func:`impuls_spark.llm.sampling.shard_manifest` for the
     balance/completeness bookkeeping.
     """
@@ -229,15 +229,12 @@ def write_training_shards(
             "shard laws — pass the original parameters"
         )
     h = F.md5(F.concat_ws(":", F.lit(salt), F.col(key_col).cast("string")))
-    file_salt = F.pmod(F.crc32(F.col("shuffle_key")),
-                       F.lit(max(files_per_shard, 1)))
-    out = (
+    write_corpus(
         df.withColumn("shuffle_key", h)
-        .withColumn("shard", F.substring(h, 1, _SHARD_DIGITS[n_shards]))
-        .repartition(F.col("shard"), file_salt)
-        .sortWithinPartitions("shard", "shuffle_key")
+        .withColumn("shard", F.substring(h, 1, _SHARD_DIGITS[n_shards])),
+        path, partition_by=("shard",), sort_by=("shuffle_key",),
+        target_shards=files_per_shard, mode=mode,
     )
-    out.write.mode(mode).partitionBy("shard").parquet(path)
     # overwrite truncates the tree (manifest included) — always re-pin;
     # append pins only a pre-manifest layout's first post-upgrade write
     if mode != "append" or existing is None:
@@ -386,17 +383,16 @@ def remove_from_shards(
     k documents costs at most k shard rewrites of ~corpus/n_shards
     each, not a corpus pass.
 
-    Rewrite discipline: survivors are re-laid with the writer's own
-    law (same file-salt over the stored ``shuffle_key``, same
-    task-local sort), written via dynamic partition overwrite (staged,
-    committed per directory); a shard whose every row is removed gets
-    its directory deleted explicitly (dynamic overwrite only replaces
-    partitions it writes). The whole run holds a heartbeated
-    ``_COMPACTING`` marker at the layout root —
-    :func:`read_training_shards` fails fast during the run and after a
-    crash, and a ``force=True`` re-run converges (the anti-join is
-    idempotent; already-rewritten shards simply rewrite to the same
-    bytes).
+    Rewrite discipline: survivors are written through
+    :func:`write_corpus` with the layout's own ``files_per_shard``, by
+    dynamic partition overwrite (staged, committed per directory); a
+    shard whose every row is removed gets its directory deleted
+    explicitly (dynamic overwrite only replaces partitions it writes).
+    The whole run holds a heartbeated ``_COMPACTING`` marker at the
+    layout root — :func:`read_training_shards` fails fast during the
+    run and after a crash, and a ``force=True`` re-run converges (the
+    anti-join is idempotent; already-rewritten shards simply rewrite to
+    the same bytes).
 
     ``ids`` is a list/tuple of document ids or a single-column
     DataFrame of them. The layout law (``key_col``/``salt``/
@@ -489,16 +485,11 @@ def remove_from_shards(
         rows_before = sum(n for n, _ in per_shard.values())
         rows_after = sum(n - r for n, r in per_shard.values())
         survivor_shards = {s for s, (n, r) in per_shard.items() if n > r}
-        keep = pruned.join(F.broadcast(rid), hit, "left_anti")
-        file_salt = F.pmod(F.crc32(F.col("shuffle_key")),
-                           F.lit(max(files_per_shard, 1)))
-        (
-            keep.repartition(F.col("shard"), file_salt)
-            .sortWithinPartitions("shard", "shuffle_key")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("shard")
-            .parquet(path)
+        write_corpus(
+            pruned.join(F.broadcast(rid), hit, "left_anti"), path,
+            partition_by=("shard",), sort_by=("shuffle_key",),
+            target_shards=files_per_shard,
+            mode="overwrite", dynamic_overwrite=True,
         )
         deleted = [s for s in affected if s not in survivor_shards]
         for s in deleted:

@@ -34,7 +34,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import schema as S
 from ..feed import FeedDataset
-from .gtfs_schema import GTFS_FILES, FILE_BY_NAME, GtfsFileSpec
+from .gtfs_schema import GTFS_FILES, GtfsFileSpec
 
 
 class MissingGtfsFile(ValueError):

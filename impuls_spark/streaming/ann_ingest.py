@@ -415,29 +415,12 @@ def takedown_stream_vectors(
     legitimately re-ingestable — the takedown semantics).
 
     Returns ``{absorbed, removed, epoch_watermark}``."""
-    from .compact import last_committed_epoch, maintenance
+    from .compact import check_still_stopped, maintenance, stopped_watermark
 
-    watermark = None
-    if checkpoint is not None:
-        watermark = last_committed_epoch(checkpoint)
-        in_flight = [
-            e for e in stream_epochs(spark, index_path)
-            if watermark is None or e > watermark
-        ]
-        if in_flight:
-            raise RuntimeError(
-                f"stream epoch(s) {sorted(in_flight)} are landed above "
-                f"the checkpoint's commit watermark ({watermark}) — the "
-                "vector ingest query appears ACTIVE (or crashed "
-                "mid-epoch and will replay on restart); stop it before "
-                "takedown"
-            )
-    elif not assume_stopped:
-        raise ValueError(
-            "pass checkpoint= so the commit watermark can prove the "
-            "ingest query is stopped, or assert assume_stopped=True "
-            "explicitly"
-        )
+    watermark = stopped_watermark(
+        checkpoint, assume_stopped,
+        lambda: stream_epochs(spark, index_path),
+    )
 
     from ..llm.similarity import AnnIndex
 
@@ -450,30 +433,10 @@ def takedown_stream_vectors(
             spark, index_path, ids, force=force,
             stale_after_sec=stale_after_sec, _lease=m,
         )
-        # -- closing verification, still under the marker (ADVICE r12):
-        # a batch already mid-write before the lease was taken can land
-        # an epoch without moving the watermark until its commit file
-        # is written — re-check the sidecars themselves, not just the
-        # watermark
-        leftover = stream_epochs(spark, index_path)
-        if leftover:
-            raise RuntimeError(
-                f"stream epoch(s) {sorted(leftover)} landed during "
-                "takedown (an ingest batch was mid-write when it "
-                "started) and may carry re-ingested copies of the "
-                "removed vectors — stop the query and re-run with "
-                "force=True"
-            )
-        if checkpoint is not None:
-            now = last_committed_epoch(checkpoint)
-            if now != watermark:
-                raise RuntimeError(
-                    f"the ingest checkpoint's commit watermark moved "
-                    f"during takedown ({watermark} -> {now}): batches "
-                    "landed concurrently and may carry the removed "
-                    "vectors — stop the query and re-run with "
-                    "force=True"
-                )
+        # closing verification, still under the marker (ADVICE r12)
+        check_still_stopped(
+            checkpoint, watermark, stream_epochs(spark, index_path)
+        )
     return {
         "absorbed": absorbed,
         "removed": removed,

@@ -49,6 +49,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..tools.checkpoints import checkpoints
 from ..tools.concurrency import parallel_writes
@@ -419,6 +420,58 @@ def last_committed_epoch(checkpoint: str) -> "int | None":
             e = int(name)
             best = e if best is None or e > best else best
     return best
+
+
+def stopped_watermark(checkpoint: "str | None", assume_stopped: bool,
+                      epochs) -> "int | None":
+    """Opening check of a streaming takedown: prove the ingest query
+    is stopped and return its commit watermark. With ``checkpoint``, an
+    epoch from ``epochs()`` (the caller's landed epoch ids) above the
+    watermark means an in-flight or crashed-mid-epoch batch and raises;
+    without one the caller must assert ``assume_stopped=True``."""
+    if checkpoint is None:
+        if not assume_stopped:
+            raise ValueError(
+                "pass checkpoint= so the commit watermark can prove the "
+                "ingest query is stopped, or assert assume_stopped=True "
+                "explicitly"
+            )
+        return None
+    watermark = last_committed_epoch(checkpoint)
+    in_flight = [e for e in epochs() if watermark is None or e > watermark]
+    if in_flight:
+        raise RuntimeError(
+            f"epoch(s) {sorted(in_flight)} are landed above the "
+            f"checkpoint's commit watermark ({watermark}) — the ingest "
+            "query appears ACTIVE (or crashed mid-epoch and will replay "
+            "on restart); stop it before takedown"
+        )
+    return watermark
+
+
+def check_still_stopped(checkpoint: "str | None",
+                        watermark: "int | None", landed) -> None:
+    """Closing check of a streaming takedown, run under its marker:
+    ``landed`` holds the epochs that appeared during the run. A batch
+    already mid-write when the marker was taken lands its epoch before
+    its commit file moves the watermark, so the epochs are checked
+    first, then (with ``checkpoint``) the watermark itself."""
+    if landed:
+        raise RuntimeError(
+            f"epoch(s) {sorted(landed)} landed during takedown (an "
+            "ingest batch was mid-write when it started): the takedown "
+            "does not cover them and they may carry the removed rows — "
+            "stop the query and re-run with force=True"
+        )
+    if checkpoint is not None:
+        now = last_committed_epoch(checkpoint)
+        if now != watermark:
+            raise RuntimeError(
+                f"the ingest checkpoint's commit watermark moved during "
+                f"takedown ({watermark} -> {now}): batches landed "
+                "concurrently and the takedown may not cover them — "
+                "stop the query and re-run with force=True"
+            )
 
 
 def _first_arrival(df: DataFrame, key_cols: "Sequence[str]") -> DataFrame:
@@ -964,3 +1017,34 @@ def fold_artifacts(m: _Scope, specs: dict) -> "dict[str, dict[str, int]]":
         for name, spec in specs.items()
     ])
     return stats
+
+
+def fold_out_ids(m: _Scope, ids, specs: dict) -> "dict[str, dict[str, int]]":
+    """Anti-join the takedown ``ids`` out of the artifact dirs of one
+    maintained root through :func:`fold_artifacts` — the fold of
+    ``DedupIndex.remove`` and ``AnnIndex.remove``. ``specs`` maps
+    ``name -> (ddl, keys, id_col, cluster_by)``; ``id_col`` is matched
+    against the ids cast to its type in ``ddl``."""
+    rid = _rid_frame(m.spark, ids)
+    if isinstance(ids, DataFrame):
+        # every fold broadcasts this frame; one eager batch-sized
+        # checkpoint stops each broadcast re-evaluating the caller's
+        # arbitrary upstream plan
+        rid = m.checkpoint(rid)
+    folds, by_type = {}, {}
+    for name, (ddl, keys, id_col, cluster_by) in specs.items():
+        id_type = StructType.fromDDL(ddl)[id_col].dataType.simpleString()
+        if id_type not in by_type:
+            # batch-sized in every real takedown; broadcast keeps the
+            # anti-join map-side over the artifact scan. One frame per
+            # id type: building a frame costs a driver-side analysis.
+            by_type[id_type] = F.broadcast(
+                rid.select(F.col("__rid").cast(id_type).alias("__rid"))
+            )
+
+        def drop_removed(df: DataFrame, _k=by_type[id_type],
+                         _c=id_col) -> DataFrame:
+            return df.join(_k, df[_c] == _k["__rid"], "left_anti")
+
+        folds[name] = (ddl, keys, drop_removed, cluster_by)
+    return fold_artifacts(m, folds)

@@ -294,31 +294,15 @@ def takedown_stream_corpus(
     from .compact import (
         _epoch_dirs,
         _takedown_partitions,
-        last_committed_epoch,
+        check_still_stopped,
         maintenance,
+        stopped_watermark,
     )
 
     # -- 1. stopped-query verification --------------------------------
-    watermark = None
-    if checkpoint is not None:
-        watermark = last_committed_epoch(checkpoint)
-        in_flight = [
-            e for e in _epoch_dirs(corpus_path)
-            if watermark is None or e > watermark
-        ]
-        if in_flight:
-            raise RuntimeError(
-                f"epoch(s) {sorted(in_flight)} are landed above the "
-                f"checkpoint's commit watermark ({watermark}) — the "
-                "ingest query appears ACTIVE (or crashed mid-epoch and "
-                "will replay on restart); stop it before takedown"
-            )
-    elif not assume_stopped:
-        raise ValueError(
-            "pass checkpoint= so the commit watermark can prove the "
-            "ingest query is stopped, or assert assume_stopped=True "
-            "explicitly"
-        )
+    watermark = stopped_watermark(
+        checkpoint, assume_stopped, lambda: _epoch_dirs(corpus_path)
+    )
 
     # -- banding parameters: manifest-authoritative ---------------------
     meta = manifest_params(
@@ -365,28 +349,10 @@ def takedown_stream_corpus(
             shingle_n=meta["shingle_n"], track_ids=True,
         )
         # -- 1b. closing re-verification, still under both markers ----
-        # directories first: an epoch landed by a batch that was
-        # mid-write when the markers were taken escaped the rewrite and
-        # the rebuilt index doesn't cover it — the watermark alone
-        # misses it until the commit file lands (ADVICE r12 twin)
-        new_epochs = set(_epoch_dirs(corpus_path)) - landed_before
-        if new_epochs:
-            raise RuntimeError(
-                f"epoch(s) {sorted(new_epochs)} landed during takedown "
-                "(an ingest batch was mid-write when it started): the "
-                "filtered corpus and rebuilt index do not cover them — "
-                "stop the query and re-run with force=True"
-            )
-        if checkpoint is not None:
-            now = last_committed_epoch(checkpoint)
-            if now != watermark:
-                raise RuntimeError(
-                    f"the ingest checkpoint's commit watermark moved "
-                    f"during takedown ({watermark} -> {now}): batches "
-                    "landed concurrently and the rebuilt index may not "
-                    "cover them — stop the query and re-run with "
-                    "force=True"
-                )
+        check_still_stopped(
+            checkpoint, watermark,
+            set(_epoch_dirs(corpus_path)) - landed_before,
+        )
     return {
         "corpus": stats,
         "index": {"rebuilt": True, "track_ids": True},

@@ -26,7 +26,6 @@ class PipelineOptions:
     force_run: bool = False
     from_cache: bool = False
     workspace_directory: str = "_impuls_workspace"
-    save_db_in_workspace: bool = False
 
 
 @dataclass

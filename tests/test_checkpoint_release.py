@@ -322,10 +322,11 @@ def test_rid_frame_list_path_is_jvm_side(spark):
     assert sorted(r["__rid"] for r in df_in.collect()) == ["0", "1", "2"]
 
 
-def test_remove_stats_ride_the_fold_job(spark, tmp_path):
+def test_remove_stats_ride_the_fold_job(spark, tmp_path, spark_jobs):
     """DedupIndex.remove derives rows_before/rows_after from observed
     metrics on the fold itself (no extra count() scans) — values must
-    equal what independent counts say."""
+    equal what independent counts say — and runs a fixed number of
+    jobs: 8 for a list of ids, 10 for a DataFrame of them."""
     from impuls_spark.llm.dedup import DedupIndex
 
     path = str(tmp_path / "idx")
@@ -333,7 +334,9 @@ def test_remove_stats_ride_the_fold_job(spark, tmp_path):
     idx = DedupIndex.load(spark, path)
     h_before = spark.read.parquet(f"{path}/hashes").count()
     b_before = spark.read.parquet(f"{path}/bands").count()
+    jobs = spark_jobs()
     stats = idx.remove([3, 7])
+    assert spark_jobs() - jobs == 8
     assert stats["hashes"]["rows_before"] == h_before
     assert stats["bands"]["rows_before"] == b_before
     assert stats["hashes"]["rows_after"] == spark.read.parquet(
@@ -341,6 +344,11 @@ def test_remove_stats_ride_the_fold_job(spark, tmp_path):
     assert stats["bands"]["rows_after"] == spark.read.parquet(
         f"{path}/bands").count()
     assert stats["hashes"]["rows_before"] - stats["hashes"]["rows_after"] == 2
+
+    jobs = spark_jobs()
+    stats = idx.remove(spark.range(10, 13).select(F.col("id").alias("doc_id")))
+    assert spark_jobs() - jobs == 10
+    assert stats["hashes"]["rows_before"] - stats["hashes"]["rows_after"] == 3
 
 
 def _ids(spark):

@@ -206,3 +206,34 @@ def test_no_hand_paired_checkpoints(target):
         found += [(os.path.relpath(p, path), *c) for c in _direct_calls(
             tree, lazy_too=target not in ("llm", "streaming"))]
     assert not found, found
+
+
+def test_no_unused_module_imports():
+    """Every name a package module imports at module level occurs as a
+    whole word somewhere else in that module (code, a quoted
+    annotation or a docstring). ``__init__.py`` files re-export their
+    imports and ``__future__`` imports bind nothing, so both are
+    skipped."""
+    import re
+
+    root = os.path.dirname(impuls_spark.__file__)
+    unused = []
+    for dirpath, _, files in os.walk(root):
+        for name in sorted(files):
+            if not name.endswith(".py") or name == "__init__.py":
+                continue
+            p = os.path.join(dirpath, name)
+            with open(p, encoding="utf-8") as fh:
+                src = fh.read()
+            lines = src.splitlines()
+            for node in ast.parse(src, p).body:
+                if not isinstance(node, (ast.Import, ast.ImportFrom)) or (
+                        getattr(node, "module", None) == "__future__"):
+                    continue
+                rest = "\n".join(lines[:node.lineno - 1]
+                                 + lines[node.end_lineno:])
+                for alias in node.names:
+                    bound = alias.asname or alias.name.split(".")[0]
+                    if not re.search(rf"\b{re.escape(bound)}\b", rest):
+                        unused.append((os.path.relpath(p, root), bound))
+    assert not unused, unused

@@ -385,8 +385,12 @@ def test_remove_from_shards_equals_rebuild_over_survivors(spark, tmp_path):
     the post-takedown layout holds exactly the rows a fresh
     write_training_shards over the survivors would produce — same
     (shard, shuffle_key, doc) triples. The takedown is a physical
-    identity with the rebuild, at affected-shards cost."""
+    identity with the rebuild, at affected-shards cost. With several
+    files per shard the rewrite keeps the writer's law: at most
+    ``files_per_shard`` files per shard, each a sorted run."""
     import random
+
+    import pyarrow.parquet as pq
 
     from impuls_spark.sources.corpus import (
         remove_from_shards,
@@ -395,19 +399,35 @@ def test_remove_from_shards_equals_rebuild_over_survivors(spark, tmp_path):
 
     rows = [(i, f"document body {i}") for i in range(150)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for seed in (7, 23):
-        rng = random.Random(seed)
-        gone = sorted(rng.sample(range(150), rng.randint(3, 40)))
-        out = str(tmp_path / f"takedown{seed}")
-        ref = str(tmp_path / f"rebuild{seed}")
-        write_training_shards(df, out, n_shards=16)
-        remove_from_shards(spark, out, gone)
-        write_training_shards(
-            df.filter(~F.col("doc_id").isin(gone)), ref, n_shards=16
-        )
-        got = sorted(map(tuple, spark.read.parquet(out).collect()))
-        want = sorted(map(tuple, spark.read.parquet(ref).collect()))
-        assert got == want, f"seed {seed}: takedown != rebuild"
+    # without AQE's coalescing a shard's file salts spread over the
+    # shuffle's tasks, so files_per_shard=3 writes multi-file shards
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        for seed, fps in ((7, 1), (23, 1), (7, 3)):
+            rng = random.Random(seed)
+            gone = sorted(rng.sample(range(150), rng.randint(3, 40)))
+            out = str(tmp_path / f"takedown{seed}_{fps}")
+            ref = str(tmp_path / f"rebuild{seed}_{fps}")
+            write_training_shards(df, out, n_shards=16, files_per_shard=fps)
+            remove_from_shards(spark, out, gone)
+            write_training_shards(
+                df.filter(~F.col("doc_id").isin(gone)), ref, n_shards=16,
+                files_per_shard=fps,
+            )
+            got = sorted(map(tuple, spark.read.parquet(out).collect()))
+            want = sorted(map(tuple, spark.read.parquet(ref).collect()))
+            assert got == want, f"seed {seed}: takedown != rebuild"
+            files = {d: glob.glob(d + "/*.parquet")
+                     for d in glob.glob(out + "/shard=*")}
+            assert max(map(len, files.values())) == fps
+            for f in sum(files.values(), []):
+                keys = pq.read_table(f, columns=["shuffle_key"]).column(
+                    "shuffle_key").to_pylist()
+                assert keys == sorted(keys), f
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_remove_from_corpus_many_partitions_inset_path(spark, tmp_path):
